@@ -49,7 +49,7 @@ object PqStageProbe {
         val luts = operators.SimOps.pq8LutsLocal(spark, sfDir, cb)
         noop(operators.SimOps.pq8Encoded(spark, sfDir, cb)
           .select(col("vec_id"),
-            call_function("graft_pq_adc", typedlit(luts.head._2),
+            graft.functions.GraftFunctions.pqAdc(typedlit(luts.head._2),
               col("codes")).as("adc")))
       }),
       "join_lut_one_lookup" -> (() =>

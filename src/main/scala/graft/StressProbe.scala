@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, sqrt}
+
+import graft.functions.GraftFunctions.dotProduct
 
 /** One-off measurement main for the √n-cells scale claim, run against the
   * [[StressGen]] fixture with the brute-force reference from
@@ -91,9 +94,9 @@ object StressProbe {
     cDf.write.mode("overwrite").parquet(s"$dir/ann_index/centroids")
     aDf.write.mode("overwrite").parquet(s"$dir/ann_index/assigned")
     val q = Tables.embeddings(spark, dir)
-      .filter(org.apache.spark.sql.functions.col("vec_id") < 20)
-      .selectExpr("vec_id AS q_id", "embedding AS q_emb",
-        "sqrt(graft_dot(embedding, embedding)) AS q_norm")
+      .filter(col("vec_id") < 20)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        sqrt(dotProduct(col("embedding"), col("embedding"))).as("q_norm"))
     val (tServe, served) = topSets(graft.operators.SimOps.annSearch(spark, q,
       spark.read.parquet(s"$dir/ann_index/centroids"),
       spark.read.parquet(s"$dir/ann_index/assigned")))

@@ -1,15 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.GraftSqlShims.{column => c, expression => e}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration for the engine's native Catalyst expressions. Two paths:
+/** The engine's native Catalyst expressions, reachable two ways:
   *
-  *  - [[GraftFunctions.register]]: imperative, idempotent, called by any
-  *    operator that uses the functions (works on an already-built session);
-  *  - [[GraftExtensions]]: the `SparkSessionExtensions` route for
-  *    cluster-wide installation via
+  *  - as typed [[Column]] constructors ([[GraftFunctions.dotProduct]] and
+  *    siblings), which build the expression directly. Operators use only
+  *    these, so every query runs on a session nobody configured;
+  *  - as SQL names, for callers who write SQL or `call_function`. One
+  *    list of (name, expression class, builder) feeds two binders
+  *    that install the same set — the functions, the [[RewriteDotProduct]]
+  *    optimizer rule and the [[graft.plans.TopKPerGroupStrategy]] planner
+  *    strategy: [[GraftFunctions.register]] on an already-built session
+  *    (idempotent), and [[GraftExtensions]] at session build via
   *    `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object GraftFunctions {
@@ -25,31 +32,39 @@ object GraftFunctions {
     (pairs.map(_._1).toArray, pairs.map(_._2).toArray)
   }
 
-  private def dotInfo = new ExpressionInfo(
-    classOf[DotProduct].getName, "graft_dot")
-  private def dotBuilder(children: Seq[Expression]): Expression =
-    DotProduct(children(0), children(1))
+  /** [[DotProduct]] (fast path). */
+  def dotProduct(a: Column, b: Column): Column = c(DotProduct(e(a), e(b)))
 
-  private def minhashInfo = new ExpressionInfo(
-    classOf[MinHash].getName, "graft_minhash")
-  private def minhashBuilder(children: Seq[Expression]): Expression =
-    MinHash(children.head, minhashAs, minhashBs)
+  /** [[MinHashTokens]] under the fixed [[minhashAs]]/[[minhashBs]]. */
+  def minhashTokens(toks: Column): Column =
+    c(MinHashTokens(e(toks), minhashAs, minhashBs))
 
-  private def simhashInfo = new ExpressionInfo(
-    classOf[SimHash].getName, "graft_simhash")
+  def simHash(toks: Column, portable: Boolean = false): Column =
+    c(SimHash(e(toks), portable))
 
-  /** `graft_pq_encode(embedding, codebookLiteral)`: the codebook child
-    * must be FOLDABLE (a `typedlit` of the cb(m)(k)(i) nested array) —
-    * it is evaluated ONCE at resolution into [[PqEncode]]'s constructor
-    * constant, so the generated per-row loop indexes a flat JVM double[]
-    * instead of re-walking a plan literal.
+  def shingleSet(toks: Column): Column = c(ShingleSet(e(toks)))
+
+  def rollingFingerprint(toks: Column, portable: Boolean = false): Column =
+    c(RollingFingerprint(e(toks), portable))
+
+  def pqAdc(lut: Column, codes: Column): Column = c(PqAdc(e(lut), e(codes)))
+
+  /** [[PqEncode]] with the cb(m)(k)(i) codebook as its constructor
+    * constant. */
+  def pqEncode(embedding: Column, codebook: Seq[Seq[Seq[Double]]]): Column =
+    c(PqEncode(e(embedding), codebook.map(_.map(_.toArray).toArray).toArray))
+
+  /** The SQL form of [[pqEncode]]: the codebook child must be FOLDABLE (a
+    * `typedlit` of the cb(m)(k)(i) nested array) — it is evaluated ONCE
+    * at resolution into [[PqEncode]]'s constructor constant, so the
+    * generated per-row loop indexes a flat JVM double[] instead of
+    * re-walking a plan literal.
     */
   private[functions] def pqEncodeBuilder(
       children: Seq[Expression]): Expression = {
-    require(children.size == 2,
-      "graft_pq_encode takes (embedding, codebook)")
+    require(children.size == 2, "PqEncode takes (embedding, codebook)")
     require(children(1).foldable,
-      "graft_pq_encode codebook must be a foldable literal")
+      "PqEncode codebook must be a foldable literal")
     // validate the literal's TYPE before evaluating it — a mistyped
     // codebook (e.g. array<array<double>> or integer cells) would
     // otherwise surface as a raw ClassCastException out of getArray
@@ -59,7 +74,7 @@ object GraftFunctions {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType, _), _), _) => ()
       case t => throw new IllegalArgumentException(
-        "graft_pq_encode codebook must be array<array<array<double>>> " +
+        "PqEncode codebook must be array<array<array<double>>> " +
           s"(cb(m)(k)(i)), got ${t.catalogString}")
     }
     val outer = children(1).eval()
@@ -71,89 +86,51 @@ object GraftFunctions {
     PqEncode(children(0), cb)
   }
 
-  /** Idempotent per-session registration (overwrites any prior binding). */
+  /** Every SQL name, bound once; both binders read this list. */
+  private[graft] val sqlFunctions
+      : Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
+    Seq[(String, Class[_], FunctionBuilder)](
+      ("graft_dot", classOf[DotProduct], ch => DotProduct(ch(0), ch(1))),
+      ("graft_minhash", classOf[MinHash],
+        ch => MinHash(ch.head, minhashAs, minhashBs)),
+      ("graft_minhash_tokens", classOf[MinHashTokens],
+        ch => MinHashTokens(ch.head, minhashAs, minhashBs)),
+      ("graft_simhash", classOf[SimHash], ch => SimHash(ch.head)),
+      ("graft_simhash_portable", classOf[SimHash],
+        ch => SimHash(ch.head, portable = true)),
+      ("graft_shingles", classOf[ShingleSet], ch => ShingleSet(ch.head)),
+      ("graft_fingerprint", classOf[RollingFingerprint],
+        ch => RollingFingerprint(ch.head)),
+      ("graft_fingerprint_portable", classOf[RollingFingerprint],
+        ch => RollingFingerprint(ch.head, portable = true)),
+      ("graft_pq_adc", classOf[PqAdc], ch => PqAdc(ch(0), ch(1))),
+      ("graft_pq_encode", classOf[PqEncode], pqEncodeBuilder)
+    ).map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        builder)
+    }
+
+  /** Binds the SQL names, [[RewriteDotProduct]] and the top-k strategy on
+    * an already-built session. Idempotent (overwrites any prior binding).
+    */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(FunctionIdentifier("graft_dot"), dotInfo,
-      dotBuilder _)
-    reg.registerFunction(FunctionIdentifier("graft_minhash"), minhashInfo,
-      minhashBuilder _)
-    reg.registerFunction(FunctionIdentifier("graft_simhash"), simhashInfo,
-      (children: Seq[Expression]) => SimHash(children.head))
-    reg.registerFunction(FunctionIdentifier("graft_simhash_portable"),
-      new ExpressionInfo(classOf[SimHash].getName, "graft_simhash_portable"),
-      (children: Seq[Expression]) => SimHash(children.head, portable = true))
-    reg.registerFunction(FunctionIdentifier("graft_minhash_tokens"),
-      new ExpressionInfo(classOf[MinHashTokens].getName,
-        "graft_minhash_tokens"),
-      (children: Seq[Expression]) =>
-        MinHashTokens(children.head, minhashAs, minhashBs))
-    reg.registerFunction(FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingles"),
-      (children: Seq[Expression]) => ShingleSet(children.head))
-    reg.registerFunction(FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName,
-        "graft_fingerprint"),
-      (children: Seq[Expression]) => RollingFingerprint(children.head))
-    reg.registerFunction(FunctionIdentifier("graft_fingerprint_portable"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName,
-        "graft_fingerprint_portable"),
-      (children: Seq[Expression]) =>
-        RollingFingerprint(children.head, portable = true))
-    reg.registerFunction(FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdc].getName, "graft_pq_adc"),
-      (children: Seq[Expression]) => PqAdc(children(0), children(1)))
-    reg.registerFunction(FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      pqEncodeBuilder _)
+    sqlFunctions.foreach { case (id, info, builder) =>
+      reg.registerFunction(id, info, builder)
+    }
     // optimizer rule on a live session (extensions only bind at build time)
     if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteDotProduct
+    graft.plans.TopKPerGroup.install(spark)
   }
 }
 
-/** `spark.sql.extensions` entry point installing the native functions. */
+/** `spark.sql.extensions` entry point: the same set as
+  * [[GraftFunctions.register]], bound at session build. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHash].getName, "graft_minhash"),
-      (children: Seq[Expression]) =>
-        MinHash(children.head, GraftFunctions.minhashAs,
-          GraftFunctions.minhashBs)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHash(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash_portable"),
-      new ExpressionInfo(classOf[SimHash].getName, "graft_simhash_portable"),
-      (children: Seq[Expression]) => SimHash(children.head, portable = true)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_tokens"),
-      new ExpressionInfo(classOf[MinHashTokens].getName,
-        "graft_minhash_tokens"),
-      (children: Seq[Expression]) =>
-        MinHashTokens(children.head, GraftFunctions.minhashAs,
-          GraftFunctions.minhashBs)))
-    ext.injectFunction((FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "graft_shingles"),
-      (children: Seq[Expression]) => ShingleSet(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName,
-        "graft_fingerprint"),
-      (children: Seq[Expression]) => RollingFingerprint(children.head)))
-    ext.injectFunction((FunctionIdentifier("graft_fingerprint_portable"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName,
-        "graft_fingerprint_portable"),
-      (children: Seq[Expression]) =>
-        RollingFingerprint(children.head, portable = true)))
-    ext.injectFunction((FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdc].getName, "graft_pq_adc"),
-      (children: Seq[Expression]) => PqAdc(children(0), children(1))))
-    ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      GraftFunctions.pqEncodeBuilder _))
+    GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RewriteDotProduct)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
   }

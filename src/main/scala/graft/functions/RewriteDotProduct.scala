@@ -15,8 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   * with nulls and `acc + null` poisons the fold). Users writing the
   * idiomatic public-API form get the fused loop automatically.
   *
-  * Installed via `GraftExtensions` (`spark.sql.extensions`) or
-  * `spark.experimental.extraOptimizations` (GraftFunctions.register).
+  * Only user-written SQL and Column code needs it: no operator writes the
+  * pattern (operators call `GraftFunctions.dotProduct` directly). Both SQL
+  * binders install it with the native functions — `GraftExtensions` at
+  * session build, `GraftFunctions.register` on a live session through
+  * `spark.experimental.extraOptimizations`.
   */
 object RewriteDotProduct extends Rule[LogicalPlan] {
 

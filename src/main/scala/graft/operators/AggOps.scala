@@ -312,7 +312,6 @@ object AggOps extends OpModule {
     */
   def kmvDistinct(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TopKByScore
-    graft.functions.GraftFunctions.register(s)
     val k = 64
     val dist = Tables.lineitem(s, dir)
       .select(col("l_returnflag"), col("l_partkey")).distinct()
@@ -359,7 +358,6 @@ object AggOps extends OpModule {
     */
   def kmvSetops(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TopKByScore
-    graft.functions.GraftFunctions.register(s)
     val k = 64
     val dist = Tables.lineitem(s, dir)
       .select(col("l_returnflag"), col("l_partkey")).distinct()

@@ -64,7 +64,6 @@ object CurationOps extends OpModule {
     * here so the fixture's n=3 oracle stays an exact overlap census.
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val grams = Tables.documents(s, dir)
       .withColumn("toks", toks)
       .select(col("doc_id"), explode(ngrams(3)).as("g"))
@@ -137,7 +136,6 @@ object CurationOps extends OpModule {
     * drop every short doc from training data).
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("toks", toks)
       .withColumn("n_tokens", size(col("toks")))

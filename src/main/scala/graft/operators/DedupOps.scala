@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.{minhashTokens, shingleSet, simHash}
 
 /** Document deduplication (builder prompt: exact, MinHash+LSH, SimHash,
   * n-gram Jaccard) over `documents`.
@@ -28,13 +29,11 @@ object DedupOps extends OpModule {
     * native one-pass [[graft.functions.ShingleSet]] expression (value-
     * identical to the old declarative `array_distinct(transform(...))`
     * chain; see ShingleSet's doc for why that chain is pathological under
-    * explode). Callers must have run `GraftFunctions.register` on the
-    * session before the frame is analyzed — every query entry point does.
+    * explode).
     */
-  private[operators] def shingleCol: Column = expr("graft_shingles(toks)")
+  private[operators] def shingleCol: Column = shingleSet(col("toks"))
 
   private def shinglesOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("shingles", shingleCol)
@@ -106,7 +105,6 @@ object DedupOps extends OpModule {
     * (doc_a, doc_b, inter, uni, size_a, size_b).
     */
   private def pairStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // pin the corpus-pass SKETCH frame (doc_id + 60 longs — exactly what
     // a production run persists as its dedup store) so the band
     // self-join's two sides read one materialization instead of each
@@ -114,7 +112,7 @@ object DedupOps extends OpModule {
     val sketch = Tables.documents(s, dir)
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
-      .withColumn("mh", expr("graft_minhash_tokens(toks)"))
+      .withColumn("mh", minhashTokens(col("toks")))
       .select(col("doc_id"), col("mh"))
       .transform(graft.Checkpoints.truncate)
     val bandedDocs = bandedFromSketch(sketch)
@@ -656,12 +654,11 @@ object DedupOps extends OpModule {
     * snapshot, read by every subsequent crawl.
     */
   def snapshotArtifacts(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs
       .withColumn("toks", split(col("text"), " "))
       .withColumn("digest", digestCol)
       .withColumn("mh",
-        when(size(col("toks")) >= 3, expr("graft_minhash_tokens(toks)")))
+        when(size(col("toks")) >= 3, minhashTokens(col("toks"))))
       .withColumn("shingles", shingleCol)
       .select(col("doc_id"), col("digest"), col("mh"), col("shingles"))
   }
@@ -1210,10 +1207,9 @@ object DedupOps extends OpModule {
     * distance; SimHashSpec / ShingleSetSpec).
     */
   def simhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("toks", split(col("text"), " "))
-      .withColumn("simhash", expr("graft_simhash(toks)"))
+      .withColumn("simhash", simHash(col("toks")))
       .select(col("doc_id"), col("simhash"))
       .orderBy(col("doc_id"))
   }
@@ -1225,10 +1221,9 @@ object DedupOps extends OpModule {
     * (xxhash64's Spark-specific seed keeps [[simhash]] oracle-free).
     */
   def simhashPortable(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("toks", split(col("text"), " "))
-      .withColumn("simhash", expr("graft_simhash_portable(toks)"))
+      .withColumn("simhash", simHash(col("toks"), portable = true))
       .select(col("doc_id"), col("simhash"))
       .orderBy(col("doc_id"))
   }

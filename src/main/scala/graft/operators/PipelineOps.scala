@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.minhashTokens
+
 /** The training-corpus cleaning pipeline as ONE composed query — the
   * end-to-end use case the individual LLM-pipeline operators exist for
   * (builder prompt): quality gate → exact-dedup canonicalization →
@@ -65,11 +67,10 @@ object PipelineOps extends OpModule {
     * same CTEs.
     */
   def corpusPrepare(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val art = TextOps.signalsFrame(graft.Tables.documents(s, dir))
       .withColumn("digest", DedupOps.digestCol)
       .withColumn("mh",
-        when(size(col("toks")) >= 3, expr("graft_minhash_tokens(toks)")))
+        when(size(col("toks")) >= 3, minhashTokens(col("toks"))))
       .withColumn("shingles", DedupOps.shingleCol)
       .select(col("doc_id"), col("n_tokens"), col("quality"),
         col("predicted_lang"), col("digest"), col("mh"), col("shingles"))

@@ -5,6 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+// dot(a, b): the native codegen'd DotProduct, bit-identical to the
+// `aggregate(zip_with(...))` higher-order form but ~20× faster on the
+// all-pairs paths
+import graft.functions.GraftFunctions.{dotProduct => dot, pqAdc, pqEncode}
 
 /** Similarity search over the `embeddings` table (builder prompt:
   * brute-force cosine top-k baseline + a bucketed scale path).
@@ -24,14 +28,6 @@ import graft.Tables
   * same IVF/LSH bucketing.
   */
 object SimOps extends OpModule {
-
-  /** dot(a, b) in DOUBLE, strict sequential sum — the native codegen'd
-    * graft_dot expression (graft.functions.DotProduct), bit-identical to
-    * the `aggregate(zip_with(...))` higher-order form but ~20× faster on
-    * the all-pairs paths.
-    */
-  private def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
 
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("norm", sqrt(dot(col("embedding"), col("embedding"))))
@@ -89,7 +85,6 @@ object SimOps extends OpModule {
     * verifies.
     */
   def simTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = withNorm(Tables.embeddings(s, dir))
     val scored = broadcast(queriesSide(s, dir))
       .join(corpus, col("q_id") =!= col("vec_id"))
@@ -287,7 +282,6 @@ object SimOps extends OpModule {
     */
   def embedSnapshotArtifacts(s: SparkSession, df: DataFrame,
       seeds: Seq[(Long, Seq[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     withNorm(df)
       .withColumn("cells", probeCells(typedlit(seeds)))
       .select(col("vec_id"), col("embedding"), col("norm"), col("cells"))
@@ -322,7 +316,6 @@ object SimOps extends OpModule {
     */
   def dedupEmbed(s: SparkSession, dir: String,
       cells: Int = 0, probes: Int = dedupProbes): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // cells = 0 → corpus-sized (the fixture constant or one metadata
     // count): identical to dedupCells on every shipped oracle fixture,
     // √n on bigger corpora — see scaledCells
@@ -367,7 +360,6 @@ object SimOps extends OpModule {
     * losslessness vs the brute-force answer is unit-asserted at three SFs.
     */
   def dedupEmbedIncremental(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val k = Tables.snapshotBoundary(s, dir, "embeddings")
     val seedsCol = typedlit(driverSeeds(s, dir,
       scaledCells(Tables.vectorCount(s, dir))))
@@ -387,7 +379,6 @@ object SimOps extends OpModule {
   def dedupEmbedIncrementalFromStore(s: SparkSession,
       storeArtifacts: DataFrame, batch: DataFrame,
       seeds: Seq[(Long, Seq[Double])]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     embedIncrementalCore(artifactAssigned(storeArtifacts),
       probeAssigned(batch, typedlit(seeds)))
   }
@@ -451,7 +442,6 @@ object SimOps extends OpModule {
   def streamEmbedDupHits(s: SparkSession, stream: DataFrame, dir: String,
       threshold: Double = 0.45,
       dedupWithinWatermark: Boolean = false): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val seedsCol = typedlit(driverSeeds(s, dir, dedupCells))
     val store = probeAssigned(Tables.embeddings(s, dir), seedsCol)
       .select(col("cell"), col("vec_id").as("store_id"),
@@ -594,7 +584,6 @@ object SimOps extends OpModule {
     */
   private[graft] def annIndexWithImpl(s: SparkSession, dir: String,
       nSeeds: Int, broadcastAssign: Boolean): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val emb = withNorm(Tables.embeddings(s, dir))
     val seeds = driverSeeds(s, dir, nSeeds)
     // assignment needs only the ARGMAX cell, so take array_min of the
@@ -703,7 +692,6 @@ object SimOps extends OpModule {
     */
   private[graft] def annIndexHierarchical(s: SparkSession, dir: String,
       nSeeds: Int, coarseProbes: Int = 4): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val emb = withNorm(Tables.embeddings(s, dir))
     val seeds = driverSeeds(s, dir, nSeeds)
@@ -847,8 +835,6 @@ object SimOps extends OpModule {
 
   private def annSearchCore(probed: DataFrame,
       assigned: DataFrame): DataFrame = {
-    val s = probed.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val scored = probed.join(assigned, Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("cosine",
@@ -873,7 +859,6 @@ object SimOps extends OpModule {
     * scale path.
     */
   def annFrozen(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val seedsLit = typedlit(driverSeeds(s, dir, 10))
     val corpus = withNorm(Tables.embeddings(s, dir))
       .withColumn("cell",
@@ -921,8 +906,6 @@ object SimOps extends OpModule {
     * real near-dup corpora concentrate far above it.
     */
   def annSrp(s: SparkSession, dir: String): DataFrame = {
-    // register BEFORE withNorm builds its eagerly-analyzed graft_dot call
-    graft.functions.GraftFunctions.register(s)
     val bits = srpBitsPerBand(Tables.vectorCount(s, dir))
     val planes = driverSeeds(s, dir, srpBands * bits)
     srpSearch(s, dir, planes, bits,
@@ -939,7 +922,6 @@ object SimOps extends OpModule {
     * round-trip equivalence is asserted in Round6bOpsSpec.
     */
   def srpTableArtifact(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val bits = srpBitsPerBand(Tables.vectorCount(s, dir))
     srpAssigned(s, driverSeeds(s, dir, srpBands * bits), bits,
       withNorm(Tables.embeddings(s, dir)))
@@ -960,7 +942,6 @@ object SimOps extends OpModule {
     */
   def srpTableAppend(s: SparkSession, dir: String,
       table: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     require(table.columns.contains("bits"),
       "persisted SRP table lacks the 'bits' layout column — cannot " +
         "append under an unknown band layout")
@@ -986,7 +967,6 @@ object SimOps extends OpModule {
     */
   def annSrpFromStore(s: SparkSession, dir: String,
       table: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     require(table.columns.contains("bits"),
       "persisted SRP table lacks the 'bits' layout column — rebuild the " +
         "artifact with srpTableArtifact (build-time bits must travel " +
@@ -1012,7 +992,6 @@ object SimOps extends OpModule {
     */
   private[graft] def annSrpWith(s: SparkSession, dir: String, bits: Int,
       bands: Int, queryPred: Column): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val planes = driverSeeds(s, dir, bands * bits)
     srpSearch(s, dir, planes, bits,
       srpAssigned(s, planes, bits,
@@ -1090,7 +1069,6 @@ object SimOps extends OpModule {
   private[graft] def annSrpMultiProbe(s: SparkSession, dir: String,
       bits: Int, bands: Int, radius: Int, queryPred: Column,
       corpus: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val planes = driverSeeds(s, dir, bands * bits)
     val table = corpus.getOrElse(
       srpAssigned(s, planes, bits, withNorm(Tables.embeddings(s, dir)),
@@ -1222,7 +1200,6 @@ object SimOps extends OpModule {
       s"k=$k outside the top-5 heap's bound ([[srpTopK]] verifies 5)")
     require(maxRadius >= 0 && maxRadius <= 2,
       s"maxRadius $maxRadius unsupported (0-2)")
-    graft.functions.GraftFunctions.register(s)
     val planes = driverSeeds(s, dir, bands * bits)
     val table = corpus.getOrElse(
       srpAssigned(s, planes, bits, withNorm(Tables.embeddings(s, dir)),
@@ -1353,7 +1330,6 @@ object SimOps extends OpModule {
   private[graft] def srpCandidateCountMulti(s: SparkSession, dir: String,
       bits: Int, bands: Int, radius: Int,
       queryPred: Column = col("vec_id") < 20): Long = {
-    graft.functions.GraftFunctions.register(s)
     val planes = driverSeeds(s, dir, bands * bits)
     val corpus = srpAssigned(s, planes, bits,
       withNorm(Tables.embeddings(s, dir)), bands)
@@ -1378,7 +1354,6 @@ object SimOps extends OpModule {
     */
   private[graft] def srpCandidateCount(s: SparkSession, dir: String,
       bits: Int, bands: Int = srpBands): Long = {
-    graft.functions.GraftFunctions.register(s)
     val planes = driverSeeds(s, dir, bands * bits)
     val corpus = srpAssigned(s, planes, bits,
       withNorm(Tables.embeddings(s, dir)), bands)
@@ -1400,7 +1375,6 @@ object SimOps extends OpModule {
     */
   private def srpAssigned(s: SparkSession, planes: Seq[(Long, Seq[Double])],
       bits: Int, df: DataFrame, bands: Int = srpBands): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     require(planes.size == bands * bits,
       s"SRP needs ${bands * bits} planes for $bands $bits-bit bands, " +
         s"got ${planes.size}")
@@ -1437,7 +1411,6 @@ object SimOps extends OpModule {
     * sentinel instead of the true NaN score.
     */
   def clusterAssign(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val seedsLit = typedlit(driverSeeds(s, dir, 10))
     withNorm(Tables.embeddings(s, dir))
       .withColumn("cell",
@@ -1483,7 +1456,6 @@ object SimOps extends OpModule {
     * the full and incremental operators cannot drift).
     */
   private def semanticAssigned(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val seedsLit = typedlit(driverSeeds(s, dir, dedupCells))
     // pinned: every consumer references this frame several times (the
     // plain form 3×: both dominance sides + the anti-join probe; the
@@ -1580,7 +1552,6 @@ object SimOps extends OpModule {
     * TakeOrderedAndProject for the bottom-25.
     */
   def docOutlier(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, dir)
     val sums = emb
       .select(posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -1732,7 +1703,6 @@ object SimOps extends OpModule {
     */
   private[graft] def pqEncoded(s: SparkSession, dir: String,
       fast: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = withNorm(Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding"), col("norm"))
     if (!fast)
@@ -1747,8 +1717,8 @@ object SimOps extends OpModule {
       // mapPartitions form: identical math, but no Dataset API break,
       // no broadcast bookkeeping, and the encode now composes with any
       // downstream expression in one codegen stage.
-      emb.withColumn("codes", call_function("graft_pq_encode",
-        col("embedding"), typedlit(pqCodebook(s, dir))))
+      emb.withColumn("codes", pqEncode(col("embedding"),
+        pqCodebook(s, dir)))
   }
 
   /** The (q_id, lut) query frame with LUTs built DRIVER-side
@@ -1790,10 +1760,9 @@ object SimOps extends OpModule {
     * adds, so the value is identical to the interpreted HOF twin
     * [[pqAdcColHof]] it replaced on the hot path; Round17OpsSpec pins
     * the two bit-for-bit and CodegenFallbackSpec pins compilation).
-    * The caller must have run GraftFunctions.register on the session.
     */
   private def pqAdcCol: Column =
-    call_function("graft_pq_adc", col("lut"), col("codes"))
+    pqAdc(col("lut"), col("codes"))
 
   /** The interpreted higher-order twin of [[pqAdcCol]] — the fully
     * plan-analyzable definition the oracle SQL mirrors, kept for the
@@ -1874,7 +1843,6 @@ object SimOps extends OpModule {
   private[graft] def annPqOnCb(s: SparkSession, dir: String,
       encoded: DataFrame, cb: Seq[Seq[Seq[Double]]],
       queryPred: Column = col("vec_id") < 20): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = encoded.select(col("vec_id"), col("codes"))
     // the query LUTs are built DRIVER-side ([[lutFlatOf]] — bit-identical
     // to the [[pqLutCol]] expression form: same strict (x−c)² fold, same
@@ -1899,7 +1867,6 @@ object SimOps extends OpModule {
     */
   private[graft] def pq8AdcScanProbe(s: SparkSession, dir: String,
       cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
     val qs = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"),
@@ -1917,7 +1884,6 @@ object SimOps extends OpModule {
     */
   private[graft] def pq8AdcScanDriverProbe(s: SparkSession, dir: String,
       cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
     val qs = pqLutFrameDriver(s, dir, cb, col("vec_id") < 20)
     broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
@@ -1947,7 +1913,6 @@ object SimOps extends OpModule {
     */
   private[graft] def pq8JoinLutOneLookupProbe(s: SparkSession, dir: String,
       cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
     val qs = pqLutFrameDriver(s, dir, cb, col("vec_id") < 20)
     broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
@@ -1961,7 +1926,6 @@ object SimOps extends OpModule {
     */
   private[graft] def pq8JoinOnlyProbe(s: SparkSession, dir: String,
       cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
     val qs = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"),
@@ -2142,11 +2106,9 @@ object SimOps extends OpModule {
     */
   private[graft] def pq8Encoded(s: SparkSession, dir: String,
       cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     withNorm(Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding"), col("norm"))
-      .withColumn("codes", call_function("graft_pq_encode",
-        col("embedding"), typedlit(cb)))
+      .withColumn("codes", pqEncode(col("embedding"), cb))
   }
 
   /** [[annPq]] under the TRAINED 8-bit codebook ([[pq8Codebook]]): the
@@ -2363,13 +2325,12 @@ object SimOps extends OpModule {
       cb: Seq[Seq[Seq[Double]]],
       cents: Map[Long, Array[Double]],
       cells: Int = pqrCells): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val seeds = driverSeeds(s, dir, cells)
     withNorm(Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding"), col("norm"))
       .withColumn("cell", cellArgMax(typedlit(seeds)))
-      .withColumn("codes", call_function("graft_pq_encode",
-        residualCol(typedlit(centsLiteral(cents, cells))), typedlit(cb)))
+      .withColumn("codes", pqEncode(
+        residualCol(typedlit(centsLiteral(cents, cells))), cb))
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cell"), col("codes"))
   }
@@ -2392,7 +2353,6 @@ object SimOps extends OpModule {
       topK: Int = 5): DataFrame = {
     import s.implicits._
 
-    graft.functions.GraftFunctions.register(s)
     val kCodes = cb.head.size
     val cbArr = cb.map(_.map(_.toArray).toArray).toArray
     val occupied = cents.keys.toSeq.sorted
@@ -2491,7 +2451,6 @@ object SimOps extends OpModule {
       queryPred: Column = col("vec_id") < 20,
       encodedOpt: Option[DataFrame] = None,
       cbOpt: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // cbOpt must match the codebook that produced encodedOpt's codes —
     // callers pairing the trained 8-bit book pass both together
     val cb = cbOpt.getOrElse(pqCodebook(s, dir))
@@ -2541,7 +2500,6 @@ object SimOps extends OpModule {
       probes: Int = 4,
       queryPred: Column = col("vec_id") < 20,
       encodedOpt: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val seeds = driverSeeds(s, dir, 32)
     val seedsLit = typedlit(seeds)
     // the inline default is PINNED (the [[annPq]] reason: the encode
@@ -2634,7 +2592,6 @@ object SimOps extends OpModule {
       encoded: DataFrame, cb: Seq[Seq[Seq[Double]]],
       cells: Int, coarseProbes: Int = 4): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val seeds = driverSeeds(s, dir, cells)
       .map { case (id, u) => (id, u.toArray) }.toArray
     // local def: the mapPartitions closure below must stay
@@ -2713,7 +2670,6 @@ object SimOps extends OpModule {
       topK: Int = 5): DataFrame = {
     import s.implicits._
 
-    graft.functions.GraftFunctions.register(s)
     val seeds = driverSeeds(s, dir, cells)
       .map { case (id, u) => (id, u.toArray) }.toArray
     // the probe ranking is RESTRICTED to the query's top-`coarseProbes`
@@ -2820,7 +2776,6 @@ object SimOps extends OpModule {
       assigned: DataFrame, cb: Seq[Seq[Seq[Double]]], cells: Int,
       probes: Int, shortlist: Int = 50, coarseProbes: Int = 4,
       queryPred: Column = col("vec_id") < 20): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cands = annIvfPqScaledQuery(s, dir, assigned, cb, cells, probes,
       coarseProbes, queryPred, topK = shortlist)
       .select(col("q_id"), col("neighbor_id").as("vec_id"))
@@ -2880,7 +2835,6 @@ object SimOps extends OpModule {
   private[graft] def annIvfPqrAssigned(s: SparkSession, dir: String,
       cells: Int, coarseProbes: Int = 4): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val seeds = driverSeeds(s, dir, cells)
       .map { case (id, u) => (id, u.toArray) }.toArray
     def ddot(a: Array[Double], b: Array[Double]): Double = {
@@ -3026,7 +2980,6 @@ object SimOps extends OpModule {
       cb: Seq[Seq[Seq[Double]]],
       cents: Map[Long, Array[Double]]): DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val bc = s.sparkContext.broadcast(cents)
     assigned.select(col("cell"), col("vec_id"), col("embedding"))
       .as[(Long, Long, Array[Float])]
@@ -3041,8 +2994,7 @@ object SimOps extends OpModule {
         }
       }
       .toDF("cell", "vec_id", "residual")
-      .withColumn("codes", call_function("graft_pq_encode",
-        col("residual"), typedlit(cb)))
+      .withColumn("codes", pqEncode(col("residual"), cb))
       .select(col("cell"), col("vec_id"), col("codes"))
   }
 
@@ -3065,7 +3017,6 @@ object SimOps extends OpModule {
       topK: Int = 5): DataFrame = {
     import s.implicits._
 
-    graft.functions.GraftFunctions.register(s)
     val seeds = driverSeeds(s, dir, cells)
       .map { case (id, u) => (id, u.toArray) }.toArray
     val (pivots, groupsArr) = pivotGroups(seeds)

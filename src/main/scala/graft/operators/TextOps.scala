@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions.rollingFingerprint
 
 /** Text-analysis operators for a training-data pipeline (builder prompt:
   * language-ID heuristic, quality scoring, token counting) over the
@@ -164,10 +165,9 @@ object TextOps extends OpModule {
     * invariants (LlmOpsSpec).
     */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("toks", toks)
-      .withColumn("fp", expr("graft_fingerprint(toks)"))
+      .withColumn("fp", rollingFingerprint(col("toks")))
       .select(col("doc_id"), col("fp")(0).as("fingerprint"),
         col("fp")(1).as("win_min_hash"))
       .orderBy(col("doc_id"))
@@ -180,10 +180,9 @@ object TextOps extends OpModule {
     * default stays the fast path.
     */
   def fingerprintPortable(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .withColumn("toks", toks)
-      .withColumn("fp", expr("graft_fingerprint_portable(toks)"))
+      .withColumn("fp", rollingFingerprint(col("toks"), portable = true))
       .select(col("doc_id"), col("fp")(0).as("fingerprint"),
         col("fp")(1).as("win_min_hash"))
       .orderBy(col("doc_id"))

@@ -33,10 +33,13 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * Output rows are the child's rows unchanged; within-group emission is
   * best-first.
   *
-  * Install via [[TopKPerGroup.install]] (live session,
-  * `experimental.extraStrategies` — same route as the RewriteDotProduct
-  * optimizer rule) or cluster-wide through
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * [[TopKPerGroup.apply]] installs the strategy on whatever session it
+  * runs on ([[TopKPerGroup.install]], `experimental.extraStrategies`), so
+  * operators need no session setup. The two SQL binders built from
+  * `GraftFunctions`' one function list install it too:
+  * `GraftFunctions.register` calls `install`, and
+  * `spark.sql.extensions=graft.functions.GraftExtensions` injects it at
+  * session build.
   */
 case class TopKPerGroupNode(
     groupExprs: Seq[Expression],

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -90,21 +91,33 @@ object DeliverySemantics {
     * (README.md:152–154). (On a cluster the target would be a
     * transactional table or the JDBC upsert in [[JdbcUpsert]]; plain
     * parquet keeps the offline test hermetic.)
+    *
+    * Crash-safe at every step: the merge is written whole to
+    * `targetDir_tmp`, and only a temp directory carrying `_SUCCESS` ever
+    * replaces the target. A call that finds one finishes that interrupted
+    * commit before reading, so a crash inside the delete-then-rename swap
+    * cannot lose history. A missing target reads as empty; an unreadable
+    * one throws and is left as it was.
     */
   def parquetUpsertSink(spark: SparkSession, targetDir: String, key: String,
       ord: String)(batch: DataFrame, batchId: Long): Unit = {
+    val dst = new Path(targetDir)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(targetDir + "_tmp")
+    if (fs.exists(new Path(tmp, "_SUCCESS"))) swapIn(fs, tmp, dst)
     val existing =
-      try spark.read.parquet(targetDir)
-      catch { case _: Throwable => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema) }
-    val merged = upsert(existing, batch, key, ord).persist()
-    merged.count() // materialize before overwriting the input path
-    merged.write.mode("overwrite").parquet(targetDir + "_tmp")
-    merged.unpersist()
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(targetDir)
+      if (fs.exists(dst)) spark.read.parquet(targetDir)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+    upsert(existing, batch, key, ord).write.mode("overwrite")
+      .parquet(tmp.toString)
+    swapIn(fs, tmp, dst)
+  }
+
+  /** Replace `dst` with the complete table at `tmp`. */
+  private def swapIn(fs: FileSystem, tmp: Path, dst: Path): Unit = {
     fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(targetDir + "_tmp"), dst)
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"could not rename $tmp to $dst")
   }
 }

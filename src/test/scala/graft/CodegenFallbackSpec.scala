@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.SimOps
@@ -17,12 +18,12 @@ import graft.operators.SimOps
   */
 class CodegenFallbackSpec extends SparkSpec {
 
-  private def withCodegenOnly[A](body: => A): A = {
+  private def withCodegenOnly[A](s: SparkSession)(body: => A): A = {
     val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "CODEGEN_ONLY")
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "CODEGEN_ONLY")
     try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
   test("docOutlier's centroid self-dot (non-nullable children) compiles " +
@@ -31,7 +32,7 @@ class CodegenFallbackSpec extends SparkSpec {
       .createTempDirectory("graft_cgf").toString
     Tables.embeddings(spark, sf0001).limit(3)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    withCodegenOnly {
+    withCodegenOnly(spark) {
       val rows = SimOps.docOutlier(spark, dir).collect()
       assert(rows.length === 3)
     }
@@ -39,10 +40,10 @@ class CodegenFallbackSpec extends SparkSpec {
 
   test("graft_dot codegen: non-nullable and nullable children, fast and " +
     "strict paths, all compile under CODEGEN_ONLY with the right value") {
+    val spark = registeredSpark
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val expected = 1.0 * 2.0 + 2.0 * 0.5 + 3.0 * -1.0
-    withCodegenOnly {
+    withCodegenOnly(spark) {
       // non-nullable children (array(...) literals): the fast path here
       // is precisely the shape whose generated code used to reference
       // the undeclared isNull local; the strict path is exercised via
@@ -68,8 +69,8 @@ class CodegenFallbackSpec extends SparkSpec {
 
   test("graft_pq_adc and graft_pq_encode compile under CODEGEN_ONLY " +
     "with the right values, on nullable and non-nullable children") {
+    val spark = registeredSpark
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // 2 subspaces x 2 codes x 2 dims toy book; v = [1, 2, 3, 4]:
     // subspace 0 slice (1,2) is nearer code 1 = (1,2) -> code 1;
     // subspace 1 slice (3,4) nearer code 0 = (3,5) (d=1) than (0,0)
@@ -77,7 +78,7 @@ class CodegenFallbackSpec extends SparkSpec {
     val cb = Seq(
       Seq(Seq(9.0, 9.0), Seq(1.0, 2.0)),
       Seq(Seq(3.0, 5.0), Seq(0.0, 0.0)))
-    withCodegenOnly {
+    withCodegenOnly(spark) {
       // nullable children (encoder-produced arrays)
       val df = Seq((Array(1.0f, 2.0f, 3.0f, 4.0f),
         Array(Array(10L, 20L), Array(30L, 40L)), Array(1L, 0L)))

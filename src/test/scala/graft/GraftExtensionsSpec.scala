@@ -2,12 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.GraftFunctions
 import graft.operators.{DedupOps, TextOps}
 
 /** A session configured ONLY via `spark.sql.extensions` (the cluster-wide
   * installation path — no imperative `register()` call) must expose the
-  * full native-function surface: all 5 expressions plus the dot-product
-  * optimizer rule. Regression for the round-2 gap where only 3 of 5 were
+  * full native-function surface: every name in `GraftFunctions`' one
+  * function list, the dot-product optimizer rule and the top-k planner
+  * strategy — the same set `GraftFunctions.register` binds on a live
+  * session. Regression for the round-2 gap where only 3 of 5 were
   * injected.
   */
 class GraftExtensionsSpec extends SparkSpec {
@@ -35,7 +38,19 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("extensions-only session resolves all 8 native functions in SQL") {
+  private val names = GraftFunctions.sqlFunctions.map(_._1.funcName)
+
+  test("every name in the function list exists on the extension-only and " +
+    "the registered session, and not on the bare shared session") {
+    assert(names.size === 10 && names.distinct === names, names)
+    withExtensionOnlySession { s =>
+      names.foreach(n => assert(s.catalog.functionExists(n), n))
+    }
+    names.foreach(n => assert(registeredSpark.catalog.functionExists(n), n))
+    names.foreach(n => assert(!spark.catalog.functionExists(n), n))
+  }
+
+  test("extensions-only session resolves all 10 native functions in SQL") {
     withExtensionOnlySession { s =>
       val row = s.sql(
         """SELECT
@@ -49,16 +64,22 @@ class GraftExtensionsSpec extends SparkSpec {
           |    AS shp,
           |  graft_fingerprint_portable(
           |    split('rolling fingerprint input text', ' ')) AS fpp,
-          |  graft_shingles(split('a b a b a b c', ' ')) AS shg
+          |  graft_shingles(split('a b a b a b c', ' ')) AS shg,
+          |  graft_pq_adc(array(array(10L, 20L), array(30L, 40L)),
+          |    array(1L, 0L)) AS adc,
+          |  graft_pq_encode(array(1.0D, 2.0D, 3.0D, 4.0D),
+          |    array(array(array(9.0D, 9.0D), array(1.0D, 2.0D)),
+          |      array(array(3.0D, 5.0D), array(0.0D, 0.0D)))) AS enc
           |""".stripMargin).collect().head
       assert(row.getDouble(0) === 11.0)
       assert(row.getAs[Seq[Long]](1).length === 60)
       assert(row.getAs[Seq[Long]](3).length === 60)
       assert(row.getAs[scala.collection.Seq[String]](7).toSeq ===
         Seq("a b a", "b a b", "a b c"))
+      assert(row.getLong(8) === 50L)
+      assert(row.getAs[scala.collection.Seq[Long]](9).toSeq === Seq(1L, 0L))
       // values must agree with the imperative-registration path
-      graft.functions.GraftFunctions.register(spark)
-      val viaRegister = spark.sql(
+      val viaRegister = registeredSpark.sql(
         "SELECT graft_simhash(split('hello world graft engine', ' ')), " +
           "graft_fingerprint(split('rolling fingerprint input text', ' ')), " +
           "graft_simhash_portable(split('hello world graft engine', ' ')), " +

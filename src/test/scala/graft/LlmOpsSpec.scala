@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions.dotProduct
 import graft.operators.{DedupOps, SimOps}
 
 /** Value-level checks for the LLM-pipeline ops that have no SQL oracle
@@ -103,8 +104,8 @@ class LlmOpsSpec extends SparkSpec {
     val c = spark.read.parquet(s"$dir/centroids")
     val a = spark.read.parquet(s"$dir/assigned")
     val q = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 20)
-      .withColumn("q_norm", sqrt(call_function("graft_dot",
-        col("embedding"), col("embedding"))))
+      .withColumn("q_norm",
+        sqrt(dotProduct(col("embedding"), col("embedding"))))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("q_norm"))
     val r1 = SimOps.annSearch(spark, q, c, a).collect()
@@ -126,16 +127,16 @@ class LlmOpsSpec extends SparkSpec {
   private def bruteForcePairs(dir: String,
       minVb: Long = Long.MinValue): Seq[(Long, Long, Double)] = {
     val e = Tables.embeddings(spark, dir)
-      .withColumn("norm", sqrt(call_function("graft_dot",
-        col("embedding"), col("embedding"))))
+      .withColumn("norm",
+        sqrt(dotProduct(col("embedding"), col("embedding"))))
     val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"),
       col("norm").as("na"))
     val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"),
       col("norm").as("nb"))
     a.join(b, col("va") < col("vb"))
       .filter(col("vb") >= minVb)
-      .withColumn("cosine", call_function("graft_dot", col("ea"),
-        col("eb")) / (col("na") * col("nb")))
+      .withColumn("cosine",
+        dotProduct(col("ea"), col("eb")) / (col("na") * col("nb")))
       .filter(col("cosine") >= 0.45)
       .select(col("va"), col("vb"), col("cosine"))
       .orderBy(col("va"), col("vb")).collect()
@@ -151,7 +152,6 @@ class LlmOpsSpec extends SparkSpec {
   // the two SFs the tests can reach. Recall margin was measured offline:
   // every qualifying pair shares ≥1 probed cell with ≥1e-6 rank-gap slack.
   test("llm_dedup_embed: bucketed result == brute-force all-pairs") {
-    graft.functions.GraftFunctions.register(spark)
     allSfs.foreach { dir =>
       val got = SimOps.dedupEmbed(spark, dir).collect()
         .map(r => (r.getAs[Long]("va"), r.getAs[Long]("vb"),
@@ -340,7 +340,6 @@ class LlmOpsSpec extends SparkSpec {
   // store-vs-batch bucketed plan must recover exactly the brute-force
   // pairs that involve a new vector, at all reachable SFs.
   test("llm_dedup_embed_incremental == brute force minus old-vs-old pairs") {
-    graft.functions.GraftFunctions.register(spark)
     allSfs.foreach { dir =>
       val k = Tables.embeddings(spark, dir)
         .agg(expr("max(vec_id) * 4 div 5")).head().getLong(0)

@@ -144,8 +144,9 @@ class PlanAuditSpec extends SparkSpec {
     a.write.mode("overwrite").partitionBy("cell").parquet(s"$out/assigned")
     val aP = spark.read.parquet(s"$out/assigned")
     val q = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 20)
-      .selectExpr("vec_id AS q_id", "embedding AS q_emb",
-        "sqrt(graft_dot(embedding, embedding)) AS q_norm")
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+        org.apache.spark.sql.functions.sqrt(graft.functions.GraftFunctions
+          .dotProduct(col("embedding"), col("embedding"))).as("q_norm"))
     val pruned = SimOps.annSearchPruned(spark, q, c, aP)
     val p = plan(pruned)
     // the probed cell set reaches the store scan as a DYNAMIC partition

@@ -3,7 +3,8 @@ package graft
 /** Every registered query must build and execute at sf0.001, and every
   * oracle entry must point at a registered query. The value-level gate is
   * the driver's DuckDB compare (tools/check.py locally); this spec catches
-  * analysis errors and registry typos early.
+  * analysis errors and registry typos early. The queries run on the
+  * shared session, which never has the native SQL functions registered.
   */
 class QueriesSmokeSpec extends SparkSpec {
   test("every oracle key has a query") {
@@ -134,5 +135,13 @@ class QueriesSmokeSpec extends SparkSpec {
 
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  // Runs after every query above: none of them needed the native SQL
+  // names, because operators build the expressions as Columns.
+  test("the queries ran on a session without the native SQL functions") {
+    graft.functions.GraftFunctions.sqlFunctions.foreach { case (id, _, _) =>
+      assert(!spark.catalog.functionExists(id.funcName), id.funcName)
+    }
   }
 }

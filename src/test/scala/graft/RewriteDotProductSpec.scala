@@ -5,8 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** The optimizer rule must rewrite the composed aggregate/zip_with dot
   * product into the native expression WITHOUT changing any semantics —
   * including the null-poisoning and length-mismatch behavior of the
@@ -14,6 +12,7 @@ import graft.functions.GraftFunctions
   * relation would be constant-folded before the plan can be observed.)
   */
 class RewriteDotProductSpec extends SparkSpec {
+  override lazy val spark = registeredSpark
 
   private def composedDot(df: DataFrame): DataFrame =
     df.selectExpr("id",
@@ -28,7 +27,6 @@ class RewriteDotProductSpec extends SparkSpec {
   }
 
   test("rule fires: optimized plan contains graft_dot, results unchanged") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val src = viaParquet(Seq(
       (1L, Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f)),
@@ -42,7 +40,6 @@ class RewriteDotProductSpec extends SparkSpec {
   }
 
   test("strict semantics: length mismatch and null elements yield NULL") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val src = viaParquet(Seq(
       (1L, Seq[java.lang.Float](1.0f, 2.0f), Seq[java.lang.Float](3.0f)),
@@ -58,7 +55,6 @@ class RewriteDotProductSpec extends SparkSpec {
   }
 
   test("rewritten form equals higher-order form on the real embeddings") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id").as("id"), col("embedding").as("a"),
         col("embedding").as("b"))
@@ -75,7 +71,6 @@ class RewriteDotProductSpec extends SparkSpec {
   // double, so rewriting would change low-order bits. The guard must keep
   // the higher-order form.
   test("rule does NOT fire when the multiply runs in float precision") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val src = viaParquet(Seq(
       (1L, Seq(1.1f, 2.2f), Seq(3.3f, 4.4f))
@@ -91,7 +86,6 @@ class RewriteDotProductSpec extends SparkSpec {
   }
 
   test("rule does NOT fire on a different fold (sum of maxes)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val src = viaParquet(Seq(
       (1L, Seq(1.0f, 2.0f, 3.0f), Seq(4.0f, 5.0f, 6.0f)),

@@ -18,7 +18,7 @@ class Round17OpsSpec extends SparkSpec {
 
   test("graft_pq_adc: the codegen'd lookup sum is bit-identical to the " +
     "interpreted HOF twin on both the 16-code and 256-code frames") {
-    graft.functions.GraftFunctions.register(spark)
+    val spark = registeredSpark
     val cb4 = SimOps.pqCodebook(spark, sf0001)
     val cb8 = SimOps.pq8Codebook(spark, sf0001)
     for (cb <- Seq(cb4, cb8)) {

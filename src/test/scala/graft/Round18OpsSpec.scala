@@ -17,7 +17,7 @@ class Round18OpsSpec extends SparkSpec {
   test("graft_pq_adc: mistyped lut/codes fail ANALYSIS with a typed " +
     "message instead of returning silently wrong getLong reinterpreted " +
     "sums") {
-    graft.functions.GraftFunctions.register(spark)
+    val spark = registeredSpark
     import spark.implicits._
     val df = Seq((Seq(Seq(1, 2)), Seq(0))).toDF("lut", "codes")
     val err = intercept[org.apache.spark.sql.AnalysisException] {
@@ -36,7 +36,7 @@ class Round18OpsSpec extends SparkSpec {
   test("graft_pq_encode: non-array embedding fails ANALYSIS (not a raw " +
     "ClassCastException) and a mistyped codebook literal is rejected " +
     "with a typed message") {
-    graft.functions.GraftFunctions.register(spark)
+    val spark = registeredSpark
     import spark.implicits._
     val cbOk = typedlit(Seq(Seq(Seq(0.0, 0.0))))
     val bad = Seq(("hello", Seq(0.5f, 0.5f))).toDF("s", "emb")

@@ -16,6 +16,7 @@ import org.apache.spark.sql.functions._
   * alone). A native one-pass expression makes the duplication harmless.
   */
 class ShingleSetSpec extends SparkSpec {
+  override lazy val spark = registeredSpark
 
   private val declarative =
     """array_distinct(
@@ -25,7 +26,6 @@ class ShingleSetSpec extends SparkSpec {
       |  ELSE array() END)""".stripMargin
 
   test("graft_shingles == declarative chain on the whole fixture corpus") {
-    graft.functions.GraftFunctions.register(spark)
     val mismatches = Tables.documents(spark, "/root/testdata/sf0.01")
       .withColumn("toks", split(col("text"), " "))
       .withColumn("a", expr(declarative))
@@ -36,7 +36,6 @@ class ShingleSetSpec extends SparkSpec {
   }
 
   test("edge cases: short, exact-3, repeated, and NULL token arrays") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.sql(
       """SELECT
         |  graft_shingles(array('a', 'b')) AS short,
@@ -55,7 +54,6 @@ class ShingleSetSpec extends SparkSpec {
   }
 
   test("codegen and interpreted paths agree") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Tables.documents(spark, sf0001)
       .withColumn("toks", split(col("text"), " "))
       .withColumn("shg", expr("graft_shingles(toks)"))

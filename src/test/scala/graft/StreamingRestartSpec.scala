@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
@@ -53,6 +55,74 @@ class StreamingRestartSpec extends SparkSpec {
     assert(audit.getAs[Long]("n") === 100L)
     assert(audit.getAs[Long]("lost") === 0L)
     assert(audit.getAs[Long]("duplicated") === 0L)
+  }
+
+  // Kill points INSIDE the lake sink's commit: batch 2 crashes at each
+  // step of writing `<target>_tmp` and swapping it in, then the restarted
+  // query replays batch 2 and delivers batch 3.
+  private def sink(target: String, id: Long): Unit =
+    DeliverySemantics.parquetUpsertSink(spark, target, "counter",
+      "counter")(SensorGenerator.batch(spark, 25, id * 25L), id)
+
+  private def files(dir: String): Map[Path, Seq[Byte]] = {
+    val s = Files.walk(Paths.get(dir))
+    try s.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(p => p -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  private def partFiles(dir: String): Seq[Path] =
+    files(dir).keys.toSeq.sorted
+      .filter(_.getFileName.toString.startsWith("part-"))
+
+  Seq[(String, String => Unit)](
+    "target deleted, temp complete" -> { t =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t)) },
+    "target partly deleted, temp complete" -> { t =>
+      Files.delete(partFiles(t).head) },
+    "target intact, temp complete" -> { _ => () },
+    "temp partial, no _SUCCESS" -> { t =>
+      Files.delete(Paths.get(s"${t}_tmp/_SUCCESS"))
+      partFiles(s"${t}_tmp").drop(1).foreach(Files.delete) }
+  ).foreach { case (state, crash) =>
+    test(s"lake sink kill point: $state => replay lands exactly once") {
+      val target = Files.createTempDirectory("graft_killpt").toString +
+        "/target"
+      Seq(0L, 1L).foreach(sink(target, _))
+      // batch 2 up to its write of the complete temp directory ...
+      DeliverySemantics.upsert(spark.read.parquet(target),
+          SensorGenerator.batch(spark, 25, 50L), "counter", "counter")
+        .repartition(4).write.parquet(s"${target}_tmp")
+      crash(target) // ... then the crash
+      sink(target, 2L) // replay
+      sink(target, 3L)
+      val landed = spark.read.parquet(target)
+      val audit = DeliverySemantics.auditGaps(landed, "counter")
+        .collect().head
+      assert(audit.getAs[Long]("n") === 100L)
+      assert(audit.getAs[Long]("lost") === 0L)
+      assert(audit.getAs[Long]("duplicated") === 0L)
+      assert(landed.collect().toSet ===
+        SensorGenerator.batch(spark, 100).collect().toSet)
+    }
+  }
+
+  test("lake sink: an unreadable target throws and is left untouched") {
+    val target = Files.createTempDirectory("graft_garbage").toString +
+      "/target"
+    Seq(0L, 1L).foreach(sink(target, _))
+    def assertRefused(): Unit = {
+      val before = files(target)
+      intercept[Exception](sink(target, 2L))
+      assert(files(target) === before)
+    }
+    // one garbage part file among good ones: fails when the merge runs
+    val garbage = "not a parquet file".getBytes
+    Files.write(Paths.get(target, "part-99999-garbage.parquet"), garbage)
+    assertRefused()
+    // no readable footer at all: fails when the table is opened
+    partFiles(target).foreach(Files.write(_, garbage))
+    assertRefused()
   }
 
   test("generator is deterministic and stream twin matches batch schema") {
