@@ -61,7 +61,7 @@ object PqScaleBench {
 
     // ------------------------------------------- one-off index builds
     val (tEncode, encoded) = timed {
-      val e = SimOps.pqEncoded(spark, dir, fast = true)
+      val e = SimOps.pqEncoded(spark, dir)
         .transform(Checkpoints.truncate)
       e.count()
       e

@@ -12,8 +12,7 @@ import org.apache.spark.sql.types._
   * the strict `<` fold keeping the SMALLEST code on micro-unit ties.
   *
   * Bit-identical to the interpreted higher-order form
-  * (SimOps.pqCodesCol) and to the broadcast mapPartitions fast path
-  * (SimOps.pqEncoded fast=true) — same strict left-to-right (x−c)² sum,
+  * (SimOps.pqCodesCol) — same strict left-to-right (x−c)² sum,
   * same non-negative half-up micro-rounding (`Math.round` ≡ DuckDB
   * `round` on non-negatives), same tie law — but a first-class Catalyst
   * expression with `doGenCode`, so the encode fuses into whole-stage

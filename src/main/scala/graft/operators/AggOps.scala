@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -304,27 +304,18 @@ object AggOps extends OpModule {
     *
     * Shape at scale: distinct-key hash aggregate (scalable, the same
     * shuffle exact count-distinct needs per group) feeding the
-    * bounded-heap [[graft.functions.TopKByScore]] aggregator with
-    * score = −hash — partial state is ≤ k entries per (group ×
-    * partition), mergeable, so the final shuffle carries k values per
-    * group instead of the distinct key set. Groups with ≤ k keys are
-    * exact by construction.
+    * bounded-heap [[graft.plans.TopKPerGroup]] operator ([[kmvSketch]])
+    * — partial heaps hold ≤ k rows per (group × partition), so the
+    * final shuffle carries k rows per group instead of the distinct key
+    * set. Groups with ≤ k keys are exact by construction.
     */
   def kmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TopKByScore
     val k = 64
-    val dist = Tables.lineitem(s, dir)
-      .select(col("l_returnflag"), col("l_partkey")).distinct()
-      .withColumn("hv", expr(
-        "CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 8), 16, 10) AS BIGINT)"))
-    val topk = udaf(TopKByScore.TopKAgg(k),
-      Encoders.product[TopKByScore.ScoredId])
-    dist.groupBy(col("l_returnflag"))
-      .agg(topk(col("hv"), -col("hv").cast("double")).as("top"),
-        count(lit(1)).as("n_exact"))
-      .withColumn("kth_hash",
-        element_at(col("top"), least(lit(k), col("n_exact")).cast("int"))
-          .getField("id"))
+    val dist = kmvHashes(s, dir)
+    dist.groupBy(col("l_returnflag")).agg(count(lit(1)).as("n_exact"))
+      .join(kmvSketch(dist, k), "l_returnflag")
+      // the sketch holds min(k, n_exact) hashes: its last is the kth
+      .withColumn("kth_hash", element_at(col("sk"), -1))
       .select(col("l_returnflag"), col("n_exact"), col("kth_hash"),
         // kth_hash = 0 (p ≈ n/2³² per group) would hit Spark's non-ANSI
         // divide-by-zero NULL vs DuckDB's IEEE double rules — guard the
@@ -336,6 +327,25 @@ object AggOps extends OpModule {
           .as("kmv_estimate"))
       .orderBy(col("l_returnflag"))
   }
+
+  /** Distinct (l_returnflag, l_partkey) rows with `hv`, the md5-derived
+    * 32-bit hash both KMV queries sketch. */
+  private def kmvHashes(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .select(col("l_returnflag"), col("l_partkey")).distinct()
+      .withColumn("hv", expr(
+        "CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 8), 16, 10) AS BIGINT)"))
+
+  /** Per-flag bottom-k sketch `sk`: the k smallest `hv` of [[kmvHashes]]
+    * rows, ascending. The native top-k keeps them (hv ascending, ties on
+    * l_partkey, unique per flag after the distinct); equal hashes of
+    * two keys both stay, as in DuckDB's `list_sort(list(hv))[:k]`.
+    */
+  private def kmvSketch(dist: DataFrame, k: Int): DataFrame =
+    graft.plans.TopKPerGroup(dist, Seq("l_returnflag"), "hv",
+      descending = false, "l_partkey", k)
+      .groupBy(col("l_returnflag"))
+      .agg(sort_array(collect_list(col("hv"))).as("sk"))
 
   /** KMV sketch SET ALGEBRA — the property that makes sketches the
     * 100 TB answer: two groups' bottom-64 sketches MERGE into the union's
@@ -357,19 +367,8 @@ object AggOps extends OpModule {
     * partial-aggregated sketch build above the join.
     */
   def kmvSetops(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TopKByScore
     val k = 64
-    val dist = Tables.lineitem(s, dir)
-      .select(col("l_returnflag"), col("l_partkey")).distinct()
-      .withColumn("hv", expr(
-        "CAST(conv(substring(md5(CAST(l_partkey AS STRING)), 1, 8), 16, 10) AS BIGINT)"))
-    val topk = udaf(TopKByScore.TopKAgg(k),
-      Encoders.product[TopKByScore.ScoredId])
-    // score = −hash ⇒ the array comes out hash-ascending: the bottom-k
-    val sk = dist.groupBy(col("l_returnflag"))
-      .agg(topk(col("hv"), -col("hv").cast("double")).as("top"))
-      .select(col("l_returnflag"),
-        expr("transform(top, x -> x.id)").as("sk"))
+    val sk = kmvSketch(kmvHashes(s, dir), k)
     sk.as("a")
       .join(sk.as("b"), col("a.l_returnflag") < col("b.l_returnflag"))
       .select(col("a.l_returnflag").as("flag_a"),

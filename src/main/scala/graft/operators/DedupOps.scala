@@ -228,9 +228,10 @@ object DedupOps extends OpModule {
 
   /** [[spanScrub]] over an arbitrary `(doc_id, text)` frame — the spec /
     * probe entry point. `legacyProbe = true` restores the pre-r14
-    * per-token linear scan of the raw start list, kept ONLY so
-    * [[graft.SpanScrubProbe]] can measure the asymptotic gap on a
-    * planted pathological doc (it is never a query path).
+    * per-token linear scan of the raw start list — never a query path:
+    * it is the reference Round14OpsSpec compares the gap-slice scrub
+    * against (on a planted pathological doc the two measured 92.9 s vs
+    * 1.8 s, BENCH_spanscrub_patho_r14.json).
     */
   private[graft] def spanScrubFrame(docsIn: DataFrame,
       legacyProbe: Boolean = false): DataFrame = {
@@ -298,7 +299,7 @@ object DedupOps extends OpModule {
     * uncovered GAPS between runs and flattening, O(L + I) per doc with
     * I = contaminated runs and NO per-token lambda at all. Two designs
     * this replaced, both measured on the planted 50k-token duplicated
-    * doc ([[graft.SpanScrubProbe]]): (a) the original per-token
+    * doc (BENCH_spanscrub_patho_r14.json): (a) the original per-token
     * `exists` over the raw start list — O(L·S), 96 s at the
     * pathological point (S ≈ L); (b) a per-token exists over the merged
     * intervals — O(L·I) ON PAPER, but `CollapseProject` inlines the
@@ -881,12 +882,12 @@ object DedupOps extends OpModule {
 
   /** [[clustersFromEdges]] returning (labels, rounds-executed) — the
     * round count is the scale variable for iterative CC (a 100 TB run
-    * pays one edge-join shuffle per round), so benches record it
-    * ([[graft.CcChainBench]]) instead of inferring it from wall time.
+    * pays one edge-join shuffle per round), so it is recorded directly
+    * (CCCHAIN_r15.json) instead of inferred from wall time.
     * `jump = false` disables the pointer-jump step — plain min-label
-    * propagation, whose round count IS the component diameter; it exists
-    * as the measured CONTRAST for the jump's O(log d) claim, never a
-    * production path.
+    * propagation, whose round count IS the component diameter; never a
+    * production path, it is the reference Round15OpsSpec holds the
+    * jump's O(log d) round count against.
     */
   private[graft] def clustersFromEdgesCounted(pairs: DataFrame,
       roundCap: Int = 20, jump: Boolean = true): (DataFrame, Int) = {

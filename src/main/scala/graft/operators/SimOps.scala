@@ -45,14 +45,14 @@ object SimOps extends OpModule {
     *
     * Runs through the NATIVE bounded-heap operator
     * ([[graft.plans.TopKPerGroup]]: codegen'd (score, tie) projection,
-    * partial heaps before the exchange) instead of the typed
-    * [[graft.functions.TopKByScore]] Aggregator the family used through
-    * r18 — the ObjectHashAggregate form paid an encoder conversion plus
-    * a per-input-row Seq sort in interpreted code for every scored
-    * pair, the r18 verdict's top item (zero WholeStageCodegen through
-    * the pq pipelines). Output is identical row-for-row: the heap's
-    * keep-order (score desc|asc, id asc, NaN greatest-and-equal for
-    * doubles) matches the Aggregator's comparator on every score this
+    * partial heaps before the exchange) instead of the typed bounded-heap
+    * Aggregator the family used through r18 — the ObjectHashAggregate
+    * form paid an encoder conversion plus a per-input-row Seq sort in
+    * interpreted code for every scored pair, the r18 verdict's top item
+    * (zero WholeStageCodegen through the pq pipelines). Output is
+    * identical row-for-row: the heap's keep-order (score desc|asc, id
+    * asc, NaN greatest-and-equal for doubles) matches the Aggregator's
+    * comparator on every score this
     * family produces — integer ADC/RRF micros exactly, and cosines,
     * whose strict-fold dots start at +0.0 so the one place the two
     * orderings could differ (−0.0 vs 0.0: Double.compare separates
@@ -479,9 +479,9 @@ object SimOps extends OpModule {
     * broadcast quantizer literal ([[driverSeeds]]) — a map-only stage, no
     * join/shuffle/window touches the corpus. The only window left ranks
     * the 10 probe cells per query (a ~200-row broadcast-side frame), and
-    * the final per-query top-5 runs through the bounded-heap
-    * [[graft.functions.TopKByScore]] aggregator so the shuffle carries 5
-    * rows per (query × partition), not the scored candidate set.
+    * the final per-query top-5 runs through the native bounded-heap
+    * [[graft.plans.TopKPerGroup]] ([[rankTopK]]) so the shuffle carries
+    * 5 rows per (query × partition), not the scored candidate set.
     */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
     val (centroids, assigned) = annIndex(s, dir)
@@ -698,12 +698,6 @@ object SimOps extends OpModule {
       .map { case (id, u) => (id, u.toArray) }.toArray
     val nPivots = math.ceil(math.sqrt(nSeeds.toDouble)).toInt
     val pivots = seeds.take(nPivots).map(_._2)
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0; var i = 0
-      while (i < n) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     // driver-side: hang every cell seed on its nearest pivot (same
     // neg/NaN/first-wins semantics as the corpus argmax)
     val groups = Array.fill(nPivots)(
@@ -712,7 +706,7 @@ object SimOps extends OpModule {
       var bestNeg = Double.PositiveInfinity; var bestP = 0; var p = 0
       var first = true
       while (p < nPivots) {
-        val d = dot(v, pivots(p))
+        val d = ddotF(v, pivots(p))
         val neg = if (d.isNaN) Double.NegativeInfinity else -d
         if (first || neg < bestNeg) { bestNeg = neg; bestP = p; first = false }
         p += 1
@@ -738,7 +732,7 @@ object SimOps extends OpModule {
           val negs = new Array[Double](pvs.length)
           var p = 0
           while (p < pvs.length) {
-            val d = dot(vd, pvs(p))
+            val d = ddotF(vd, pvs(p))
             negs(p) = if (d.isNaN) Double.NegativeInfinity else -d
             p += 1
           }
@@ -761,7 +755,7 @@ object SimOps extends OpModule {
             var m = 0
             while (m < members.length) {
               val (sid, u) = members(m)
-              val d = dot(vd, u)
+              val d = ddotF(vd, u)
               val neg = if (d.isNaN) Double.NegativeInfinity else -d
               if (firstOverall || neg < bestNeg ||
                   (neg == bestNeg && sid < bestSid)) {
@@ -1676,6 +1670,8 @@ object SimOps extends OpModule {
     * (ties to the SMALLEST code — the strict `<` fold keeps the first
     * minimum, mirrored by the oracle's `ORDER BY d, k` window). One
     * narrow projection: 8 × K 8-dim distances per vector, no join.
+    * Runs interpreted, so no query ships it: it is the analyzable
+    * reference the compiled [[pqEncoded]] codes are spec-pinned to.
     */
   private[graft] def pqCodesCol(cbLit: Column, k: Int = pqCodes): Column =
     transform(sequence(lit(0), lit(pqSubspaces - 1)), m =>
@@ -1689,37 +1685,22 @@ object SimOps extends OpModule {
 
   /** The PQ-encoded corpus frame (vec_id, embedding, norm, codes) — the
     * artifact a production index persists alongside
-    * [[embedSnapshotArtifacts]]. Two BIT-IDENTICAL paths (spec-pinned —
-    * the [[annIndexWithImpl]] precedent): the EXPRESSION form
-    * ([[pqCodesCol]] — the fully analyzable definition the oracle SQL
-    * mirrors and the Round16OpsSpec pin compares against) and the
-    * compiled form every product call site ships (r19 — the HOF encode
-    * alone was ~0.5 s of llm_ann_pq's 1.1 s wall at sf0.1):
-    * higher-order lambdas run interpreted with no codegen, and the
+    * [[embedSnapshotArtifacts]]. The codes come from the codegen'd
+    * [[graft.functions.PqEncode]] expression with the codebook as a
+    * constructor constant — bit-identical to the EXPRESSION form
+    * ([[pqCodesCol]], the fully analyzable definition the oracle SQL
+    * mirrors; Round16OpsSpec pins the two): per (m,k) a strict
+    * left-to-right (x−c)² sum, micro-rounded (non-negative half-up)
+    * BEFORE the strict-< argmin that keeps the smallest code on ties.
+    * The higher-order-lambda form runs interpreted with no codegen: it
+    * was ~0.5 s of llm_ann_pq's 1.1 s wall at sf0.1 (r19), and the
     * 1M-vector encode (128 8-dim distances each) measured >25 min
-    * interpreted vs seconds compiled. Same math, same order: per (m,k)
-    * a strict left-to-right (x−c)² sum, micro-rounded BEFORE the
-    * strict-< argmin that keeps the smallest code on ties.
+    * interpreted vs seconds compiled.
     */
-  private[graft] def pqEncoded(s: SparkSession, dir: String,
-      fast: Boolean = false): DataFrame = {
-    val emb = withNorm(Tables.embeddings(s, dir))
+  private[graft] def pqEncoded(s: SparkSession, dir: String): DataFrame =
+    withNorm(Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding"), col("norm"))
-    if (!fast)
-      emb.withColumn("codes", pqCodesCol(typedlit(pqCodebook(s, dir))))
-    else
-      // the compiled path is now the codegen'd [[graft.functions
-      // .PqEncode]] expression — same strict (x−c)² fold, same
-      // non-negative half-up micro-rounding, same smallest-code tie law
-      // as the HOF form above (Round16OpsSpec pins the two
-      // bit-identical), but fused into whole-stage codegen with the
-      // codebook as a constructor constant. It replaces the r16
-      // mapPartitions form: identical math, but no Dataset API break,
-      // no broadcast bookkeeping, and the encode now composes with any
-      // downstream expression in one codegen stage.
-      emb.withColumn("codes", pqEncode(col("embedding"),
-        pqCodebook(s, dir)))
-  }
+      .withColumn("codes", pqEncode(col("embedding"), pqCodebook(s, dir)))
 
   /** The (q_id, lut) query frame with LUTs built DRIVER-side
     * ([[lutFlatOf]]) — bit-identical to projecting [[pqLutCol]] over the
@@ -1728,8 +1709,9 @@ object SimOps extends OpModule {
     * the expression form through the exhaustive-probe ≡ llm_ann_pq8
     * identity). Exists because the expression form evaluates 8·K
     * interpreted lambda distances per query row — ~2.5 s of the 3.9 s
-    * llm_ann_pq8 wall at 256-code books (PqStageProbe, r18) — while the
-    * driver loop over the request-sized query batch is milliseconds.
+    * llm_ann_pq8 wall at 256-code books (r18 stage split, PERF.md) —
+    * while the driver loop over the request-sized query batch is
+    * milliseconds.
     */
   private def pqLutFrameDriver(s: SparkSession, dir: String,
       cb: Seq[Seq[Seq[Double]]], queryPred: Column): DataFrame = {
@@ -1798,13 +1780,13 @@ object SimOps extends OpModule {
     // it runs once per corpus row: un-materialized, the encode sits on
     // the ADC join's stream side, and whole-stage codegen defers
     // non-condition stream columns INTO the per-build-row loop — the
-    // r19 PqStageProbe measured graft_pq_encode re-running once per
+    // r19 stage split measured graft_pq_encode re-running once per
     // joined PAIR (join_only 0.27 s vs join+ADC 2.7 s on the 256-code
     // twin; the served twins, which stream stored codes, never paid
     // this). The pin is the served artifact's exact content, built
     // in-query (guide §1.2: don't compute things 20×).
     annPqOn(s, dir, graft.Checkpoints.truncate(
-      pqEncoded(s, dir, fast = true)
+      pqEncoded(s, dir)
         .select(col("vec_id"), col("codes"))))
 
   /** [[annPq]] serving from the PERSISTED code artifact: the encoded
@@ -1819,14 +1801,14 @@ object SimOps extends OpModule {
     */
   def annPqServed(s: SparkSession, dir: String): DataFrame = {
     val root = ArtifactStore.cached("pq_codes", dir) { out =>
-      pqEncoded(s, dir, fast = true).write.mode("overwrite")
+      pqEncoded(s, dir).write.mode("overwrite")
         .parquet(s"$out/encoded.parquet")
     }
     annPqOn(s, dir, s.read.parquet(s"$root/encoded.parquet"))
   }
 
   /** [[annPq]] over a prepared encoded frame — stress tiers pass the
-    * checkpointed fast-encode artifact so the one-off encode cost is
+    * checkpointed [[pqEncoded]] artifact so the one-off encode cost is
     * timed separately from the per-query ADC scan (exactly how a
     * production index amortizes it).
     */
@@ -1851,7 +1833,7 @@ object SimOps extends OpModule {
     // exactly this identity). The expression form evaluated 8·K
     // interpreted lambda distances per query row inside the broadcast
     // build — at 256-code books that was ~2.5 s of the 3.9 s
-    // llm_ann_pq8 wall (PqStageProbe, r18: join_only 0.49 s vs
+    // llm_ann_pq8 wall (r18 stage split, PERF.md: join_only 0.49 s vs
     // scan_adc 3.0 s). The query batch is request-sized (the
     // [[trainSample]] bounded-collect class), so the driver loop is
     // O(|queries| · 8K), corpus-independent.
@@ -1859,79 +1841,6 @@ object SimOps extends OpModule {
     val scored = broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
       .withColumn("adc_micro", pqAdcCol)
     rankTopK(scored, "vec_id", "adc_micro", descending = false, 5)
-  }
-
-  /** The join+ADC stage of [[annPq8]] WITHOUT the top-k aggregate — a
-    * probe surface for [[graft.PqStageProbe]] so the scan and the
-    * aggregate cost separately (round-18 measurement).
-    */
-  private[graft] def pq8AdcScanProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"),
-        pqLutCol(typedlit(cb), cb.head.size).as("lut"))
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .withColumn("adc_micro", pqAdcCol)
-      .select(col("q_id"), col("vec_id"), col("adc_micro"))
-  }
-
-  /** [[pq8AdcScanProbe]] with the DRIVER-built LUT frame — the shipped
-    * query's join+ADC stage without the top-k aggregate, so the r19
-    * probe can split "ADC projection" from "aggregate" under the LUT
-    * form the query actually runs (the r18 probe's expression-LUT stage
-    * conflated the interpreted LUT build with the scan).
-    */
-  private[graft] def pq8AdcScanDriverProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = pqLutFrameDriver(s, dir, cb, col("vec_id") < 20)
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .withColumn("adc_micro", pqAdcCol)
-      .select(col("q_id"), col("vec_id"), col("adc_micro"))
-  }
-
-  /** Driver-local (q_id, lut-as-nested-seq) pairs — probe surface. */
-  private[graft] def pq8LutsLocal(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): Seq[(Long, Seq[Seq[Long]])] = {
-    import s.implicits._
-    val kCodes = cb.head.size
-    val cbArr = cb.map(_.map(_.toArray).toArray).toArray
-    Tables.embeddings(s, dir).filter(col("vec_id") < 20)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
-      .map { case (id, v) =>
-        val flat = lutFlatOf(v.map(_.toDouble), cbArr)
-        (id, (0 until pqSubspaces).map(m =>
-          flat.slice(m * kCodes, (m + 1) * kCodes).toSeq))
-      }
-  }
-
-  /** [[pq8AdcScanDriverProbe]] with the 8-lookup ADC loop replaced by a
-    * SINGLE lut entry read — isolates "carrying the 16 KB lut through
-    * the join" from "the ADC loop" (probe surface, r19 measurement).
-    */
-  private[graft] def pq8JoinLutOneLookupProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = pqLutFrameDriver(s, dir, cb, col("vec_id") < 20)
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"),
-        element_at(element_at(col("lut"), 1), 1).as("one"))
-  }
-
-  /** The same join WITHOUT the ADC column — column pruning then drops
-    * the LUT from the broadcast side, isolating pure join mechanics
-    * (probe surface, round-18 measurement).
-    */
-  private[graft] def pq8JoinOnlyProbe(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
-    val corpus = pq8Encoded(s, dir, cb).select(col("vec_id"), col("codes"))
-    val qs = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"),
-        pqLutCol(typedlit(cb), cb.head.size).as("lut"))
-    broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id"))
   }
 
   /** Trained-codebook PQ geometry (the Jégou et al. standard the r16
@@ -2458,7 +2367,7 @@ object SimOps extends OpModule {
     // shortlist reads codes, the exact re-rank reads embedding+norm) —
     // the [[annPq]] deferral reason applies to the shortlist join
     val encoded = encodedOpt.getOrElse(
-      graft.Checkpoints.truncate(pqEncoded(s, dir, fast = true)))
+      graft.Checkpoints.truncate(pqEncoded(s, dir)))
     // LUTs driver-built ([[pqLutFrameDriver]] — the annPqOnCb move);
     // the exact-rerank stage reads q_emb/q_norm from the expression
     // domain unchanged
@@ -2506,7 +2415,7 @@ object SimOps extends OpModule {
     // would re-run once per matched pair on the join's stream side);
     // callers passing a prepared store keep their own materialization
     val corpus = encodedOpt.getOrElse(graft.Checkpoints.truncate(
-        pqEncoded(s, dir, fast = true).select(col("vec_id"),
+        pqEncoded(s, dir).select(col("vec_id"),
           col("embedding"), col("codes"))))
       .withColumn("cell",
         array_min(transform(seedsLit, sd =>
@@ -2594,15 +2503,6 @@ object SimOps extends OpModule {
     import s.implicits._
     val seeds = driverSeeds(s, dir, cells)
       .map { case (id, u) => (id, u.toArray) }.toArray
-    // local def: the mapPartitions closure below must stay
-    // self-contained (capturing an object method would drag the whole
-    // module into the serialized closure)
-    def ddot(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0; var i = 0
-      while (i < n) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     val (pivots, groupsArr) = pivotGroups(seeds)
     val bc = s.sparkContext.broadcast((pivots, groupsArr))
     releaseQuantizerBroadcasts()
@@ -2619,7 +2519,7 @@ object SimOps extends OpModule {
           val negs = new Array[Double](pvs.length)
           var p = 0
           while (p < pvs.length) {
-            val d = ddot(vd, pvs(p))
+            val d = ddotF(vd, pvs(p))
             negs(p) = if (d.isNaN) Double.NegativeInfinity else -d
             p += 1
           }
@@ -2642,7 +2542,7 @@ object SimOps extends OpModule {
             var m = 0
             while (m < members.length) {
               val (sid, u) = members(m)
-              val d = ddot(vd, u)
+              val d = ddotF(vd, u)
               val neg = if (d.isNaN) Double.NegativeInfinity else -d
               if (firstOverall || neg < bestNeg ||
                   (neg == bestNeg && sid < bestSid)) {
@@ -2837,12 +2737,6 @@ object SimOps extends OpModule {
     import s.implicits._
     val seeds = driverSeeds(s, dir, cells)
       .map { case (id, u) => (id, u.toArray) }.toArray
-    def ddot(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0; var i = 0
-      while (i < n) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     val (pivots, groupsArr) = pivotGroups(seeds)
     val bc = s.sparkContext.broadcast((pivots, groupsArr))
     releaseQuantizerBroadcasts()
@@ -2860,7 +2754,7 @@ object SimOps extends OpModule {
           val negs = new Array[Double](pvs.length)
           var p = 0
           while (p < pvs.length) {
-            val d = ddot(vd, pvs(p))
+            val d = ddotF(vd, pvs(p))
             negs(p) = if (d.isNaN) Double.NegativeInfinity else -d
             p += 1
           }
@@ -2883,7 +2777,7 @@ object SimOps extends OpModule {
             var m = 0
             while (m < members.length) {
               val (sid, u) = members(m)
-              val d = ddot(vd, u)
+              val d = ddotF(vd, u)
               val neg = if (d.isNaN) Double.NegativeInfinity else -d
               if (firstOverall || neg < bestNeg ||
                   (neg == bestNeg && sid < bestSid)) {
@@ -3111,6 +3005,10 @@ object SimOps extends OpModule {
     rankTopK(scored, "vec_id", "cosine", descending = true, 5)
   }
 
+  /** The one Array[Double] dot kernel (strict left-to-right fold).
+    * `mapPartitions` closures reach it through the module's static
+    * field, so calling it captures nothing.
+    */
   private def ddotF(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var acc = 0.0; var i = 0
@@ -3196,9 +3094,6 @@ object SimOps extends OpModule {
     "llm_semantic_dedup_incremental" ->
       ((s, dir) => semanticDedupIncremental(s, dir))
   )
-
-  private val dotSql =
-    "list_sum([%s.embedding[i]::DOUBLE * %s.embedding[i]::DOUBLE for i in range(1, 65)])"
 
   // lazy: oracleBase is declared below (keeping the literal next to its
   // family), so the derived map must not dereference it during object init

@@ -239,22 +239,24 @@ class EdgeCaseSpec extends SparkSpec {
   // Regression: the bounded-heap comparator must stay a strict weak
   // ordering under NaN (NaN greatest, NaN == NaN) — the naive >/== pair
   // made the kept set depend on partition merge order.
-  test("TopKByScore orders NaN deterministically regardless of arrival order") {
-    import graft.functions.TopKByScore._
-    val agg = TopKAgg(3)
-    val items = Seq(ScoredId(5, 0.9), ScoredId(2, Double.NaN),
-      ScoredId(7, 0.9), ScoredId(1, 0.1), ScoredId(9, Double.NaN))
-    def run(order: Seq[ScoredId]): Seq[ScoredId] = {
-      val (l, r) = order.splitAt(2)
-      agg.finish(agg.merge(
-        l.foldLeft(agg.zero)(agg.reduce),
-        r.foldLeft(agg.zero)(agg.reduce)))
+  test("TopKPerGroup orders NaN deterministically regardless of arrival order") {
+    import spark.implicits._
+    val items = Seq((5L, 0.9), (2L, Double.NaN), (7L, 0.9), (1L, 0.1),
+      (9L, Double.NaN))
+    // two partial heaps: the first partition holds the first 2 arrivals
+    def run(order: Seq[(Long, Double)]): Seq[Long] = {
+      val df = spark.sparkContext.parallelize(order, 2)
+        .toDF("id", "score").withColumn("g", lit(0))
+      assert(df.rdd.getNumPartitions == 2)
+      graft.plans.TopKPerGroup(df, Seq("g"), "score", descending = true,
+        "id", 3).collect().map(_.getAs[Long]("id")).toSeq
     }
     val a = run(items)
     val b = run(items.reverse)
     assert(a === b, s"merge-order sensitivity: $a vs $b")
-    // NaN ranks greatest (window ORDER BY score DESC semantics), id ties
-    assert(a.map(_.id) === Seq(2L, 9L, 5L))
+    // NaN ranks greatest (window ORDER BY score DESC semantics), id ties;
+    // the one group's rows come out best-first
+    assert(a === Seq(2L, 9L, 5L))
   }
 
   test("dedupNear on a tiny corpus (3 docs) does not explode or NPE") {

@@ -71,7 +71,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Exchange hashpartitioning(vec_id"), p)
     assert("Window \\[".r.findAllIn(p).length == 2, p)
     // final top-5 is the native partial+final bounded heap (r19 —
-    // replaced the ObjectHashAggregate TopKByScore form)
+    // replaced the typed ObjectHashAggregate top-k aggregator)
     assert(p.contains("TopKPerGroupPartial") &&
       p.contains("TopKPerGroupFinal"),
       "expect partial + final native top-k\n" + p)

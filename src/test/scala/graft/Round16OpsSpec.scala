@@ -185,11 +185,13 @@ class Round16OpsSpec extends SparkSpec {
 
   test("pqEncoded: the compiled fast path reproduces the expression " +
     "form's codes bit-for-bit") {
-    def codesOf(fast: Boolean): Map[Long, Seq[Long]] =
-      SimOps.pqEncoded(spark, sf0001, fast = fast).collect()
-        .map(r => r.getAs[Long]("vec_id") ->
-          r.getSeq[Long](r.fieldIndex("codes"))).toMap
-    assert(codesOf(fast = true) === codesOf(fast = false))
+    def codesOf(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.collect().map(r => r.getAs[Long]("vec_id") ->
+        r.getSeq[Long](r.fieldIndex("codes"))).toMap
+    val reference = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), SimOps.pqCodesCol(
+        typedlit(SimOps.pqCodebook(spark, sf0001))).as("codes"))
+    assert(codesOf(SimOps.pqEncoded(spark, sf0001)) === codesOf(reference))
   }
 
   test("annIvfPq: exhaustive probes (all 32 cells) reproduce annPq " +

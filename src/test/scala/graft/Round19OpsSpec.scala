@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Round-19 optimization pins: the native-TopKPerGroup ranking tail
-  * that replaced the typed TopKByScore aggregator across the ANN
+  * that replaced the typed bounded-heap aggregator across the ANN
   * family, the struct-min LPA vote that replaced the row_number window
   * (inherited CC/LPA loop-fuse commit), the Observation-riding CC
   * convergence count, and the Tables session-scoped frame memo.
@@ -13,14 +13,15 @@ class Round19OpsSpec extends SparkSpec {
 
   /** The exact comparator contract the r19 rankTopK swap rides: the
     * native bounded-heap operator + a rank window over its output must
-    * reproduce the typed TopKByScore aggregator row-for-row on a frame
-    * engineered with exact score TIES (id tiebreak), NaN scores (NaN
-    * ranks greatest and equal), and groups smaller than k.
+    * reproduce the plain window top-k
+    * (`row_number() over (partition by q_id order by score desc,
+    * vec_id asc) <= k`) row-for-row on a frame engineered with exact
+    * score TIES (id tiebreak), NaN scores (NaN ranks greatest and
+    * equal), and groups smaller than k.
     */
-  test("TopKPerGroup + rank window reproduces the TopKByScore " +
-    "aggregator on ties, NaNs and short groups") {
+  test("TopKPerGroup + rank window reproduces the row_number window " +
+    "top-k on ties, NaNs and short groups") {
     import spark.implicits._
-    import graft.functions.TopKByScore
     val rows = Seq(
       // q 1: exact ties at 2.0 — ids 12 < 15 must win the boundary
       (1L, 10L, 3.0), (1L, 12L, 2.0), (1L, 15L, 2.0), (1L, 11L, 2.0),
@@ -32,50 +33,36 @@ class Round19OpsSpec extends SparkSpec {
       (3L, 40L, 1.0), (3L, 41L, 2.0))
     val df = rows.toDF("q_id", "vec_id", "score")
     val k = 5
-    // the r18 form: typed aggregator + posexplode
-    val topk = org.apache.spark.sql.functions.udaf(
-      TopKByScore.TopKAgg(k),
-      org.apache.spark.sql.Encoders.product[TopKByScore.ScoredId])
-    val old = df.groupBy(col("q_id"))
-      .agg(topk(col("vec_id"), col("score")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rnk"),
-        col("col.id").as("neighbor_id"), col("col.score").as("score"))
-      .orderBy(col("q_id"), col("rnk"))
+    def ranked(in: org.apache.spark.sql.DataFrame, descending: Boolean) = {
+      val ord = if (descending) col("score").desc else col("score").asc
+      in.withColumn("rnk", row_number().over(
+          Window.partitionBy(col("q_id")).orderBy(ord, col("vec_id").asc)))
+        .select(col("q_id"), col("rnk"),
+          col("vec_id").as("neighbor_id"), col("score"))
+    }
+    // the reference: the window over the whole frame, cut at k
+    def reference(in: org.apache.spark.sql.DataFrame, descending: Boolean) =
+      ranked(in, descending).filter(col("rnk") <= k)
+        .orderBy(col("q_id"), col("rnk")).collect().toSeq.map(_.toSeq)
     // the r19 form: native heap + rank window (the rankTopK shape)
-    val kept = graft.plans.TopKPerGroup(df, Seq("q_id"), "score",
-      descending = true, "vec_id", k)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-    val niu = kept.withColumn("rnk", row_number().over(w))
-      .select(col("q_id"), col("rnk"),
-        col("vec_id").as("neighbor_id"), col("score"))
-      .orderBy(col("q_id"), col("rnk"))
-    val a = old.collect().toSeq.map(_.toSeq)
-    val b = niu.collect().toSeq.map(_.toSeq)
+    def native(in: org.apache.spark.sql.DataFrame, descending: Boolean) =
+      ranked(graft.plans.TopKPerGroup(in, Seq("q_id"), "score",
+          descending, "vec_id", k), descending)
+        .orderBy(col("q_id"), col("rnk")).collect().toSeq.map(_.toSeq)
+    val a = reference(df, descending = true)
+    assert(a.size == 12)
+    // the boundary ties and the NaN pair resolve on the id, ascending
+    assert(a.filter(_(0) == 1L).map(_(2)) == Seq(21L, 10L, 11L, 12L, 15L))
+    assert(a.filter(_(0) == 2L).map(_(2)) == Seq(30L, 31L, 32L, 33L, 34L))
     // NaN == NaN under toSeq equality? compare via string forms to keep
     // NaN rows comparable
-    assert(a.map(_.toString) == b.map(_.toString))
+    assert(a.map(_.toString) == native(df, descending = true).map(_.toString))
     // ascending-score twin (the integer-ADC orientation) — the engine's
     // ascending scores are integer ADC/RRF micros, NaN-free, so the
     // twin runs on the NaN-free slice of the fixture
     val dfNum = df.filter(!isnan(col("score")))
-    val oldAsc = dfNum.groupBy(col("q_id"))
-      .agg(topk(col("vec_id"), -col("score")).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rnk"),
-        col("col.id").as("neighbor_id"), (-col("col.score")).as("score"))
-      .orderBy(col("q_id"), col("rnk"))
-    val keptAsc = graft.plans.TopKPerGroup(dfNum, Seq("q_id"), "score",
-      descending = false, "vec_id", k)
-    val wAsc = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").asc, col("vec_id").asc)
-    val niuAsc = keptAsc.withColumn("rnk", row_number().over(wAsc))
-      .select(col("q_id"), col("rnk"),
-        col("vec_id").as("neighbor_id"), col("score"))
-      .orderBy(col("q_id"), col("rnk"))
-    assert(oldAsc.collect().toSeq.map(_.toSeq)
-      == niuAsc.collect().toSeq.map(_.toSeq))
+    assert(reference(dfNum, descending = false) ==
+      native(dfNum, descending = false))
   }
 
   /** The inherited loop-fuse commit's LPA vote: a lexicographic
