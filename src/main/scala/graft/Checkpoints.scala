@@ -20,6 +20,12 @@ import org.apache.spark.sql.DataFrame
   * fault-tolerance story changes.
   */
 object Checkpoints {
+  /** One task's worth of input: the ~8 MB per task that [[sizeTuned]]
+    * coalesces pins to, and the size below which
+    * `DeliverySemantics.upsert` merges in a single partition.
+    */
+  val BytesPerTask: Long = 8L << 20
+
   /** Plan-evidence hook for [[graft.PlanDump]] (r18 verdict item:
     * checkpointed plans print only the post-materialization scan, so
     * "one pinned pass" was inferred from code, not visible in the
@@ -84,7 +90,7 @@ object Checkpoints {
           .find(_.id == rdd.id) match {
           case Some(info) =>
             val bytes = info.memSize + info.diskSize
-            val target = math.max(1L, bytes / (8L << 20)).toInt
+            val target = math.max(1L, bytes / BytesPerTask).toInt
             if (target < rdd.getNumPartitions) ck.coalesce(target) else ck
           case None => ck
         }

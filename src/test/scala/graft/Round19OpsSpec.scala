@@ -17,7 +17,8 @@ class Round19OpsSpec extends SparkSpec {
     * (`row_number() over (partition by q_id order by score desc,
     * vec_id asc) <= k`) row-for-row on a frame engineered with exact
     * score TIES (id tiebreak), NaN scores (NaN ranks greatest and
-    * equal), and groups smaller than k.
+    * equal) — also NaNs that arrive at a full heap — and groups
+    * smaller than k.
     */
   test("TopKPerGroup + rank window reproduces the row_number window " +
     "top-k on ties, NaNs and short groups") {
@@ -30,7 +31,11 @@ class Round19OpsSpec extends SparkSpec {
       (2L, 31L, Double.NaN), (2L, 30L, Double.NaN), (2L, 32L, 9.0),
       (2L, 33L, 8.0), (2L, 34L, 7.0), (2L, 35L, 6.0),
       // q 3: fewer rows than k
-      (3L, 40L, 1.0), (3L, 41L, 2.0))
+      (3L, 40L, 1.0), (3L, 41L, 2.0),
+      // q 4: k finite scores fill the heap before the NaNs arrive, which
+      // must still displace its two weakest entries
+      (4L, 50L, 1.0), (4L, 51L, 2.0), (4L, 52L, 3.0), (4L, 53L, 4.0),
+      (4L, 54L, 5.0), (4L, 61L, Double.NaN), (4L, 60L, Double.NaN))
     val df = rows.toDF("q_id", "vec_id", "score")
     val k = 5
     def ranked(in: org.apache.spark.sql.DataFrame, descending: Boolean) = {
@@ -50,13 +55,18 @@ class Round19OpsSpec extends SparkSpec {
           descending, "vec_id", k), descending)
         .orderBy(col("q_id"), col("rnk")).collect().toSeq.map(_.toSeq)
     val a = reference(df, descending = true)
-    assert(a.size == 12)
+    assert(a.size == 17)
     // the boundary ties and the NaN pair resolve on the id, ascending
     assert(a.filter(_(0) == 1L).map(_(2)) == Seq(21L, 10L, 11L, 12L, 15L))
     assert(a.filter(_(0) == 2L).map(_(2)) == Seq(30L, 31L, 32L, 33L, 34L))
+    assert(a.filter(_(0) == 4L).map(_(2)) == Seq(60L, 61L, 54L, 53L, 52L))
     // NaN == NaN under toSeq equality? compare via string forms to keep
-    // NaN rows comparable
-    assert(a.map(_.toString) == native(df, descending = true).map(_.toString))
+    // NaN rows comparable. One partition keeps the rows' arrival order,
+    // so q 4's NaNs reach the heap only after it is full.
+    Seq(df, df.coalesce(1)).foreach { in =>
+      assert(a.map(_.toString) ==
+        native(in, descending = true).map(_.toString))
+    }
     // ascending-score twin (the integer-ADC orientation) — the engine's
     // ascending scores are integer ADC/RRF micros, NaN-free, so the
     // twin runs on the NaN-free slice of the fixture

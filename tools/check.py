@@ -9,6 +9,11 @@ against the Spark result parquet at <verifyOutDir>/<name>/.  Columns are
 sorted by name before comparison (same as the driver); values compared
 exactly after a canonical repr.  Exit code 1 on any mismatch.
 
+DuckDB runs under a fixed memory limit and spills to a temporary directory
+inside <verifyOutDir> (removed on exit). Operators that can spill do so
+there; an oracle whose working set cannot spill fails alone with an
+out-of-memory error instead of taking most of the host's memory.
+
 Driver-side-only dependency (duckdb) — NOT used by the library itself.
 """
 import duckdb
@@ -16,6 +21,10 @@ import glob
 import json
 import math
 import sys
+import tempfile
+
+# Well below DuckDB's default of 80 % of RAM.
+MEMORY_LIMIT = "4GB"
 
 
 def canon(v):
@@ -28,7 +37,17 @@ def canon(v):
 
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    with tempfile.TemporaryDirectory(prefix="duckdb_spill_",
+                                     dir=outdir) as spill:
+        con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
+                                     "temp_directory": spill})
+        failed, total = run(con, sfdir, outdir)
+        con.close()
+    print(f"\n{total - len(failed)}/{total} queries match")
+    sys.exit(1 if failed else 0)
+
+
+def run(con, sfdir, outdir):
     for p in sorted(glob.glob(f"{sfdir}/*.parquet")):
         name = p.split("/")[-1].replace(".parquet", "")
         con.execute(
@@ -75,8 +94,7 @@ def main():
             failed.append(name)
             continue
         print(f"OK   {name} ({len(grows)} rows)")
-    print(f"\n{len(oracle) - len(failed)}/{len(oracle)} queries match")
-    sys.exit(1 if failed else 0)
+    return failed, len(oracle)
 
 
 if __name__ == "__main__":
