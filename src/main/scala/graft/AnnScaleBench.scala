@@ -106,10 +106,10 @@ object AnnScaleBench {
       qFrame(col("vec_id") % 400 === 1), cents, store))
 
     val bits = SimOps.srpBitsPerBand(n)
-    val (tSrp, srp) = topSets(SimOps.annSrpWith(spark, dir, bits,
-      SimOps.srpBands, col("vec_id") < 20))
-    val plantedSrp = plantedRecall(SimOps.annSrpWith(spark, dir, bits,
-      SimOps.srpBands, col("vec_id") % 400 === 1))
+    val (tSrp, srp) = topSets(SimOps.annSrpMultiProbe(spark, dir, bits,
+      SimOps.srpBands, 0, col("vec_id") < 20))
+    val plantedSrp = plantedRecall(SimOps.annSrpMultiProbe(spark, dir,
+      bits, SimOps.srpBands, 0, col("vec_id") % 400 === 1))
 
     // SRP SERVED: persist the bits table once (the corpus-snapshot
     // artifact), then serve the 20-query batch from it — the steady

@@ -114,10 +114,12 @@ object StressProbe {
     // the proposal work as n grows past the fixture scale — plus the
     // adaptive path's recall against the brute-force answer.
     val bitsAdaptive = graft.operators.SimOps.srpBitsPerBand(n)
-    val candFixed = graft.operators.SimOps.srpCandidateCount(spark, dir, 4)
+    val candFixed = graft.operators.SimOps.srpCandidateCountMulti(
+      spark, dir, 4, graft.operators.SimOps.srpBands, 0)
     val candAdaptive =
       if (bitsAdaptive == 4) candFixed
-      else graft.operators.SimOps.srpCandidateCount(spark, dir, bitsAdaptive)
+      else graft.operators.SimOps.srpCandidateCountMulti(spark, dir,
+        bitsAdaptive, graft.operators.SimOps.srpBands, 0)
     val (tSrp, srp) = topSets(graft.operators.SimOps.annSrp(spark, dir))
     // PLANTED near-dup recall — the claim the adaptive sizing rests on,
     // measured instead of asserted: every 400th embedding is its
@@ -131,8 +133,8 @@ object StressProbe {
     // r8 probe didn't measure; iid `recall_srp` above is the other half).
     val plantedQs = (1L until n by 400L).toSeq
     def plantedRecall(bits: Int, bands: Int): Double = {
-      val got = graft.operators.SimOps.annSrpWith(spark, dir, bits, bands,
-        org.apache.spark.sql.functions.col("vec_id") % 400 === 1)
+      val got = graft.operators.SimOps.annSrpMultiProbe(spark, dir, bits,
+        bands, 0, org.apache.spark.sql.functions.col("vec_id") % 400 === 1)
         .collect().map(r => (r.getLong(0), r.getLong(2)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       plantedQs.count(q =>
@@ -147,11 +149,11 @@ object StressProbe {
     // recall back (each band is an independent collision chance) at 2×
     // table rows — the recall lever a corpus turns after a bits step-up
     val knobBands = 2 * graft.operators.SimOps.srpBands
-    val (tKnob, srpKnob) = topSets(graft.operators.SimOps.annSrpWith(
-      spark, dir, bitsAdaptive, knobBands,
+    val (tKnob, srpKnob) = topSets(graft.operators.SimOps.annSrpMultiProbe(
+      spark, dir, bitsAdaptive, knobBands, 0,
       org.apache.spark.sql.functions.col("vec_id") < 20))
-    val candKnob = graft.operators.SimOps.srpCandidateCount(
-      spark, dir, bitsAdaptive, knobBands)
+    val candKnob = graft.operators.SimOps.srpCandidateCountMulti(
+      spark, dir, bitsAdaptive, knobBands, 0)
     val plantedKnob = plantedRecall(bitsAdaptive, knobBands)
     // full recall-vs-bands CURVE at adaptive bits (4 → 16 bands): each
     // band is an independent collision chance, so planted recall should
@@ -163,11 +165,11 @@ object StressProbe {
     // neighbors are real near-dups runs the default; one hunting
     // marginal iid-like neighbors buys bands.
     val bandsCurve = Seq(4, 8, 12, 16).map { b =>
-      val (tB, setsB) = topSets(graft.operators.SimOps.annSrpWith(
-        spark, dir, bitsAdaptive, b,
+      val (tB, setsB) = topSets(graft.operators.SimOps.annSrpMultiProbe(
+        spark, dir, bitsAdaptive, b, 0,
         org.apache.spark.sql.functions.col("vec_id") < 20))
-      val candB = graft.operators.SimOps.srpCandidateCount(
-        spark, dir, bitsAdaptive, b)
+      val candB = graft.operators.SimOps.srpCandidateCountMulti(
+        spark, dir, bitsAdaptive, b, 0)
       s"""{"bands":$b,"bits":$bitsAdaptive,""" +
         s""""recall_iid":${recallOf(setsB)},""" +
         s""""planted_recall":${plantedRecall(bitsAdaptive, b)},""" +

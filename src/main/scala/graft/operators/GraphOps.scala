@@ -619,10 +619,13 @@ object GraphOps extends OpModule {
   /** The strong-edge census + three unrolled synchronous LPA rounds as a
     * WITH-prefix (ending at `l3`) — shared by the graph_label_prop and
     * graph_modularity oracles so the scored partition IS the emitted one
-    * on the oracle side too.
+    * on the oracle side too. Every CTE is MATERIALIZED: inlined, the
+    * rounds re-expand the census and DuckDB 1.0 runs graph_modularity
+    * out of memory at sf0.01 (work that does not spill); materialized,
+    * each step runs once, with the same rows.
     */
   private val lpaCtesSql: String =
-    """WITH edges AS (
+    """WITH edges AS MATERIALIZED (
       |  SELECT c_nationkey AS src, s_nationkey AS dst,
       |         CAST(count(*) AS BIGINT) AS w
       |  FROM lineitem
@@ -630,40 +633,42 @@ object GraphOps extends OpModule {
       |  JOIN orders ON l_orderkey = o_orderkey
       |  JOIN customer ON o_custkey = c_custkey
       |  GROUP BY 1, 2),
-      |und AS (
+      |und AS MATERIALIZED (
       |  SELECT least(src, dst) AS a, greatest(src, dst) AS b,
       |         CAST(sum(w) AS BIGINT) AS w
       |  FROM edges WHERE src <> dst GROUP BY 1, 2),
-      |m AS (SELECT CAST(sum(w) // count(*) AS BIGINT) AS mean_w FROM und),
-      |strong AS (
+      |m AS MATERIALIZED (
+      |  SELECT CAST(sum(w) // count(*) AS BIGINT) AS mean_w FROM und),
+      |strong AS MATERIALIZED (
       |  SELECT a, b FROM und, m WHERE w >= mean_w),
-      |sym AS (
+      |sym AS MATERIALIZED (
       |  SELECT a AS u, b AS v FROM strong
       |  UNION ALL SELECT b, a FROM strong),
-      |l0 AS (SELECT n_nationkey AS node, n_nationkey AS lbl FROM nation),
-      |v1 AS (SELECT e.u, l.lbl, count(*) AS cnt
+      |l0 AS MATERIALIZED (
+      |  SELECT n_nationkey AS node, n_nationkey AS lbl FROM nation),
+      |v1 AS MATERIALIZED (SELECT e.u, l.lbl, count(*) AS cnt
       |       FROM sym e JOIN l0 l ON l.node = e.v GROUP BY 1, 2),
-      |w1 AS (SELECT u AS node, lbl AS nl FROM (
+      |w1 AS MATERIALIZED (SELECT u AS node, lbl AS nl FROM (
       |         SELECT u, lbl, row_number() OVER (
       |           PARTITION BY u ORDER BY cnt DESC, lbl) AS rn FROM v1)
       |       WHERE rn = 1),
-      |l1 AS (SELECT l0.node, COALESCE(w1.nl, l0.lbl) AS lbl
+      |l1 AS MATERIALIZED (SELECT l0.node, COALESCE(w1.nl, l0.lbl) AS lbl
       |       FROM l0 LEFT JOIN w1 USING (node)),
-      |v2 AS (SELECT e.u, l.lbl, count(*) AS cnt
+      |v2 AS MATERIALIZED (SELECT e.u, l.lbl, count(*) AS cnt
       |       FROM sym e JOIN l1 l ON l.node = e.v GROUP BY 1, 2),
-      |w2 AS (SELECT u AS node, lbl AS nl FROM (
+      |w2 AS MATERIALIZED (SELECT u AS node, lbl AS nl FROM (
       |         SELECT u, lbl, row_number() OVER (
       |           PARTITION BY u ORDER BY cnt DESC, lbl) AS rn FROM v2)
       |       WHERE rn = 1),
-      |l2 AS (SELECT l1.node, COALESCE(w2.nl, l1.lbl) AS lbl
+      |l2 AS MATERIALIZED (SELECT l1.node, COALESCE(w2.nl, l1.lbl) AS lbl
       |       FROM l1 LEFT JOIN w2 USING (node)),
-      |v3 AS (SELECT e.u, l.lbl, count(*) AS cnt
+      |v3 AS MATERIALIZED (SELECT e.u, l.lbl, count(*) AS cnt
       |       FROM sym e JOIN l2 l ON l.node = e.v GROUP BY 1, 2),
-      |w3 AS (SELECT u AS node, lbl AS nl FROM (
+      |w3 AS MATERIALIZED (SELECT u AS node, lbl AS nl FROM (
       |         SELECT u, lbl, row_number() OVER (
       |           PARTITION BY u ORDER BY cnt DESC, lbl) AS rn FROM v3)
       |       WHERE rn = 1),
-      |l3 AS (SELECT l2.node, COALESCE(w3.nl, l2.lbl) AS lbl
+      |l3 AS MATERIALIZED (SELECT l2.node, COALESCE(w3.nl, l2.lbl) AS lbl
       |       FROM l2 LEFT JOIN w3 USING (node))""".stripMargin
 
   val oracle: Map[String, String] = Map(
@@ -679,19 +684,21 @@ object GraphOps extends OpModule {
     // operator order (e/m − (d/2m)·(d/2m), micro-quantized).
     "graph_modularity" -> (lpaCtesSql +
       """,
-        |mm AS (SELECT CAST(count(*) AS BIGINT) AS em FROM strong),
-        |le AS (SELECT s.a, s.b, la.lbl AS lbl_a, lb2.lbl AS lbl_b
+        |mm AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS em FROM strong),
+        |le AS MATERIALIZED (
+        |       SELECT s.a, s.b, la.lbl AS lbl_a, lb2.lbl AS lbl_b
         |       FROM strong s
         |       JOIN l3 la ON la.node = s.a
         |       JOIN l3 lb2 ON lb2.node = s.b),
-        |ec AS (SELECT lbl_a AS community_id,
+        |ec AS MATERIALIZED (SELECT lbl_a AS community_id,
         |              CAST(count(*) AS BIGINT) AS e_c
         |       FROM le WHERE lbl_a = lbl_b GROUP BY 1),
-        |dc AS (SELECT community_id, CAST(count(*) AS BIGINT) AS d_c
+        |dc AS MATERIALIZED (
+        |       SELECT community_id, CAST(count(*) AS BIGINT) AS d_c
         |       FROM (SELECT lbl_a AS community_id FROM le
         |             UNION ALL SELECT lbl_b FROM le)
         |       GROUP BY 1),
-        |sz AS (SELECT lbl AS community_id,
+        |sz AS MATERIALIZED (SELECT lbl AS community_id,
         |              CAST(count(*) AS BIGINT) AS n_nodes
         |       FROM l3 GROUP BY 1)
         |SELECT sz.community_id, sz.n_nodes,

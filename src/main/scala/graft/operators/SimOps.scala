@@ -18,11 +18,20 @@ import graft.functions.GraftFunctions.{dotProduct => dot, pqAdc, pqEncode}
   * DuckDB) so both engines produce bit-identical cosines — the ranking can
   * then be compared exactly.
   *
+  * Every ANN search has one shape: a candidate generator (brute force,
+  * IVF cells, SRP band buckets, PQ/IVFADC shortlists) × a scorer (exact
+  * `dotProduct` cosine or integer `pqAdc`) × an optional exact-cosine
+  * re-rank ([[exactCosineRerank]]), ending in the [[rankTopK]] heap. The
+  * generators share one coarse-quantizer law ([[cellArgMax]] and its
+  * scalar twin [[argMaxIndex]], the two-level [[walkCell]] /
+  * [[probeWalk]]) and one driver LUT builder ([[lutFlatOf]]).
+  *
   * Scale notes: the brute-force path broadcasts the (small) query set and
   * streams the corpus once — linear in corpus size, the right baseline.
-  * `llm_ann_ivf` is the scale path: rank the 10 label centroids per query,
-  * probe the top 3 cells, search only ~30% of the corpus; at 100 TB cells
-  * are parquet partitions and probing prunes partitions at the source.
+  * `llm_ann_ivf` is the scale path: rank the 10 refined cell centroids
+  * per query, probe the top 4 cells, search only ~40% of the corpus; at
+  * 100 TB cells are parquet partitions and probing prunes partitions at
+  * the source.
   * `llm_dedup_embed` demonstrates threshold near-dup; its all-pairs form is
   * only viable because the corpus is small — at scale it runs through the
   * same IVF/LSH bucketing.
@@ -127,10 +136,11 @@ object SimOps extends OpModule {
     raw.map { case (id, v, norm) => (id, v.map(_.toDouble / norm)) }
   }
 
-  /** Rank the broadcast quantizer against the row's `embedding` inside one
-    * array expression: score every seed in place and sort (score desc, seed
-    * id asc — array_sort on (neg_score, sid) structs). Narrow: the argmax /
-    * top-p cells come out of a projection, never a join + window.
+  /** Score every seed of the broadcast quantizer against the row's
+    * `embedding` inside one array expression, as orderable
+    * (neg_score, sid) structs: ascending struct order is (score desc,
+    * seed id asc). Narrow: the argmax / top-p cells come out of a
+    * projection, never a join + window.
     *
     * `nanvl(-score, -∞)` keeps NaN semantics identical to the window form
     * this replaced (`ORDER BY score DESC` ranks NaN greatest in Spark AND
@@ -142,11 +152,21 @@ object SimOps extends OpModule {
     * mapped NaN instead of losing to it — unreachable for finite-norm
     * vectors.
     */
-  private def rankedSeeds(seedsCol: Column): Column =
-    array_sort(transform(seedsCol, sd =>
+  private def seedKeys(seedsCol: Column): Column =
+    transform(seedsCol, sd =>
       struct(nanvl(-dot(col("embedding"), sd.getField("_2")),
           lit(Double.NegativeInfinity)).as("neg"),
-        sd.getField("_1").as("sid"))))
+        sd.getField("_1").as("sid")))
+
+  /** The row's flat argmax cell: the smallest [[seedKeys]] struct — NaN
+    * score best, smaller sid on ties. `array_min` is O(cells) per row
+    * where `element_at(array_sort(...), 1)` (the same value, structs are
+    * orderable) pays the O(cells·log cells) sort; at the 1M-vector ×
+    * 512-cell build the sort was the dominant term. Every oracle that
+    * replays an argmax assignment gates this law.
+    */
+  private def cellArgMax(seedsCol: Column): Column =
+    array_min(seedKeys(seedsCol)).getField("sid")
 
   /** Multi-probe quantizer knobs for [[dedupEmbed]]: 32 coarse cells, each
     * vector assigned to its 7 nearest cells; a pair is a candidate iff the
@@ -210,7 +230,7 @@ object SimOps extends OpModule {
     * than the population): 0.16 → 0.25 → 0.33 → 0.38 at 4/8/12/16
     * bands, ~linear, at proportionally growing candidate volume. A
     * deployment hunting marginal neighbors raises bands via
-    * [[annSrpWith]]; near-dup hunting keeps the 4-band default.
+    * [[annSrpMultiProbe]]; near-dup hunting keeps the 4-band default.
     */
   val srpBands = 4
   val srpTargetBucket = 128L
@@ -231,7 +251,7 @@ object SimOps extends OpModule {
     */
   private def probeCells(seedsCol: Column,
       probes: Int = dedupProbes): Column =
-    transform(slice(rankedSeeds(seedsCol), 1, probes),
+    transform(slice(array_sort(seedKeys(seedsCol)), 1, probes),
       p => p.getField("sid"))
 
   /** Multi-probe quantizer assignment, shared by every bucketed embedding
@@ -421,7 +441,7 @@ object SimOps extends OpModule {
     * the embedding counterpart of
     * [[graft.streaming.StreamingDedup.novelDocs]]'s anti-join, shaped for
     * unbounded input: the multi-probe assignment is a PURE PROJECTION
-    * (narrow, stateless — [[rankedSeeds]] runs unchanged on a stream),
+    * (narrow, stateless — [[seedKeys]] runs unchanged on a stream),
     * candidates come from a stream-static equi-join on the probe cell,
     * and the exact cosine runs only on candidates.
     *
@@ -558,93 +578,47 @@ object SimOps extends OpModule {
     */
   private[graft] val ivfLiteralCellBound = 64
 
-  /** Quantizer broadcasts from prior [[annIndexWithImpl]] builds in this
-    * JVM. Each new build unpersists (NOT destroys) the previous ones so
-    * executor block-manager memory holds at most one live quantizer in
-    * steady state; an unpersisted broadcast re-ships lazily from the
-    * driver if an old lazy frame is re-actioned, so correctness is
-    * unaffected.
+  /** Quantizer broadcasts from prior builds in this JVM. Each new build
+    * unpersists (NOT destroys) the previous ones so executor block-manager
+    * memory holds at most one live quantizer in steady state — repeated
+    * large-cell index builds in one JVM otherwise accumulate it (the r12
+    * bpeLoop cache-leak class); an unpersisted broadcast re-ships lazily
+    * from the driver if an old lazy frame is re-actioned, so correctness
+    * is unaffected.
     */
   private val liveQuantizerBcs =
     java.util.Collections.synchronizedList(
       new java.util.ArrayList[org.apache.spark.broadcast.Broadcast[_]]())
 
-  private def releaseQuantizerBroadcasts(): Unit = {
+  /** Broadcast a quantizer, releasing the previous builds' ones. */
+  private def quantizerBroadcast[T: scala.reflect.ClassTag](s: SparkSession,
+      q: T): org.apache.spark.broadcast.Broadcast[T] = {
     val it = liveQuantizerBcs.iterator()
     while (it.hasNext) { it.next().unpersist(false); it.remove() }
+    val bc = s.sparkContext.broadcast(q)
+    liveQuantizerBcs.add(bc)
+    bc
   }
 
   /** [[annIndexWith]] with the assignment path made explicit (specs pin
-    * the two paths bit-identical — see Round14OpsSpec). The broadcast
-    * argmax replays the literal form's exact semantics: strict
-    * left-to-right double dot ([[graft.functions.DotProduct]]), NaN
-    * score ranked best (`nanvl(-score, -∞)` under `array_min` ≡ "keep
-    * the smallest neg"), ties to the smaller seed id (seeds iterate in
-    * id order, strict `<` keeps the first).
+    * the two paths bit-identical — see Round14OpsSpec): the literal
+    * [[cellArgMax]] expression, or its scalar twin [[argMaxIndex]] over a
+    * broadcast quantizer — the same strict left-to-right double dot
+    * ([[graft.functions.DotProduct]]), NaN score best, ties to the
+    * smaller seed id.
     */
   private[graft] def annIndexWithImpl(s: SparkSession, dir: String,
       nSeeds: Int, broadcastAssign: Boolean): (DataFrame, DataFrame) = {
-    val emb = withNorm(Tables.embeddings(s, dir))
     val seeds = driverSeeds(s, dir, nSeeds)
-    // assignment needs only the ARGMAX cell, so take array_min of the
-    // same (neg_score, sid) structs [[rankedSeeds]] sorts — structs are
-    // orderable, min ≡ element_at(array_sort(...), 1) bit-for-bit —
-    // the llm_ann_ivf oracle replays the whole refined-centroid
-    // pipeline in DuckDB, so any divergence fails the gate — at
-    // O(cells) per row instead of the
-    // O(cells·log cells) full sort. At the 1M-vector × 512-cell build
-    // the sort was the dominant term; probes keep the sorted form (they
-    // need the top-4).
-    val assigned = (if (!broadcastAssign) {
-      val seedsLit = typedlit(seeds)
-      emb.withColumn("cell",
-        array_min(transform(seedsLit, sd =>
-          struct(nanvl(-dot(col("embedding"), sd.getField("_2")),
-              lit(Double.NegativeInfinity)).as("neg"),
-            sd.getField("_1").as("sid"))))
-          .getField("sid"))
-    } else {
-      import s.implicits._
-      val bc = s.sparkContext.broadcast(
-        seeds.map { case (id, u) => (id, u.toArray) }.toArray)
-      // Evict the PREVIOUS build's quantizer blocks from the executors:
-      // repeated large-cell index builds in one JVM otherwise accumulate
-      // block-manager memory (the r12 bpeLoop cache-leak class). Plain
-      // unpersist, never destroy — an older assignment frame re-actioned
-      // later just re-fetches its quantizer from the driver.
-      releaseQuantizerBroadcasts()
-      liveQuantizerBcs.add(bc)
-      emb.select(col("vec_id"), col("embedding"), col("norm"))
-        .as[(Long, Array[Float], Double)]
-        .mapPartitions { it =>
-          val sds = bc.value
-          it.map { case (id, v, nrm) =>
-            // first seed initializes (≡ array_min over a non-empty
-            // array); later seeds win only on a strictly smaller neg —
-            // equal scores keep the earlier (smaller) sid, the struct
-            // ordering's tiebreak
-            var bestNeg = Double.PositiveInfinity
-            var bestSid = Long.MaxValue
-            var first = true
-            var k = 0
-            while (k < sds.length) {
-              val u = sds(k)._2
-              val n = math.min(v.length, u.length)
-              var acc = 0.0
-              var i = 0
-              while (i < n) { acc += v(i).toDouble * u(i); i += 1 }
-              val neg =
-                if (acc.isNaN) Double.NegativeInfinity else -acc
-              if (first || neg < bestNeg) {
-                bestNeg = neg; bestSid = sds(k)._1; first = false
-              }
-              k += 1
-            }
-            (id, v, nrm, bestSid)
-          }
-        }
-        .toDF("vec_id", "embedding", "norm", "cell")
-    }).select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
+    val cell = if (!broadcastAssign) cellArgMax(typedlit(seeds)) else {
+      val bc = quantizerBroadcast(s,
+        (seeds.map(_._1).toArray, seeds.map(_._2.toArray).toArray))
+      udf((v: Seq[Float]) =>
+        bc.value._1(argMaxIndex(toDoubles(v), bc.value._2)))
+        .asNonNullable()(col("embedding"))
+    }
+    val assigned = withNorm(Tables.embeddings(s, dir))
+      .select(col("vec_id"), col("embedding"), col("norm"), cell.as("cell"))
     (centroidsOf(assigned), assigned)
   }
 
@@ -665,6 +639,129 @@ object SimOps extends OpModule {
       .groupBy(col("cell"))
       .agg(array_sort(collect_list(struct(col("pos"), col("v"))))
         .getField("v").as("centroid"))
+
+  /** A seed's score as an ascending sort key: −dot, with a NaN dot
+    * mapped to −∞ (ranked best) — the scalar form of [[seedKeys]].
+    */
+  private def negScore(vd: Array[Double], u: Array[Double]): Double = {
+    val d = ddotF(vd, u)
+    if (d.isNaN) Double.NegativeInfinity else -d
+  }
+
+  private def toDoubles(v: Seq[Float]): Array[Double] = {
+    val vd = new Array[Double](v.length)
+    var i = 0
+    v.foreach { x => vd(i) = x.toDouble; i += 1 }
+    vd
+  }
+
+  /** Driver- and executor-side flat argmax: the index of the unit vector
+    * `vd` scores highest against — the [[cellArgMax]] law in scalar code
+    * (NaN best, strict `<` keeps the first of equal scores, so with ids
+    * ascending ties go to the smaller sid).
+    */
+  private def argMaxIndex(vd: Array[Double],
+      units: Array[Array[Double]]): Int = {
+    var bestNeg = Double.PositiveInfinity
+    var best = 0
+    var i = 0
+    while (i < units.length) {
+      val neg = negScore(vd, units(i))
+      if (neg < bestNeg) { bestNeg = neg; best = i }
+      i += 1
+    }
+    best
+  }
+
+  /** A seed quantizer grouped for the two-level walks: (pivots, groups),
+    * where the pivots are the first ⌈√cells⌉ seeds and group p holds the
+    * (sid, unit) seeds whose nearest pivot is p, sids ascending.
+    */
+  private type PivotGroups =
+    (Array[Array[Double]], Array[Array[(Long, Array[Double])]])
+
+  /** Driver-side grouping of the `cells`-seed quantizer: each seed hangs
+    * on its [[argMaxIndex]] pivot — a pass over the seed array, trivial
+    * next to any corpus pass. The build walk and the query probe walk
+    * read the SAME grouping: a query that ranks raw seeds exhaustively
+    * while the corpus assigned through pivot groups probes cells its
+    * neighbors were never assigned to (measured: planted recall 0.908 at
+    * 1M/1024 cells before the query side was group-restricted).
+    */
+  private def pivotGroups(s: SparkSession, dir: String,
+      cells: Int): PivotGroups = {
+    val seeds = driverSeeds(s, dir, cells)
+      .map { case (id, u) => (id, u.toArray) }.toArray
+    val pivots = seeds.take(math.ceil(math.sqrt(cells.toDouble)).toInt)
+      .map(_._2)
+    val groups = seeds.groupBy { case (_, u) => argMaxIndex(u, pivots) }
+    (pivots, pivots.indices.map(p =>
+      groups.getOrElse(p, Array.empty[(Long, Array[Double])])
+        .sortBy(_._1)).toArray)
+  }
+
+  /** The `coarseProbes` pivots nearest `vd`, best first (ties to the
+    * lower pivot index) — a w-pass selection over the pivot scores
+    * (w ≤ 4 in practice; no heap needed).
+    */
+  private def topPivots(vd: Array[Double], pivots: Array[Array[Double]],
+      coarseProbes: Int): Array[Int] = {
+    val negs = pivots.map(negScore(vd, _))
+    val taken = new Array[Boolean](pivots.length)
+    Array.fill(math.min(coarseProbes, pivots.length)) {
+      var sel = -1
+      var q = 0
+      while (q < pivots.length) {
+        if (!taken(q) && (sel < 0 || negs(q) < negs(sel))) sel = q
+        q += 1
+      }
+      taken(sel) = true
+      sel
+    }
+  }
+
+  /** The two-level BUILD walk: the argmax cell among the members of the
+    * row's [[topPivots]] groups — smallest (neg score, sid), so a tie
+    * between groups still goes to the smaller sid. At `coarseProbes` ≥
+    * the pivot count every seed is scored and the cell IS the flat
+    * argmax.
+    */
+  private def walkCell(vd: Array[Double], pg: PivotGroups,
+      coarseProbes: Int): Long = {
+    var bestNeg = Double.PositiveInfinity
+    var bestSid = Long.MaxValue
+    topPivots(vd, pg._1, coarseProbes).foreach { p =>
+      pg._2(p).foreach { case (sid, u) =>
+        val neg = negScore(vd, u)
+        if (neg < bestNeg || (neg == bestNeg && sid < bestSid)) {
+          bestNeg = neg; bestSid = sid
+        }
+      }
+    }
+    bestSid
+  }
+
+  /** The two-level QUERY walk: every member cell of the query's
+    * [[topPivots]] groups ranked by (neg score, sid) — the [[seedKeys]]
+    * order — so the probe list covers where the build walk put the
+    * query's neighbors (its head is [[walkCell]]'s cell).
+    */
+  private def probeWalk(vd: Array[Double], pg: PivotGroups,
+      coarseProbes: Int): Seq[Long] =
+    topPivots(vd, pg._1, coarseProbes).toSeq
+      .flatMap(p => pg._2(p).map { case (sid, u) => (negScore(vd, u), sid) })
+      .sortBy(identity).map(_._2)
+
+  /** The row's [[walkCell]] as a column over `embedding`: compiled, with
+    * the grouped quantizer as a broadcast variable (√n cells is far past
+    * [[ivfLiteralCellBound]]).
+    */
+  private def twoLevelCell(s: SparkSession, dir: String, cells: Int,
+      coarseProbes: Int): Column = {
+    val bc = quantizerBroadcast(s, pivotGroups(s, dir, cells))
+    udf((v: Seq[Float]) => walkCell(toDoubles(v), bc.value, coarseProbes))
+      .asNonNullable()(col("embedding"))
+  }
 
   /** Two-level (coarse-grouped) IVF assignment — the BUILD-side scale
     * path. The flat argmax assignment pays O(cells) dots per vector;
@@ -692,83 +789,9 @@ object SimOps extends OpModule {
     */
   private[graft] def annIndexHierarchical(s: SparkSession, dir: String,
       nSeeds: Int, coarseProbes: Int = 4): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val emb = withNorm(Tables.embeddings(s, dir))
-    val seeds = driverSeeds(s, dir, nSeeds)
-      .map { case (id, u) => (id, u.toArray) }.toArray
-    val nPivots = math.ceil(math.sqrt(nSeeds.toDouble)).toInt
-    val pivots = seeds.take(nPivots).map(_._2)
-    // driver-side: hang every cell seed on its nearest pivot (same
-    // neg/NaN/first-wins semantics as the corpus argmax)
-    val groups = Array.fill(nPivots)(
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])])
-    seeds.foreach { case (sid, v) =>
-      var bestNeg = Double.PositiveInfinity; var bestP = 0; var p = 0
-      var first = true
-      while (p < nPivots) {
-        val d = ddotF(v, pivots(p))
-        val neg = if (d.isNaN) Double.NegativeInfinity else -d
-        if (first || neg < bestNeg) { bestNeg = neg; bestP = p; first = false }
-        p += 1
-      }
-      groups(bestP) += ((sid, v))
-    }
-    val groupsArr = groups.map(_.sortBy(_._1).toArray)
-    val bc = s.sparkContext.broadcast((pivots, groupsArr))
-    releaseQuantizerBroadcasts()
-    liveQuantizerBcs.add(bc)
-    val w = math.min(coarseProbes, nPivots)
-    val assigned = emb
-      .select(col("vec_id"), col("embedding"), col("norm"))
-      .as[(Long, Array[Float], Double)]
-      .mapPartitions { it =>
-        val (pvs, grps) = bc.value
-        it.map { case (id, v, nrm) =>
-          val vd = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { vd(i) = v(i).toDouble; i += 1 }
-          // top-w pivots by (neg dot, pivot idx) — a w-pass selection
-          // over nPivots scores (w ≤ 4 in practice; no heap needed)
-          val negs = new Array[Double](pvs.length)
-          var p = 0
-          while (p < pvs.length) {
-            val d = ddotF(vd, pvs(p))
-            negs(p) = if (d.isNaN) Double.NegativeInfinity else -d
-            p += 1
-          }
-          val taken = new Array[Boolean](pvs.length)
-          var bestNeg = Double.PositiveInfinity
-          var bestSid = Long.MaxValue
-          var firstOverall = true
-          var probe = 0
-          while (probe < w) {
-            var selNeg = Double.PositiveInfinity; var sel = -1
-            var q = 0
-            while (q < pvs.length) {
-              if (!taken(q) && (sel < 0 || negs(q) < selNeg)) {
-                selNeg = negs(q); sel = q
-              }
-              q += 1
-            }
-            taken(sel) = true
-            val members = grps(sel)
-            var m = 0
-            while (m < members.length) {
-              val (sid, u) = members(m)
-              val d = ddotF(vd, u)
-              val neg = if (d.isNaN) Double.NegativeInfinity else -d
-              if (firstOverall || neg < bestNeg ||
-                  (neg == bestNeg && sid < bestSid)) {
-                bestNeg = neg; bestSid = sid; firstOverall = false
-              }
-              m += 1
-            }
-            probe += 1
-          }
-          (id, v, nrm, bestSid)
-        }
-      }
-      .toDF("vec_id", "embedding", "norm", "cell")
+    val assigned = withNorm(Tables.embeddings(s, dir))
+      .select(col("vec_id"), col("embedding"), col("norm"),
+        twoLevelCell(s, dir, nSeeds, coarseProbes).as("cell"))
     (centroidsOf(assigned), assigned)
   }
 
@@ -855,8 +878,7 @@ object SimOps extends OpModule {
   def annFrozen(s: SparkSession, dir: String): DataFrame = {
     val seedsLit = typedlit(driverSeeds(s, dir, 10))
     val corpus = withNorm(Tables.embeddings(s, dir))
-      .withColumn("cell",
-        element_at(rankedSeeds(seedsLit), 1).getField("sid"))
+      .withColumn("cell", cellArgMax(seedsLit))
     val qProbes = withNorm(Tables.embeddings(s, dir).filter(col("vec_id") < 20))
       .withColumn("cell", explode(probeCells(seedsLit, 4)))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -974,25 +996,6 @@ object SimOps extends OpModule {
       table.drop("bits"))
   }
 
-  /** [[annSrp]] with the full sizing exposed — the band-count KNOB next
-    * to the bits knob: bits bound per-bucket candidate volume
-    * ([[srpBitsPerBand]]); BANDS are the recall lever (each extra band
-    * is one more independent chance to collide, at one more table row
-    * per vector — recall 1−(1−p^bits)^bands for per-bit collision p).
-    * A corpus that needs recall back after a bits increase grows bands,
-    * not bucket size. Query batch is an arbitrary vec_id predicate so
-    * stress probes can search from planted near-duplicates, not just
-    * the oracle-frozen first-20 batch.
-    */
-  private[graft] def annSrpWith(s: SparkSession, dir: String, bits: Int,
-      bands: Int, queryPred: Column): DataFrame = {
-    val planes = driverSeeds(s, dir, bands * bits)
-    srpSearch(s, dir, planes, bits,
-      srpAssigned(s, planes, bits,
-        withNorm(Tables.embeddings(s, dir)), bands),
-      bands, queryPred)
-  }
-
   /** The SRP query-time search: hash the query batch against the SAME
     * frozen planes, band-bucket equi-join into the LSH table, collapse
     * multi-band collisions, exact cosine + bounded-heap top-5.
@@ -1043,9 +1046,18 @@ object SimOps extends OpModule {
       (if (radius >= 2) r2 else Nil)
   }
 
-  /** [[annSrpWith]] with flip-bit MULTI-PROBE on the query side: each
-    * query probes the `probeMasks(bits, radius)` bucket neighborhood in
-    * every band instead of its single exact bucket. Candidate volume is
+  /** [[annSrp]] with the full sizing exposed and flip-bit MULTI-PROBE on
+    * the query side. Bits bound per-bucket candidate volume
+    * ([[srpBitsPerBand]]); BANDS are the recall lever (each extra band is
+    * one more independent chance to collide, at one more table row per
+    * vector — recall 1−(1−p^bits)^bands for per-bit collision p), so a
+    * corpus that needs recall back after a bits increase grows bands, not
+    * bucket size. The query batch is an arbitrary vec_id predicate so
+    * stress probes can search from planted near-duplicates, not just the
+    * oracle-frozen first-20 batch. Radius 0 is the single-probe search;
+    * at radius r each query probes the `probeMasks(bits, r)` bucket
+    * neighborhood in every band instead of its single exact bucket
+    * ([[srpProbeFrame]]). Candidate volume is
     * bounded by construction — probes/band × bands × expected bucket
     * population (n/2^bits ≈ [[srpTargetBucket]]) — and grows O(bits)
     * at radius 1, O(bits²) at radius 2, vs the corpus-linear growth of
@@ -1067,19 +1079,25 @@ object SimOps extends OpModule {
     val table = corpus.getOrElse(
       srpAssigned(s, planes, bits, withNorm(Tables.embeddings(s, dir)),
         bands))
-    // the multi-probe query frame: one row per (query, band, probed
-    // bucket). The mask literal is a flat long array (≤ 1 + b + C(b,2)
-    // entries at the b = 62 bits cap — scalars, not structs, so no
-    // codegen blowup), XOR-applied to the band's base bucket.
-    val masks = typedlit(probeMasks(bits, radius))
-    val qs = srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir).filter(queryPred)), bands)
-      .withColumn("bucket",
-        explode(transform(masks, m => col("bucket").bitwiseXOR(m))))
+    srpTopK(srpProbeFrame(srpAssigned(s, planes, bits,
+      withNorm(Tables.embeddings(s, dir).filter(queryPred)), bands),
+      bits, radius), table)
+  }
+
+  /** The multi-probe query frame over an [[srpAssigned]] query side: one
+    * row per (query, band, probed bucket). The mask literal is a flat
+    * long array (≤ 1 + b + C(b,2) entries at the b = 62 bits cap —
+    * scalars, not structs, so no codegen blowup), XOR-applied to the
+    * band's base bucket.
+    */
+  private def srpProbeFrame(qAssigned: DataFrame, bits: Int,
+      radius: Int): DataFrame =
+    qAssigned
+      .withColumn("bucket", explode(transform(
+        typedlit(probeMasks(bits, radius)),
+        m => col("bucket").bitwiseXOR(m))))
       .select(col("band"), col("bucket"), col("vec_id").as("q_id"),
         col("embedding").as("q_emb"), col("norm").as("q_norm"))
-    srpTopK(qs, table)
-  }
 
   /** Default per-neighbor collision-probability floor for
     * [[annSrpAdaptive]]'s quality bar — see [[srpQualityBar]]. 0.25 is
@@ -1207,12 +1225,7 @@ object SimOps extends OpModule {
     var exhausted = false
     while (!exhausted && radius <= maxRadius) {
       val isCap = radius == maxRadius
-      val masks = typedlit(probeMasks(bits, radius))
-      val probedAll = qAssigned
-        .withColumn("bucket",
-          explode(transform(masks, m => col("bucket").bitwiseXOR(m))))
-        .select(col("band"), col("bucket"), col("vec_id").as("q_id"),
-          col("embedding").as("q_emb"), col("norm").as("q_norm"))
+      val probedAll = srpProbeFrame(qAssigned, bits, radius)
       // the cap pass also serves every parked query (their probe set is
       // cumulative in radius, so one cap probe covers all skipped radii)
       val probeSet: Option[DataFrame] =
@@ -1316,10 +1329,12 @@ object SimOps extends OpModule {
       srpBitsPerBand(Tables.vectorCount(s, dir)), srpBands, 1,
       col("vec_id") < 20)
 
-  /** Stress instrumentation: distinct (q_id, vec_id) candidate pairs the
-    * MULTI-PROBE band join proposes — the volume the candidate cap
-    * bounds (Round14OpsSpec asserts it; SrpProbeBench records the
-    * recall-vs-candidates curve it buys).
+  /** Stress instrumentation ([[graft.StressProbe]], SrpProbeBench):
+    * DISTINCT (q_id, vec_id) candidate pairs the band join proposes at a
+    * given bits-per-band and probe radius — the volume
+    * [[srpBitsPerBand]] and the candidate cap bound (Round14OpsSpec
+    * asserts the cap). Not a query; a measurement of the index's
+    * proposal work before the exact-cosine verify.
     */
   private[graft] def srpCandidateCountMulti(s: SparkSession, dir: String,
       bits: Int, bands: Int, radius: Int,
@@ -1327,33 +1342,10 @@ object SimOps extends OpModule {
     val planes = driverSeeds(s, dir, bands * bits)
     val corpus = srpAssigned(s, planes, bits,
       withNorm(Tables.embeddings(s, dir)), bands)
-    val masks = typedlit(probeMasks(bits, radius))
-    val qs = srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir).filter(queryPred)), bands)
-      .withColumn("bucket",
-        explode(transform(masks, m => col("bucket").bitwiseXOR(m))))
-      .select(col("band"), col("bucket"), col("vec_id").as("q_id"))
-    broadcast(qs)
-      .join(corpus.select(col("band"), col("bucket"), col("vec_id")),
-        Seq("band", "bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id")).distinct().count()
-  }
-
-  /** Stress instrumentation ([[graft.StressProbe]]): DISTINCT
-    * (q_id, vec_id) candidate pairs the SRP band join proposes for the
-    * 20-query batch at a given bits-per-band — the volume
-    * [[srpBitsPerBand]] exists to bound. Not a query; a measurement of
-    * the index's proposal work before the exact-cosine verify.
-    */
-  private[graft] def srpCandidateCount(s: SparkSession, dir: String,
-      bits: Int, bands: Int = srpBands): Long = {
-    val planes = driverSeeds(s, dir, bands * bits)
-    val corpus = srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir)), bands)
-    val qs = srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir).filter(col("vec_id") < 20)), bands)
-      .select(col("band"), col("bucket"), col("vec_id").as("q_id"))
+    val qs = srpProbeFrame(srpAssigned(s, planes, bits,
+      withNorm(Tables.embeddings(s, dir).filter(queryPred)), bands),
+      bits, radius)
+      .select(col("band"), col("bucket"), col("q_id"))
     broadcast(qs)
       .join(corpus.select(col("band"), col("bucket"), col("vec_id")),
         Seq("band", "bucket"))
@@ -1401,14 +1393,13 @@ object SimOps extends OpModule {
     * in the plan is the final presentation sort. `affinity` is recomputed
     * as one dot against the CHOSEN seed (seed ids are positional by
     * [[driverSeeds]] construction), bit-identical to the oracle's value —
-    * un-negating the NaN-mapped sort key would surface rankedSeeds' -∞
+    * un-negating the NaN-mapped sort key would surface seedKeys' -∞
     * sentinel instead of the true NaN score.
     */
   def clusterAssign(s: SparkSession, dir: String): DataFrame = {
     val seedsLit = typedlit(driverSeeds(s, dir, 10))
     withNorm(Tables.embeddings(s, dir))
-      .withColumn("cell",
-        element_at(rankedSeeds(seedsLit), 1).getField("sid"))
+      .withColumn("cell", cellArgMax(seedsLit))
       .withColumn("affinity",
         dot(col("embedding"),
           element_at(seedsLit, (col("cell") + 1).cast("int"))
@@ -1431,7 +1422,7 @@ object SimOps extends OpModule {
     * dropped or not — is deterministic and engine-independent, so the
     * whole verdict set value-oracles.
     *
-    * Plan: narrow argmax assignment (the [[rankedSeeds]]
+    * Plan: narrow argmax assignment (the [[cellArgMax]]
     * literal-quantizer pass — no join/shuffle/window), one cell equi-join
     * for within-cell pairs, one anti-join to remove the dominated side.
     */
@@ -1458,8 +1449,7 @@ object SimOps extends OpModule {
     // corpus. In production this IS the persisted cell-assigned
     // artifact the incremental path reads.
     withNorm(Tables.embeddings(s, dir))
-      .withColumn("cell",
-        element_at(rankedSeeds(seedsLit), 1).getField("sid"))
+      .withColumn("cell", cellArgMax(seedsLit))
       .select(col("vec_id"), col("cell"), col("embedding"), col("norm"))
       .transform(graft.Checkpoints.truncate)
   }
@@ -1702,34 +1692,48 @@ object SimOps extends OpModule {
       .select(col("vec_id"), col("embedding"), col("norm"))
       .withColumn("codes", pqEncode(col("embedding"), pqCodebook(s, dir)))
 
+  /** The request-sized query batch, collected to the driver once per
+    * search: (q_id, embedding as doubles), ids ascending. A search server
+    * holds its query vectors in RAM, so probe walks and LUT builds over
+    * it are driver-local arithmetic (the [[trainSample]] bounded-collect
+    * class, corpus-independent).
+    */
+  private def queryBatch(s: SparkSession, dir: String,
+      queryPred: Column): Seq[(Long, Array[Double])] = {
+    import s.implicits._
+    Tables.embeddings(s, dir).filter(queryPred)
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1).toSeq
+      .map { case (id, v) => (id, v.map(_.toDouble)) }
+  }
+
   /** The (q_id, lut) query frame with LUTs built DRIVER-side
     * ([[lutFlatOf]]) — bit-identical to projecting [[pqLutCol]] over the
     * query rows (same strict (x−c)² fold, same non-negative half-up
-    * micro-rounding; the annIvfPqScaledQuery precedent, spec-pinned ≡
-    * the expression form through the exhaustive-probe ≡ llm_ann_pq8
-    * identity). Exists because the expression form evaluates 8·K
-    * interpreted lambda distances per query row — ~2.5 s of the 3.9 s
-    * llm_ann_pq8 wall at 256-code books (r18 stage split, PERF.md) —
-    * while the driver loop over the request-sized query batch is
+    * micro-rounding; spec-pinned ≡ the expression form through the
+    * exhaustive-probe identities of [[annIvfPq]] ≡ [[annPq]] and the
+    * scaled store ≡ llm_ann_pq8). Exists because the expression form
+    * evaluates 8·K interpreted lambda distances per query row — ~2.5 s
+    * of the 3.9 s llm_ann_pq8 wall at 256-code books (r18 stage split,
+    * PERF.md) — while the driver loop over the query batch is
     * milliseconds.
     */
-  private def pqLutFrameDriver(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]], queryPred: Column): DataFrame = {
+  private def lutFrame(s: SparkSession, batch: Seq[(Long, Array[Double])],
+      cb: Seq[Seq[Seq[Double]]]): DataFrame = {
     import s.implicits._
-    val kCodes = cb.head.size
     val cbArr = cb.map(_.map(_.toArray).toArray).toArray
-    val qEmb = Tables.embeddings(s, dir).filter(queryPred)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    qEmb.toSeq
-      .map { case (id, v) =>
-        (id, lutFlatOf(v.map(_.toDouble), cbArr).toSeq) }
+    batch.map { case (id, vd) => (id, lutFlatOf(vd, cbArr).toSeq) }
       .toDF("q_id", "flat_lut")
-      .withColumn("lut", transform(
-        sequence(lit(0), lit(pqSubspaces - 1)), m =>
-          slice(col("flat_lut"), m * lit(kCodes) + lit(1), lit(kCodes))))
-      .select(col("q_id"), col("lut"))
+      .select(col("q_id"), lutOfFlat(cb.head.size))
   }
+
+  /** The 8 × K `lut` column of a driver-built `flat_lut`
+    * (lut[m][k] = flat_lut[m·K + k]) — the shape [[pqAdc]] reads.
+    */
+  private def lutOfFlat(kCodes: Int): Column =
+    transform(sequence(lit(0), lit(pqSubspaces - 1)), m =>
+      slice(col("flat_lut"), m * lit(kCodes) + lit(1), lit(kCodes)))
+      .as("lut")
 
   /** The query-side 8 × K LUT column of [[pqDistMicro]] entries. */
   private[graft] def pqLutCol(cbLit: Column, k: Int = pqCodes): Column =
@@ -1817,30 +1821,22 @@ object SimOps extends OpModule {
       queryPred: Column = col("vec_id") < 20): DataFrame =
     annPqOnCb(s, dir, encoded, pqCodebook(s, dir), queryPred)
 
-  /** [[annPqOn]] against an EXPLICIT codebook — the shared ADC scan the
-    * 4-bit frozen family ([[annPq]]) and the trained 8-bit family
-    * ([[annPq8]]) both run; only the codebook (and with it the LUT
-    * width) differs.
+  /** [[annPqOn]] against an EXPLICIT codebook — the shared exhaustive
+    * ADC scan the 4-bit frozen family ([[annPq]]), the trained 8-bit
+    * family ([[annPq8]]) and the [[annPqRerank]] shortlist all run; only
+    * the codebook (and with it the LUT width) and the depth differ. The
+    * query LUTs are built driver-side ([[lutFrame]]).
     */
   private[graft] def annPqOnCb(s: SparkSession, dir: String,
       encoded: DataFrame, cb: Seq[Seq[Seq[Double]]],
-      queryPred: Column = col("vec_id") < 20): DataFrame = {
-    val corpus = encoded.select(col("vec_id"), col("codes"))
-    // the query LUTs are built DRIVER-side ([[lutFlatOf]] — bit-identical
-    // to the [[pqLutCol]] expression form: same strict (x−c)² fold, same
-    // non-negative half-up micro-rounding; the annIvfPqScaledQuery
-    // precedent, whose exhaustive-probe ≡ llm_ann_pq8 spec pin is
-    // exactly this identity). The expression form evaluated 8·K
-    // interpreted lambda distances per query row inside the broadcast
-    // build — at 256-code books that was ~2.5 s of the 3.9 s
-    // llm_ann_pq8 wall (r18 stage split, PERF.md: join_only 0.49 s vs
-    // scan_adc 3.0 s). The query batch is request-sized (the
-    // [[trainSample]] bounded-collect class), so the driver loop is
-    // O(|queries| · 8K), corpus-independent.
-    val qs = pqLutFrameDriver(s, dir, cb, queryPred)
-    val scored = broadcast(qs).join(corpus, col("q_id") =!= col("vec_id"))
+      queryPred: Column = col("vec_id") < 20,
+      topK: Int = 5): DataFrame = {
+    val qs = lutFrame(s, queryBatch(s, dir, queryPred), cb)
+    val scored = broadcast(qs)
+      .join(encoded.select(col("vec_id"), col("codes")),
+        col("q_id") =!= col("vec_id"))
       .withColumn("adc_micro", pqAdcCol)
-    rankTopK(scored, "vec_id", "adc_micro", descending = false, 5)
+    rankTopK(scored, "vec_id", "adc_micro", descending = false, topK)
   }
 
   /** Trained-codebook PQ geometry (the Jégou et al. standard the r16
@@ -2064,16 +2060,6 @@ object SimOps extends OpModule {
     */
   val pqrCells = 32
 
-  /** Flat argmax cell assignment against the broadcast seed literal —
-    * extracted from [[annIvfPq]] so the raw and residual families share
-    * one law: NaN-best via nanvl(−dot, −∞), smaller sid on ties.
-    */
-  private def cellArgMax(seedsLit: Column): Column =
-    array_min(transform(seedsLit, sd =>
-      struct(nanvl(-dot(col("embedding"), sd.getField("_2")),
-          lit(Double.NegativeInfinity)).as("neg"),
-        sd.getField("_1").as("sid")))).getField("sid")
-
   /** The row's residual against its assigned cell's CENTROID:
     * r[i] = embedding[i]::double − centroid(cell)[i] — one IEEE
     * subtraction per element, replayed verbatim by the oracle. The
@@ -2130,26 +2116,6 @@ object SimOps extends OpModule {
       cents.get(c.toLong).fold(Seq.fill(pqSubspaces * pqSubDim)(0.0))(
         _.toSeq))
 
-  /** Driver-side flat argmax over the unit seeds — the [[cellArgMax]]
-    * law replayed in scalar code (NaN → −∞, strict <, ids ascending so
-    * ties keep the smallest sid), used for the training sample's
-    * residuals and the query-side LUT builds.
-    */
-  private def coarseCellOf(vd: Array[Double],
-      seeds: Array[(Long, Array[Double])]): Int = {
-    var bestNeg = Double.PositiveInfinity
-    var best = 0
-    var first = true
-    var i = 0
-    while (i < seeds.length) {
-      val d = ddotF(vd, seeds(i)._2)
-      val neg = if (d.isNaN) Double.NegativeInfinity else -d
-      if (first || neg < bestNeg) { bestNeg = neg; best = i; first = false }
-      i += 1
-    }
-    best
-  }
-
   /** The query-side flat LUT of [[pqDistMicro]] entries over a PREPARED
     * (already residual-ized where applicable) driver vector — shared by
     * every driver-built LUT (raw scaled, residual fixture, residual
@@ -2181,12 +2147,13 @@ object SimOps extends OpModule {
   }
 
   /** The trained residual codebooks: coarse-assign the stratified
-    * [[trainSample]] to its flat-argmax cell (driver replay of
-    * [[cellArgMax]]), subtract the cell's CENTROID, then the SAME
-    * [[trainPqBook]] fixed-point k-means as [[pq8Codebook]] — init =
-    * residuals of the first 256 sample members, [[pq8Iters]] rounds,
-    * 256 codes. Deterministic end-to-end, so the `llm_ann_ivfadc`
-    * oracle replays the whole pipeline value-for-value. Callers who
+    * [[trainSample]] to its flat-argmax cell ([[argMaxIndex]], the
+    * driver replay of [[cellArgMax]]), subtract the cell's CENTROID,
+    * then the SAME [[trainPqBook]] fixed-point k-means as
+    * [[pq8Codebook]] — init = residuals of the first 256 sample
+    * members, [[pq8Iters]] rounds, 256 codes. Deterministic end-to-end,
+    * so the `llm_ann_ivfadc` oracle replays the whole pipeline
+    * value-for-value. Callers who
     * already built the store pass ITS centroids (`centsOverride`) so
     * book and index quantize against the identical coarse model.
     */
@@ -2197,8 +2164,8 @@ object SimOps extends OpModule {
       : Seq[Seq[Seq[Double]]] = {
     val stride = strideOverride.getOrElse(
       pqTrainStride(Tables.vectorCount(s, dir)))
-    val seeds = driverSeeds(s, dir, cells)
-      .map { case (id, u) => (id, u.toArray) }.toArray
+    val seeds = driverSeeds(s, dir, cells).toArray
+    val units = seeds.map(_._2.toArray)
     val cents = centsOverride.getOrElse(pqrCentroids(s, dir, cells))
     val train = trainSample(s, dir, stride)
     require(train.length >= pq8Codes,
@@ -2216,7 +2183,7 @@ object SimOps extends OpModule {
       // raw vector (zero centroid), a benign training-set perturbation.
       // Never hit on the oracle path: there cents comes from the same
       // flat argmax that assigned this very sample member.
-      val c = cents.getOrElse(seeds(coarseCellOf(vd, seeds))._1,
+      val c = cents.getOrElse(seeds(argMaxIndex(vd, units))._1,
         new Array[Double](vd.length))
       Array.tabulate(vd.length)(i => vd(i) - c(i))
     }
@@ -2245,14 +2212,9 @@ object SimOps extends OpModule {
   }
 
   /** Residual-ADC top-5 over a prepared (cell, vec_id, codes) store at
-    * EXHAUSTIVE probes — the oracled surface of the IVFADC family. The
-    * LUT is PER (query, cell): ADC(q, x) estimates
-    * ‖q − x‖² = ‖(q − c_cell) − r_x‖² with both sides residual-ized
-    * against x's cell, so each query carries one 8×256 table per cell
-    * (built driver-side — the query batch is request-sized, the
-    * [[annIvfPqScaledQuery]] stance). Candidates join on `cell` (equi,
-    * prunable against a cell-partitioned store), ADC is the codegen'd
-    * integer [[graft.functions.PqAdc]], ties on (adc_micro, vec_id).
+    * EXHAUSTIVE probes — the oracled surface of the IVFADC family: every
+    * query probes every OCCUPIED cell ([[residualAdcTopK]]; empty cells
+    * have no centroid and no members, so no table).
     */
   private[graft] def annPqrOn(s: SparkSession, dir: String,
       store: DataFrame, cb: Seq[Seq[Seq[Double]]],
@@ -2260,32 +2222,36 @@ object SimOps extends OpModule {
       cells: Int = pqrCells,
       queryPred: Column = col("vec_id") < 20,
       topK: Int = 5): DataFrame = {
-    import s.implicits._
-
-    val kCodes = cb.head.size
-    val cbArr = cb.map(_.map(_.toArray).toArray).toArray
     val occupied = cents.keys.toSeq.sorted
-    val qEmb = Tables.embeddings(s, dir).filter(queryPred)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    // exhaustive: one residual LUT per (query, OCCUPIED cell) — the
-    // LUT depends on the probed cell's centroid, so per-cell tables are
-    // intrinsic to IVFADC (no ship-once factorization like the raw
-    // path); empty cells have no centroid and no members, so no table
-    val qRows: Seq[(Long, Long, Seq[Long])] = qEmb.toSeq.flatMap {
-      case (qId, v) =>
-        val vd = v.map(_.toDouble)
-        occupied.map { cell =>
-          val c = cents(cell)
-          val qres = Array.tabulate(vd.length)(i => vd(i) - c(i))
-          (qId, cell, lutFlatOf(qres, cbArr).toSeq)
-        }
-    }
-    val qs = qRows.toDF("q_id", "cell", "flat_lut")
-      .withColumn("lut", transform(
-        sequence(lit(0), lit(pqSubspaces - 1)), m =>
-          slice(col("flat_lut"), m * lit(kCodes) + lit(1), lit(kCodes))))
-      .select(col("q_id"), col("cell"), col("lut"))
+    residualAdcTopK(s, queryBatch(s, dir, queryPred), _ => occupied,
+      store, cb, cents, topK)
+  }
+
+  /** The residual-ADC scan every IVFADC search shares. The LUT is PER
+    * (query, probed cell): ADC(q, x) estimates
+    * ‖q − x‖² = ‖(q − c_cell) − r_x‖² with both sides residual-ized
+    * against x's cell, so each query carries one 8×256 table per probed
+    * cell, built driver-side ([[lutFlatOf]] over q − centroid(cell)) —
+    * the LUT depends on the cell's centroid, so per-cell tables are
+    * intrinsic to IVFADC (no ship-once factorization like the raw
+    * path). Candidates join on `cell` (equi, prunable against a
+    * cell-partitioned store), ADC is the codegen'd integer
+    * [[graft.functions.PqAdc]], ties on (adc_micro, vec_id).
+    */
+  private def residualAdcTopK(s: SparkSession,
+      batch: Seq[(Long, Array[Double])], probed: Array[Double] => Seq[Long],
+      store: DataFrame, cb: Seq[Seq[Seq[Double]]],
+      cents: Map[Long, Array[Double]], topK: Int): DataFrame = {
+    import s.implicits._
+    val cbArr = cb.map(_.map(_.toArray).toArray).toArray
+    val qs = batch.flatMap { case (q, vd) =>
+      probed(vd).map { cell =>
+        val c = cents(cell)
+        (q, cell, lutFlatOf(Array.tabulate(vd.length)(i => vd(i) - c(i)),
+          cbArr).toSeq)
+      }
+    }.toDF("q_id", "cell", "flat_lut")
+      .select(col("q_id"), col("cell"), lutOfFlat(cb.head.size))
     val scored = broadcast(qs)
       .join(store.select(col("cell"), col("vec_id"), col("codes")),
         Seq("cell"))
@@ -2361,35 +2327,14 @@ object SimOps extends OpModule {
       encodedOpt: Option[DataFrame] = None,
       cbOpt: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
     // cbOpt must match the codebook that produced encodedOpt's codes —
-    // callers pairing the trained 8-bit book pass both together
-    val cb = cbOpt.getOrElse(pqCodebook(s, dir))
-    // the inline default is PINNED once for BOTH consumers (the ADC
-    // shortlist reads codes, the exact re-rank reads embedding+norm) —
-    // the [[annPq]] deferral reason applies to the shortlist join
-    val encoded = encodedOpt.getOrElse(
-      graft.Checkpoints.truncate(pqEncoded(s, dir)))
-    // LUTs driver-built ([[pqLutFrameDriver]] — the annPqOnCb move);
-    // the exact-rerank stage reads q_emb/q_norm from the expression
-    // domain unchanged
-    val qLut = pqLutFrameDriver(s, dir, cb, queryPred)
-    val qEmbN = withNorm(Tables.embeddings(s, dir).filter(queryPred))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val shortScored = broadcast(qLut)
-      .join(encoded.select(col("vec_id"), col("codes")),
-        col("q_id") =!= col("vec_id"))
-      .withColumn("adc_micro", pqAdcCol)
-    val cands = graft.plans.TopKPerGroup(
-      shortScored.select(col("q_id"), col("vec_id"), col("adc_micro")),
-      Seq("q_id"), "adc_micro", descending = false, "vec_id", shortlist)
-      .select(col("q_id"), col("vec_id"))
-    val scored = cands
-      .join(broadcast(qEmbN), Seq("q_id"))
-      .join(encoded.select(col("vec_id"), col("embedding"), col("norm")),
-        Seq("vec_id"))
-      .withColumn("cosine",
-        dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("norm")))
-    rankTopK(scored, "vec_id", "cosine", descending = true, 5)
+    // callers pairing the trained 8-bit book pass both together; the
+    // inline default is PINNED for the [[annPq]] deferral reason
+    val cands = annPqOnCb(s, dir,
+      encodedOpt.getOrElse(graft.Checkpoints.truncate(
+        pqEncoded(s, dir).select(col("vec_id"), col("codes")))),
+      cbOpt.getOrElse(pqCodebook(s, dir)), queryPred, topK = shortlist)
+      .select(col("q_id"), col("neighbor_id").as("vec_id"))
+    exactCosineRerank(s, dir, cands, queryPred)
   }
 
   /** IVF-PQ: the [[annPq]] ADC estimator confined to the query's
@@ -2404,35 +2349,27 @@ object SimOps extends OpModule {
     * bounded probes trade recall for scan volume exactly like
     * [[annSearch]]'s knob. Library knob: the oracled query surface
     * stays [[annPq]]'s exhaustive-ADC form.
+    *
+    * Composed from the scaled pair at the oracle-frozen 32 cells: an
+    * exhaustive coarse walk IS the flat argmax (Round15OpsSpec), so
+    * [[annIvfPqScaled]] assigns every vector to its [[cellArgMax]] cell
+    * and [[annIvfPqScaledQuery]] ranks the query's probes by the same
+    * (score desc, sid asc) law, with driver LUTs equal to [[pqLutCol]].
     */
   private[graft] def annIvfPq(s: SparkSession, dir: String,
       probes: Int = 4,
       queryPred: Column = col("vec_id") < 20,
       encodedOpt: Option[DataFrame] = None): DataFrame = {
-    val seeds = driverSeeds(s, dir, 32)
-    val seedsLit = typedlit(seeds)
+    val cb = pqCodebook(s, dir)
     // the inline default is PINNED (the [[annPq]] reason: the encode
     // would re-run once per matched pair on the join's stream side);
     // callers passing a prepared store keep their own materialization
-    val corpus = encodedOpt.getOrElse(graft.Checkpoints.truncate(
-        pqEncoded(s, dir).select(col("vec_id"),
-          col("embedding"), col("codes"))))
-      .withColumn("cell",
-        array_min(transform(seedsLit, sd =>
-          struct(nanvl(-dot(col("embedding"), sd.getField("_2")),
-              lit(Double.NegativeInfinity)).as("neg"),
-            sd.getField("_1").as("sid")))).getField("sid"))
-      .select(col("cell"), col("vec_id"), col("codes"))
-    val qs = withNorm(Tables.embeddings(s, dir).filter(queryPred))
-      .withColumn("cell", explode(probeCells(seedsLit, probes)))
-      .select(col("cell"), col("vec_id").as("q_id"),
-        pqLutCol(typedlit(pqCodebook(s, dir))).as("lut"))
-    // equi join on cell; a vector lives in exactly ONE cell and the
-    // probe list is distinct, so no (q, vec) pair duplicates
-    val scored = broadcast(qs).join(corpus, Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("adc_micro", pqAdcCol)
-    rankTopK(scored, "vec_id", "adc_micro", descending = false, 5)
+    val encoded = encodedOpt.getOrElse(graft.Checkpoints.truncate(
+      pqEncoded(s, dir).select(col("vec_id"), col("embedding"),
+        col("codes"))))
+    annIvfPqScaledQuery(s, dir,
+      annIvfPqScaled(s, dir, encoded, cb, 32, coarseProbes = 32), cb, 32,
+      probes, coarseProbes = 32, queryPred)
   }
 
   /** [[annIvfPq]] at CORPUS-SIZED cell counts — the 100 TB serving
@@ -2468,95 +2405,11 @@ object SimOps extends OpModule {
     * decimals and stays co-located) — PqScaleBench gates planted
     * recall ≥ 0.98 on this path before recording any number.
     */
-  /** Driver-side two-level grouping of a seed quantizer: seeds hang on
-    * their nearest of ⌈√cells⌉ pivots (= the first seeds) — the
-    * [[annIndexHierarchical]] build trick, extracted so the BUILD
-    * assignment and the QUERY probe ranking share one grouping: a
-    * query that ranks raw seeds exhaustively while the corpus assigned
-    * through pivot groups probes cells its neighbors were never
-    * assigned to (measured: planted recall 0.908 at 1M/1024 cells
-    * before the query side was group-restricted).
-    */
-  private def pivotGroups(seeds: Array[(Long, Array[Double])])
-      : (Array[Array[Double]], Array[Array[(Long, Array[Double])]]) = {
-    val nPivots = math.ceil(math.sqrt(seeds.length.toDouble)).toInt
-    val pivots = seeds.take(nPivots).map(_._2)
-    val groups = Array.fill(nPivots)(
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])])
-    seeds.foreach { case (sid, v) =>
-      var bestNeg = Double.PositiveInfinity; var bestP = 0; var p = 0
-      var first = true
-      while (p < nPivots) {
-        val d = ddotF(v, pivots(p))
-        val neg = if (d.isNaN) Double.NegativeInfinity else -d
-        if (first || neg < bestNeg) { bestNeg = neg; bestP = p; first = false }
-        p += 1
-      }
-      groups(bestP) += ((sid, v))
-    }
-    (pivots, groups.map(_.sortBy(_._1).toArray))
-  }
-
   private[graft] def annIvfPqScaled(s: SparkSession, dir: String,
       encoded: DataFrame, cb: Seq[Seq[Seq[Double]]],
-      cells: Int, coarseProbes: Int = 4): DataFrame = {
-    import s.implicits._
-    val seeds = driverSeeds(s, dir, cells)
-      .map { case (id, u) => (id, u.toArray) }.toArray
-    val (pivots, groupsArr) = pivotGroups(seeds)
-    val bc = s.sparkContext.broadcast((pivots, groupsArr))
-    releaseQuantizerBroadcasts()
-    liveQuantizerBcs.add(bc)
-    val w = math.min(coarseProbes, pivots.length)
-    encoded.select(col("vec_id"), col("embedding"), col("codes"))
-      .as[(Long, Array[Float], Seq[Long])]
-      .mapPartitions { it =>
-        val (pvs, grps) = bc.value
-        it.map { case (id, v, codes) =>
-          val vd = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { vd(i) = v(i).toDouble; i += 1 }
-          val negs = new Array[Double](pvs.length)
-          var p = 0
-          while (p < pvs.length) {
-            val d = ddotF(vd, pvs(p))
-            negs(p) = if (d.isNaN) Double.NegativeInfinity else -d
-            p += 1
-          }
-          val taken = new Array[Boolean](pvs.length)
-          var bestNeg = Double.PositiveInfinity
-          var bestSid = Long.MaxValue
-          var firstOverall = true
-          var probe = 0
-          while (probe < w) {
-            var selNeg = Double.PositiveInfinity; var sel = -1
-            var q = 0
-            while (q < pvs.length) {
-              if (!taken(q) && (sel < 0 || negs(q) < selNeg)) {
-                selNeg = negs(q); sel = q
-              }
-              q += 1
-            }
-            taken(sel) = true
-            val members = grps(sel)
-            var m = 0
-            while (m < members.length) {
-              val (sid, u) = members(m)
-              val d = ddotF(vd, u)
-              val neg = if (d.isNaN) Double.NegativeInfinity else -d
-              if (firstOverall || neg < bestNeg ||
-                  (neg == bestNeg && sid < bestSid)) {
-                bestNeg = neg; bestSid = sid; firstOverall = false
-              }
-              m += 1
-            }
-            probe += 1
-          }
-          (bestSid, id, codes)
-        }
-      }
-      .toDF("cell", "vec_id", "codes")
-  }
+      cells: Int, coarseProbes: Int = 4): DataFrame =
+    encoded.select(twoLevelCell(s, dir, cells, coarseProbes).as("cell"),
+      col("vec_id"), col("codes"))
 
   /** Query a cell-assigned PQ-code store ([[annIvfPqScaled]]'s output,
     * checkpointed/persisted as the index artifact): driver-side probe
@@ -2569,93 +2422,23 @@ object SimOps extends OpModule {
       queryPred: Column = col("vec_id") < 20,
       topK: Int = 5): DataFrame = {
     import s.implicits._
-
-    val seeds = driverSeeds(s, dir, cells)
-      .map { case (id, u) => (id, u.toArray) }.toArray
-    // the probe ranking is RESTRICTED to the query's top-`coarseProbes`
-    // pivot groups — the SAME two-level walk the build assignment ran
-    // ([[pivotGroups]]), so a probed cell list always covers where the
-    // query's neighbors were actually assigned. Ranking raw seeds
-    // exhaustively here measured planted recall 0.908 (vs 1.0 aligned):
-    // a near-pair's assigned cell sat outside the exhaustive top-4
-    // whenever the two walks disagreed near a group boundary.
-    val (pivots, groupsArr) = pivotGroups(seeds)
-    val w = math.min(coarseProbes, pivots.length)
-    val kCodes = cb.head.size
-    val dSub = cb.head.head.size
-    val cbArr = cb.map(_.map(_.toArray).toArray).toArray
-    val qEmb = Tables.embeddings(s, dir).filter(queryPred)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val qPrep: Seq[(Long, Seq[Long], Seq[Long])] = qEmb.toSeq.map {
-      case (qId, v) =>
-        val vd = v.map(_.toDouble)
-        // top-w pivot groups (first-wins selection, the build's law)…
-        val negsP = pivots.map { u =>
-          val d = ddotF(vd, u)
-          if (d.isNaN) Double.NegativeInfinity else -d
-        }
-        val taken = new Array[Boolean](pivots.length)
-        val cand = scala.collection.mutable
-          .ArrayBuffer.empty[(Long, Array[Double])]
-        var probe = 0
-        while (probe < w) {
-          var selNeg = Double.PositiveInfinity; var sel = -1
-          var q = 0
-          while (q < pivots.length) {
-            if (!taken(q) && (sel < 0 || negsP(q) < selNeg)) {
-              selNeg = negsP(q); sel = q
-            }
-            q += 1
-          }
-          taken(sel) = true
-          cand ++= groupsArr(sel)
-          probe += 1
-        }
-        // …then the top-`probes` member cells by (neg dot, sid) — the
-        // rankedSeeds law (NaN best, smaller sid on ties)
-        val ranked = cand.map { case (sid, u) =>
-          val d = ddotF(vd, u)
-          (if (d.isNaN) Double.NegativeInfinity else -d, sid)
-        }.sortBy(identity).take(probes).map(_._2)
-        // LUT: the pqDistMicro definition, driver-local
-        val lut = new Array[Long](pqSubspaces * kCodes)
-        var m = 0
-        while (m < pqSubspaces) {
-          var k = 0
-          while (k < kCodes) {
-            val c = cbArr(m)(k)
-            var acc = 0.0; var i = 0
-            while (i < dSub) {
-              val d = vd(m * dSub + i) - c(i)
-              acc += d * d
-              i += 1
-            }
-            lut(m * kCodes + k) = Math.round(acc * 1e6)
-            k += 1
-          }
-          m += 1
-        }
-        (qId, ranked.toSeq, lut.toSeq)
-    }
+    // the probe ranking is the build's own two-level walk
+    // ([[probeWalk]]), so a probed cell list always covers where the
+    // query's neighbors were actually assigned
+    val pg = pivotGroups(s, dir, cells)
+    val batch = queryBatch(s, dir, queryPred)
     // the LUT travels in its OWN one-row-per-query frame, joined on
     // q_id AFTER the cell equi-join — flattening it into the probe rows
     // would ship each (pqSubspaces × kCodes)-long table `probes` times
     // per query (the r17 ADVICE payload inflation: ~5 MiB tasks on the
     // 2500-query planted batch); this way each LUT crosses the wire once
     // in the broadcast and probe rows stay two longs each
-    val qProbe = qPrep
-      .flatMap { case (q, cs, _) => cs.map(c => (q, c)) }
-      .toDF("q_id", "cell")
-    val qLut = qPrep.map { case (q, _, fl) => (q, fl) }
-      .toDF("q_id", "flat_lut")
-      .withColumn("lut", transform(
-        sequence(lit(0), lit(pqSubspaces - 1)), m =>
-          slice(col("flat_lut"), m * lit(kCodes) + lit(1), lit(kCodes))))
-      .select(col("q_id"), col("lut"))
+    val qProbe = batch.flatMap { case (q, vd) =>
+      probeWalk(vd, pg, coarseProbes).take(probes).map(c => (q, c))
+    }.toDF("q_id", "cell")
     val scored = broadcast(qProbe).join(assigned, Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
-      .join(broadcast(qLut), Seq("q_id"))
+      .join(broadcast(lutFrame(s, batch, cb)), Seq("q_id"))
       .withColumn("adc_micro", pqAdcCol)
     rankTopK(scored, "vec_id", "adc_micro", descending = false, topK)
   }
@@ -2679,19 +2462,7 @@ object SimOps extends OpModule {
     val cands = annIvfPqScaledQuery(s, dir, assigned, cb, cells, probes,
       coarseProbes, queryPred, topK = shortlist)
       .select(col("q_id"), col("neighbor_id").as("vec_id"))
-    val qs = withNorm(Tables.embeddings(s, dir).filter(queryPred))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    // the candidate frame is (queries × shortlist)-row small but sits
-    // behind a groupBy whose size estimate is opaque — broadcast it
-    // explicitly so the re-rank is one hash-join pass over the corpus
-    val scored = withNorm(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("embedding"), col("norm"))
-      .join(broadcast(cands.join(broadcast(qs), Seq("q_id"))),
-        Seq("vec_id"))
-      .withColumn("cosine",
-        dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("norm")))
-    rankTopK(scored, "vec_id", "cosine", descending = true, 5)
+    exactCosineRerank(s, dir, cands, queryPred)
   }
 
   /** The √n-cell IVF-PQ serving path as a FIRST-CLASS registered query
@@ -2733,66 +2504,10 @@ object SimOps extends OpModule {
     * identity the fixture pin rides.
     */
   private[graft] def annIvfPqrAssigned(s: SparkSession, dir: String,
-      cells: Int, coarseProbes: Int = 4): DataFrame = {
-    import s.implicits._
-    val seeds = driverSeeds(s, dir, cells)
-      .map { case (id, u) => (id, u.toArray) }.toArray
-    val (pivots, groupsArr) = pivotGroups(seeds)
-    val bc = s.sparkContext.broadcast((pivots, groupsArr))
-    releaseQuantizerBroadcasts()
-    liveQuantizerBcs.add(bc)
-    val w = math.min(coarseProbes, pivots.length)
+      cells: Int, coarseProbes: Int = 4): DataFrame =
     Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val (pvs, grps) = bc.value
-        it.map { case (id, v) =>
-          val vd = new Array[Double](v.length)
-          var i = 0
-          while (i < v.length) { vd(i) = v(i).toDouble; i += 1 }
-          val negs = new Array[Double](pvs.length)
-          var p = 0
-          while (p < pvs.length) {
-            val d = ddotF(vd, pvs(p))
-            negs(p) = if (d.isNaN) Double.NegativeInfinity else -d
-            p += 1
-          }
-          val taken = new Array[Boolean](pvs.length)
-          var bestNeg = Double.PositiveInfinity
-          var bestSid = Long.MaxValue
-          var firstOverall = true
-          var probe = 0
-          while (probe < w) {
-            var selNeg = Double.PositiveInfinity; var sel = -1
-            var q = 0
-            while (q < pvs.length) {
-              if (!taken(q) && (sel < 0 || negs(q) < selNeg)) {
-                selNeg = negs(q); sel = q
-              }
-              q += 1
-            }
-            taken(sel) = true
-            val members = grps(sel)
-            var m = 0
-            while (m < members.length) {
-              val (sid, u) = members(m)
-              val d = ddotF(vd, u)
-              val neg = if (d.isNaN) Double.NegativeInfinity else -d
-              if (firstOverall || neg < bestNeg ||
-                  (neg == bestNeg && sid < bestSid)) {
-                bestNeg = neg; bestSid = sid
-                firstOverall = false
-              }
-              m += 1
-            }
-            probe += 1
-          }
-          (bestSid, id, v)
-        }
-      }
-      .toDF("cell", "vec_id", "embedding")
-  }
+      .select(twoLevelCell(s, dir, cells, coarseProbes).as("cell"),
+        col("vec_id"), col("embedding"))
 
   /** Cell centroids of a compiled assignment — the scale-tier twin of
     * [[pqrCentroids]]: the same fixed-point census law, fed by the
@@ -2909,61 +2624,11 @@ object SimOps extends OpModule {
       probes: Int, coarseProbes: Int = 4,
       queryPred: Column = col("vec_id") < 20,
       topK: Int = 5): DataFrame = {
-    import s.implicits._
-
-    val seeds = driverSeeds(s, dir, cells)
-      .map { case (id, u) => (id, u.toArray) }.toArray
-    val (pivots, groupsArr) = pivotGroups(seeds)
-    val w = math.min(coarseProbes, pivots.length)
-    val kCodes = cb.head.size
-    val cbArr = cb.map(_.map(_.toArray).toArray).toArray
-    val qEmb = Tables.embeddings(s, dir).filter(queryPred)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val qRows: Seq[(Long, Long, Seq[Long])] = qEmb.toSeq.flatMap {
-      case (qId, v) =>
-        val vd = v.map(_.toDouble)
-        val negsP = pivots.map { u =>
-          val d = ddotF(vd, u)
-          if (d.isNaN) Double.NegativeInfinity else -d
-        }
-        val taken = new Array[Boolean](pivots.length)
-        val cand = scala.collection.mutable
-          .ArrayBuffer.empty[(Long, Array[Double])]
-        var probe = 0
-        while (probe < w) {
-          var selNeg = Double.PositiveInfinity; var sel = -1
-          var q = 0
-          while (q < pivots.length) {
-            if (!taken(q) && (sel < 0 || negsP(q) < selNeg)) {
-              selNeg = negsP(q); sel = q
-            }
-            q += 1
-          }
-          taken(sel) = true
-          cand ++= groupsArr(sel)
-          probe += 1
-        }
-        val ranked = cand.map { case (sid, u) =>
-          val d = ddotF(vd, u)
-          (if (d.isNaN) Double.NegativeInfinity else -d, sid)
-        }.sortBy(identity).iterator.map(_._2)
-          .filter(cents.contains).take(probes).toSeq
-        ranked.map { cell =>
-          val c = cents(cell)
-          val qres = Array.tabulate(vd.length)(i => vd(i) - c(i))
-          (qId, cell, lutFlatOf(qres, cbArr).toSeq)
-        }
-    }
-    val qs = qRows.toDF("q_id", "cell", "flat_lut")
-      .withColumn("lut", transform(
-        sequence(lit(0), lit(pqSubspaces - 1)), m =>
-          slice(col("flat_lut"), m * lit(kCodes) + lit(1), lit(kCodes))))
-      .select(col("q_id"), col("cell"), col("lut"))
-    val scored = broadcast(qs).join(assigned, Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .withColumn("adc_micro", pqAdcCol)
-    rankTopK(scored, "vec_id", "adc_micro", descending = false, topK)
+    val pg = pivotGroups(s, dir, cells)
+    residualAdcTopK(s, queryBatch(s, dir, queryPred),
+      vd => probeWalk(vd, pg, coarseProbes).iterator
+        .filter(cents.contains).take(probes).toSeq,
+      assigned, cb, cents, topK)
   }
 
   /** Two-stage residual serving: [[annIvfPqrScaledQuery]] proposes a
@@ -3006,8 +2671,8 @@ object SimOps extends OpModule {
   }
 
   /** The one Array[Double] dot kernel (strict left-to-right fold).
-    * `mapPartitions` closures reach it through the module's static
-    * field, so calling it captures nothing.
+    * `mapPartitions` closures and UDFs reach it through the module's
+    * static field, so calling it captures nothing.
     */
   private def ddotF(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)

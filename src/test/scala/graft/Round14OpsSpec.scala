@@ -124,8 +124,9 @@ class Round14OpsSpec extends SparkSpec {
     val n = Tables.vectorCount(spark, sf0001)
     val bits = SimOps.srpBitsPerBand(n)
     val pred = col("vec_id") < 20
-    val single = SimOps.annSrpWith(spark, sf0001, bits, SimOps.srpBands,
-      pred).collect().toSeq
+    // the single-probe search: llm_ann_srp (same bits, default bands,
+    // the same first-20 query batch)
+    val single = SimOps.annSrp(spark, sf0001).collect().toSeq
     val r0 = SimOps.annSrpMultiProbe(spark, sf0001, bits, SimOps.srpBands,
       0, pred).collect().toSeq
     assert(r0 === single,
