@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.dotProduct
 import graft.operators.SimOps
 
 /** ANN scaling probe at 5× the standard stress tier (default fixture:
@@ -26,7 +27,6 @@ object AnnScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val n = Tables.vectorCount(spark, dir)
 
     def topSets(df: org.apache.spark.sql.DataFrame)
@@ -46,21 +46,15 @@ object AnnScaleBench {
     // ≤4096 vectors keeps the historical 10-seed shape so small-tier
     // artifacts stay comparable across rounds.
     val nCells = if (n <= 4096) 10 else SimOps.scaledCells(n)
-    // SPARK_GRAFT_ANN_BUILD=hier switches the assignment to the
-    // two-level coarse-grouped quantizer (O(n^1.25) build flops vs the
-    // flat argmax's O(n^1.5)); same artifact shapes, same serving path,
-    // same recall gates below.
-    val buildMode = sys.env.getOrElse("SPARK_GRAFT_ANN_BUILD", "exact")
+    // the two-level coarse-grouped assignment; the default coarse probe
+    // is exhaustive (the flat argmax), SPARK_GRAFT_ANN_COARSE_PROBES
+    // bounds it (O(n^1.25) build flops vs the flat argmax's O(n^1.5));
+    // same artifact shapes, same serving path, same recall gates below.
     val coarseProbes = sys.env.get("SPARK_GRAFT_ANN_COARSE_PROBES")
-      .map(_.toInt).getOrElse(8)
+      .map(_.toInt).getOrElse(nCells)
     val tb0 = System.nanoTime()
-    val (cDf, aDf) = buildMode match {
-      case "hier" =>
-        SimOps.annIndexHierarchical(spark, dir, nCells, coarseProbes)
-      case "exact" => SimOps.annIndexWith(spark, dir, nCells)
-      case other => sys.error(s"SPARK_GRAFT_ANN_BUILD '$other' not in " +
-        "{exact, hier}")
-    }
+    val (cDf, aDf) =
+      SimOps.annIndexHierarchical(spark, dir, nCells, coarseProbes)
     cDf.write.mode("overwrite").parquet(s"$dir/ann_index/centroids")
     // one task per cell -> one file per partition dir, not tasks×cells
     aDf.repartition(col("cell")).write.mode("overwrite")
@@ -71,8 +65,9 @@ object AnnScaleBench {
 
     def qFrame(filter: org.apache.spark.sql.Column) =
       Tables.embeddings(spark, dir).filter(filter)
-        .selectExpr("vec_id AS q_id", "embedding AS q_emb",
-          "sqrt(graft_dot(embedding, embedding)) AS q_norm")
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+          sqrt(dotProduct(col("embedding"), col("embedding")))
+            .as("q_norm"))
     // the serving SHAPE must hold at this scale: dynamic partition
     // pruning live (not degraded to the scan-everything `(true)` form)
     val servedDf = SimOps.annSearchPruned(spark,
@@ -126,8 +121,7 @@ object AnnScaleBench {
     require(plantedIvf >= 0.98, s"IVF planted recall $plantedIvf < 0.98")
     require(plantedSrp >= 0.98, s"SRP planted recall $plantedSrp < 0.98")
     println(s"""{"metric":"ann_scale","n_vectors":$n,"ivf_cells":$nCells,""" +
-      s""""build_mode":"$buildMode","coarse_probes":""" +
-      (if (buildMode == "hier") s"$coarseProbes," else "null,") +
+      s""""coarse_probes":$coarseProbes,""" +
       s""""sec_brute":$tBrute,"sec_index_build":$tBuild,""" +
       s""""sec_served_pruned":$tServe,"recall_ivf":${recallOf(served)},""" +
       s""""planted_pairs":${plantedQs.size},""" +

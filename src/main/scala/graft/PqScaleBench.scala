@@ -44,7 +44,6 @@ object PqScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val n = Tables.vectorCount(spark, dir)
     val cells = SimOps.scaledCells(n)
     val strideStrat = SimOps.pqTrainStride(n)
@@ -80,8 +79,8 @@ object PqScaleBench {
       a
     }
     val (tCentsR, centsR) = timed(SimOps.scaledCents(spark, assignedRawR))
-    val (tTrainR, cbR) = timed(SimOps.pqrCodebook(spark, dir,
-      cells = cells, centsOverride = Some(centsR)))
+    val (tTrainR, cbR) =
+      timed(SimOps.pqrCodebook(spark, dir, centsR, cells))
     val (tEncodeP, encodedP) = timed {
       val e = SimOps.pq8Encoded(spark, dir, cbP)
         .transform(Checkpoints.truncate)
@@ -95,7 +94,7 @@ object PqScaleBench {
       e
     }
     val (tAssign, assignedS) = timed {
-      val a = SimOps.annIvfPqScaled(spark, dir, encodedS, cbS, cells)
+      val a = SimOps.annIvfPqScaled(spark, dir, encodedS, cells)
         .transform(Checkpoints.truncate)
       a.count()
       a
@@ -123,14 +122,15 @@ object PqScaleBench {
       timed(topSets(SimOps.annPqOnCb(spark, dir, encodedP, cbP)))
     val (tAdcS, adcSSets) =
       timed(topSets(SimOps.annPqOnCb(spark, dir, encodedS, cbS)))
-    val (tRerank, rerankSets) = timed(topSets(
-      SimOps.annPqRerank(spark, dir, 50, encodedOpt = Some(encoded))))
-    val (tRerankP, rerankPSets) = timed(topSets(
-      SimOps.annPqRerank(spark, dir, 50, encodedOpt = Some(encodedP),
-        cbOpt = Some(cbP))))
-    val (tRerankS, rerankSSets) = timed(topSets(
-      SimOps.annPqRerank(spark, dir, 50, encodedOpt = Some(encodedS),
-        cbOpt = Some(cbS))))
+    // two-stage search: the exhaustive ADC shortlist-50, re-ranked exactly
+    def rerank(shortlist: org.apache.spark.sql.DataFrame) =
+      topSets(SimOps.exactCosineRerank(spark, dir, shortlist))
+    val (tRerank, rerankSets) = timed(rerank(SimOps.annPqOnCb(spark, dir,
+      encoded, SimOps.pqCodebook(spark, dir), topK = 50)))
+    val (tRerankP, rerankPSets) = timed(rerank(
+      SimOps.annPqOnCb(spark, dir, encodedP, cbP, topK = 50)))
+    val (tRerankS, rerankSSets) = timed(rerank(
+      SimOps.annPqOnCb(spark, dir, encodedS, cbS, topK = 50)))
     val (tIvfPq, ivfPqSets) = timed(topSets(
       SimOps.annIvfPq(spark, dir, probes = 4,
         encodedOpt = Some(encoded))))
@@ -163,11 +163,12 @@ object PqScaleBench {
         val (t, sets) = timed(topSets(q(p, sl)))
         (p, sl, t, recall(sets))
       }
-    val ladderS = ladderOf((p, sl) => SimOps.annIvfPqScaledRerank(
-      spark, dir, assignedS, cbS, cells, probes = p, shortlist = sl))
-    val ladderR = ladderOf((p, sl) => SimOps.annIvfPqrScaledRerank(
-      spark, dir, assignedR, cbR, centsR, cells, probes = p,
-      shortlist = sl))
+    val ladderS = ladderOf((p, sl) => SimOps.exactCosineRerank(spark, dir,
+      SimOps.annIvfPqScaledQuery(spark, dir, assignedS, cbS, cells,
+        probes = p, topK = sl)))
+    val ladderR = ladderOf((p, sl) => SimOps.exactCosineRerank(spark, dir,
+      SimOps.annIvfPqrScaledQuery(spark, dir, assignedR, cbR, centsR,
+        cells, probes = p, topK = sl)))
 
     // planted near-dups: legacy 32-cell gate + both scaled-path gates.
     // The residual batch is thinned 4× (per-cell LUTs broadcast

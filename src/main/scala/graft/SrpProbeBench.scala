@@ -30,7 +30,6 @@ object SrpProbeBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val n = Tables.vectorCount(spark, dir)
     val bits = SimOps.srpBitsPerBand(n)
     val bands = SimOps.srpBands

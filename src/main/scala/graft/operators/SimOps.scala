@@ -22,9 +22,15 @@ import graft.functions.GraftFunctions.{dotProduct => dot, pqAdc, pqEncode}
   * IVF cells, SRP band buckets, PQ/IVFADC shortlists) × a scorer (exact
   * `dotProduct` cosine or integer `pqAdc`) × an optional exact-cosine
   * re-rank ([[exactCosineRerank]]), ending in the [[rankTopK]] heap. The
-  * generators share one coarse-quantizer law ([[cellArgMax]] and its
-  * scalar twin [[argMaxIndex]], the two-level [[walkCell]] /
-  * [[probeWalk]]) and one driver LUT builder ([[lutFlatOf]]).
+  * generators share one coarse-quantizer law ([[cellArgMax]] below
+  * [[ivfLiteralCellBound]] cells, the two-level [[walkCell]] /
+  * [[probeWalk]] above it and on every scaled build), one fixed-point
+  * centroid census ([[centroidsOf]]) and one driver LUT builder
+  * ([[lutFlatOf]]). Each index kind has one build: the IVF cells
+  * ([[annIndexWith]] / [[annIndexHierarchical]]), the PQ code stores
+  * ([[pqEncoded]], [[pq8Encoded]], [[annIvfPqScaled]]) and the residual
+  * IVFADC store ([[annIvfPqrAssigned]] → [[annIvfPqrBuild]]); the
+  * oracled fixture forms are these builds at exhaustive coarse probes.
   *
   * Scale notes: the brute-force path broadcasts the (small) query set and
   * streams the corpus once — linear in corpus size, the right baseline.
@@ -560,9 +566,14 @@ object SimOps extends OpModule {
     */
   def annIndexWith(s: SparkSession, dir: String,
       nSeeds: Int): (DataFrame, DataFrame) =
-    annIndexWithImpl(s, dir, nSeeds, nSeeds > ivfLiteralCellBound)
+    ivfBuild(s, dir,
+      if (nSeeds <= ivfLiteralCellBound)
+        cellArgMax(typedlit(driverSeeds(s, dir, nSeeds)))
+      else twoLevelCell(s, dir, nSeeds, coarseProbes = nSeeds))
 
-  /** Above this cell count the assignment quantizer travels as a
+  /** Above this cell count the assignment runs the compiled two-level
+    * walk ([[twoLevelCell]]) at EXHAUSTIVE coarse probes — the flat
+    * argmax (Round15OpsSpec, CoarseWalkSpec) — with the quantizer as a
     * BROADCAST VARIABLE, not a `typedlit` expression: a plan-embedded
     * literal of cells × 64 doubles grows with the corpus (√n sizing), and
     * past a few hundred structs the generated compare loop blows the
@@ -570,11 +581,9 @@ object SimOps extends OpModule {
     * fallback WARN at 512 cells, i.e. the expression form was already
     * running INTERPRETED exactly where it gets hot, and at 100M vectors
     * (√n ≈ 10k cells) the literal itself becomes a plan-serialization
-    * hazard. The broadcast path ships the same quantizer once per
-    * executor and runs a JIT-compiled argmax; every oracle-frozen
-    * configuration (10-seed llm_ann_ivf, 32-cell dedup quantizers) stays
-    * comfortably under the bound, so the expression form remains their
-    * replayed definition.
+    * hazard. Every oracle-frozen configuration (10-seed llm_ann_ivf,
+    * 32-cell dedup quantizers) stays comfortably under the bound, so the
+    * expression form remains their replayed definition.
     */
   private[graft] val ivfLiteralCellBound = 64
 
@@ -600,45 +609,71 @@ object SimOps extends OpModule {
     bc
   }
 
-  /** [[annIndexWith]] with the assignment path made explicit (specs pin
-    * the two paths bit-identical — see Round14OpsSpec): the literal
-    * [[cellArgMax]] expression, or its scalar twin [[argMaxIndex]] over a
-    * broadcast quantizer — the same strict left-to-right double dot
-    * ([[graft.functions.DotProduct]]), NaN score best, ties to the
-    * smaller seed id.
+  /** The one IVF build: every vector with its `cell`, and the
+    * [[centroidsOf]] census over that assignment.
     */
-  private[graft] def annIndexWithImpl(s: SparkSession, dir: String,
-      nSeeds: Int, broadcastAssign: Boolean): (DataFrame, DataFrame) = {
-    val seeds = driverSeeds(s, dir, nSeeds)
-    val cell = if (!broadcastAssign) cellArgMax(typedlit(seeds)) else {
-      val bc = quantizerBroadcast(s,
-        (seeds.map(_._1).toArray, seeds.map(_._2.toArray).toArray))
-      udf((v: Seq[Float]) =>
-        bc.value._1(argMaxIndex(toDoubles(v), bc.value._2)))
-        .asNonNullable()(col("embedding"))
-    }
+  private def ivfBuild(s: SparkSession, dir: String,
+      cell: Column): (DataFrame, DataFrame) = {
     val assigned = withNorm(Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding"), col("norm"), cell.as("cell"))
-    (centroidsOf(assigned), assigned)
+    (centroidsOf(s, assigned), assigned)
   }
 
-  /** Fixed-point centroid refinement over a cell assignment — the shared
-    * tail of every IVF build: per-dimension micro-unit (1e-6) integer
-    * sums, exact longs no partition order can perturb, one deterministic
-    * division per component.
+  /** Fixed-point centroid census over a (cell, embedding) assignment —
+    * the shared tail of every IVF and IVFADC build: per-dimension
+    * micro-unit (1e-6) integer sums, exact longs no partition order can
+    * perturb, one deterministic division per component. One
+    * mapPartitions pass accumulates per-(cell, dim) LONG sums and member
+    * counts into a per-partition table, so the finishing aggregate runs
+    * over partitions × cells × dim partial rows instead of n × dim
+    * exploded elements (640M at 10M vectors as an expression census).
+    * The per-element quantum is round-half-away(x::double · 10⁶) as a
+    * long — Spark's `round(x, 0)` ≡ BigDecimal HALF_UP, the oracle's
+    * law (the [[roundAway]] semantics; Math.round differs at negative
+    * halves) — and exact long addition is order-independent, so
+    * partition boundaries cannot perturb the census.
     */
-  private def centroidsOf(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cell"), posexplode(col("embedding")))
+  private[graft] def centroidsOf(s: SparkSession,
+      assigned: DataFrame): DataFrame = {
+    import s.implicits._
+    val partials = assigned.select(col("cell"), col("embedding"))
+      .as[(Long, Array[Float])]
+      .mapPartitions { it =>
+        // local defs only — capturing object methods drags the module
+        // into the closure
+        def rnd(d: Double): Long =
+          if (d.isNaN) 0L // Spark: round passes NaN through, cast → 0
+          else if (d == Double.PositiveInfinity) Long.MaxValue
+          else if (d == Double.NegativeInfinity) Long.MinValue
+          else BigDecimal(d).setScale(0,
+            scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
+        val sums = scala.collection.mutable.HashMap
+          .empty[Long, Array[Long]]
+        val cnts = scala.collection.mutable.HashMap.empty[Long, Long]
+        it.foreach { case (cell, v) =>
+          val acc = sums.getOrElseUpdate(cell, new Array[Long](v.length))
+          var i = 0
+          while (i < v.length) {
+            acc(i) += rnd(v(i).toDouble * 1000000.0)
+            i += 1
+          }
+          cnts.update(cell, cnts.getOrElse(cell, 0L) + 1L)
+        }
+        sums.iterator.map { case (cell, ms) =>
+          (cell, ms.toSeq, cnts(cell))
+        }
+      }
+      .toDF("cell", "ms", "cnt")
+    partials
+      .select(col("cell"), col("cnt"), posexplode(col("ms")))
       .groupBy(col("cell"), col("pos"))
-      .agg(sum(round(col("col").cast("double") * lit(1000000.0), 0)
-          .cast("long")).as("ms"),
-        count(lit(1)).as("cnt"))
+      .agg(sum(col("col")).as("ms"), sum(col("cnt")).as("cnt"))
       .withColumn("v", col("ms").cast("double") /
         (lit(1000000.0) * col("cnt").cast("double")))
       .groupBy(col("cell"))
       .agg(array_sort(collect_list(struct(col("pos"), col("v"))))
         .getField("v").as("centroid"))
+  }
 
   /** A seed's score as an ascending sort key: −dot, with a NaN dot
     * mapped to −∞ (ranked best) — the scalar form of [[seedKeys]].
@@ -655,8 +690,8 @@ object SimOps extends OpModule {
     vd
   }
 
-  /** Driver- and executor-side flat argmax: the index of the unit vector
-    * `vd` scores highest against — the [[cellArgMax]] law in scalar code
+  /** Driver-side flat argmax: the index of the unit vector `vd` scores
+    * highest against — the [[cellArgMax]] law in scalar code
     * (NaN best, strict `<` keeps the first of equal scores, so with ids
     * ascending ties go to the smaller sid).
     */
@@ -680,6 +715,12 @@ object SimOps extends OpModule {
   private type PivotGroups =
     (Array[Array[Double]], Array[Array[(Long, Array[Double])]])
 
+  /** ⌈√cells⌉ — the pivot count, and the smallest `coarseProbes` at
+    * which the two-level walks visit every seed (the flat argmax).
+    */
+  private def pivotCount(cells: Int): Int =
+    math.ceil(math.sqrt(cells.toDouble)).toInt
+
   /** Driver-side grouping of the `cells`-seed quantizer: each seed hangs
     * on its [[argMaxIndex]] pivot — a pass over the seed array, trivial
     * next to any corpus pass. The build walk and the query probe walk
@@ -692,7 +733,7 @@ object SimOps extends OpModule {
       cells: Int): PivotGroups = {
     val seeds = driverSeeds(s, dir, cells)
       .map { case (id, u) => (id, u.toArray) }.toArray
-    val pivots = seeds.take(math.ceil(math.sqrt(cells.toDouble)).toInt)
+    val pivots = seeds.take(pivotCount(cells))
       .map(_._2)
     val groups = seeds.groupBy { case (_, u) => argMaxIndex(u, pivots) }
     (pivots, pivots.indices.map(p =>
@@ -788,12 +829,8 @@ object SimOps extends OpModule {
     * (centroids, assigned) feed [[annSearchPruned]] like any build.
     */
   private[graft] def annIndexHierarchical(s: SparkSession, dir: String,
-      nSeeds: Int, coarseProbes: Int = 4): (DataFrame, DataFrame) = {
-    val assigned = withNorm(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("embedding"), col("norm"),
-        twoLevelCell(s, dir, nSeeds, coarseProbes).as("cell"))
-    (centroidsOf(assigned), assigned)
-  }
+      nSeeds: Int, coarseProbes: Int = 4): (DataFrame, DataFrame) =
+    ivfBuild(s, dir, twoLevelCell(s, dir, nSeeds, coarseProbes))
 
   /** Query-time IVF search against a (possibly persisted and reloaded)
     * [[annIndex]]: rank the broadcast centroids per query, probe the top
@@ -919,14 +956,13 @@ object SimOps extends OpModule {
     * bounded as n grows; more bands would raise recall linearly in
     * table size. The iid fixture is
     * SRP's worst case (mean cosine ≈ 0 ⇒ per-bit collision ≈ ½);
-    * real near-dup corpora concentrate far above it.
+    * real near-dup corpora concentrate far above it. The search is
+    * [[annSrpMultiProbe]] at radius 0: the one probe mask, 0, XORs to
+    * the query's own bucket.
     */
-  def annSrp(s: SparkSession, dir: String): DataFrame = {
-    val bits = srpBitsPerBand(Tables.vectorCount(s, dir))
-    val planes = driverSeeds(s, dir, srpBands * bits)
-    srpSearch(s, dir, planes, bits,
-      srpAssigned(s, planes, bits, withNorm(Tables.embeddings(s, dir))))
-  }
+  def annSrp(s: SparkSession, dir: String): DataFrame =
+    annSrpMultiProbe(s, dir, srpBitsPerBand(Tables.vectorCount(s, dir)),
+      srpBands, 0, col("vec_id") < 20)
 
   /** The persisted LSH table — (band, bucket, vec_id, embedding, norm,
     * bits), what a corpus snapshot writes ONCE (bucketed by
@@ -958,14 +994,7 @@ object SimOps extends OpModule {
     */
   def srpTableAppend(s: SparkSession, dir: String,
       table: DataFrame): DataFrame = {
-    require(table.columns.contains("bits"),
-      "persisted SRP table lacks the 'bits' layout column — cannot " +
-        "append under an unknown band layout")
-    val stored = table.select(col("bits")).distinct().collect()
-    require(stored.length == 1,
-      s"persisted SRP table carries ${stored.length} distinct bits " +
-        "values — refusing to append to a mixed-layout artifact")
-    val bits = stored.head.getInt(0)
+    val bits = storedSrpBits(table)
     val boundary = Tables.snapshotBoundary(s, dir, "embeddings")
     srpAssigned(s, driverSeeds(s, dir, srpBands * bits), bits,
       withNorm(Tables.embeddings(s, dir).filter(col("vec_id") >= boundary)))
@@ -982,7 +1011,16 @@ object SimOps extends OpModule {
     * table (two builds concatenated) fails loudly.
     */
   def annSrpFromStore(s: SparkSession, dir: String,
-      table: DataFrame): DataFrame = {
+      table: DataFrame): DataFrame =
+    annSrpMultiProbe(s, dir, storedSrpBits(table), srpBands, 0,
+      col("vec_id") < 20, Some(table.drop("bits")))
+
+  /** The build-time bits-per-band a persisted [[srpTableArtifact]]
+    * carries — the one reader both the serve and the append paths use.
+    * A table without the column, or with two values (two builds
+    * concatenated), fails loudly.
+    */
+  private def storedSrpBits(table: DataFrame): Int = {
     require(table.columns.contains("bits"),
       "persisted SRP table lacks the 'bits' layout column — rebuild the " +
         "artifact with srpTableArtifact (build-time bits must travel " +
@@ -991,23 +1029,8 @@ object SimOps extends OpModule {
     require(stored.length == 1,
       s"persisted SRP table carries ${stored.length} distinct bits " +
         "values — refusing a mixed-layout artifact")
-    val bits = stored.head.getInt(0)
-    srpSearch(s, dir, driverSeeds(s, dir, srpBands * bits), bits,
-      table.drop("bits"))
+    stored.head.getInt(0)
   }
-
-  /** The SRP query-time search: hash the query batch against the SAME
-    * frozen planes, band-bucket equi-join into the LSH table, collapse
-    * multi-band collisions, exact cosine + bounded-heap top-5.
-    */
-  private def srpSearch(s: SparkSession, dir: String,
-      planes: Seq[(Long, Seq[Double])], bits: Int,
-      corpus: DataFrame, bands: Int = srpBands,
-      queryPred: Column = col("vec_id") < 20): DataFrame =
-    srpTopK(srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir).filter(queryPred)), bands)
-      .select(col("band"), col("bucket"), col("vec_id").as("q_id"),
-        col("embedding").as("q_emb"), col("norm").as("q_norm")), corpus)
 
   /** Shared candidate-ranking tail of every SRP search: band-bucket
     * equi-join of the (broadcast, tiny) query probe frame into the LSH
@@ -1772,9 +1795,9 @@ object SimOps extends OpModule {
     * the scanned state is 8 bytes/vector instead of 256 — the
     * compression that keeps a 100 TB index in memory; production
     * composes this with [[annIndex]]'s IVF cells (scan only probed
-    * cells) and re-ranks the ADC shortlist exactly
-    * ([[annPqRerank]]). Parity: codebook = data-derived literal, every
-    * distance micro-quantized BEFORE any comparison, ADC = exact long
+    * cells) and re-ranks an [[annPqOnCb]] shortlist exactly
+    * ([[exactCosineRerank]]). Parity: codebook = data-derived literal,
+    * every distance micro-quantized BEFORE any comparison, ADC = exact long
     * sums, ties on (adc, vec_id) — the heap's (score desc, id asc)
     * order with score = −adc equals the oracle's
     * `ORDER BY adc_micro, vec_id`.
@@ -1823,9 +1846,10 @@ object SimOps extends OpModule {
 
   /** [[annPqOn]] against an EXPLICIT codebook — the shared exhaustive
     * ADC scan the 4-bit frozen family ([[annPq]]), the trained 8-bit
-    * family ([[annPq8]]) and the [[annPqRerank]] shortlist all run; only
-    * the codebook (and with it the LUT width) and the depth differ. The
-    * query LUTs are built driver-side ([[lutFrame]]).
+    * family ([[annPq8]]) and a re-rank shortlist (`topK` deep, fed to
+    * [[exactCosineRerank]]) all run; only the codebook (and with it the
+    * LUT width) and the depth differ. The query LUTs are built
+    * driver-side ([[lutFrame]]).
     */
   private[graft] def annPqOnCb(s: SparkSession, dir: String,
       encoded: DataFrame, cb: Seq[Seq[Seq[Double]]],
@@ -2056,70 +2080,21 @@ object SimOps extends OpModule {
 
   /** Fixture coarse-quantizer size for the ORACLED residual family —
     * the frozen 32-seed configuration ([[driverSeeds]]); the scaled
-    * serving forms re-size to [[scaledCells]](n).
+    * serving forms run the same build re-sized to [[scaledCells]](n).
     */
   val pqrCells = 32
-
-  /** The row's residual against its assigned cell's CENTROID:
-    * r[i] = embedding[i]::double − centroid(cell)[i] — one IEEE
-    * subtraction per element, replayed verbatim by the oracle. The
-    * subtracted vector is the fixed-point cell MEAN ([[centroidsOf]]'s
-    * exact micro-sum law), NOT the unit seed: Jégou §IV-B's residual is
-    * against the coarse centroid, and the centroid lives at DATA scale
-    * (‖mean‖ grows with the coarse structure) where a unit seed removes
-    * at most a norm-1 component — on clustered corpora the difference
-    * is the whole point of IVFADC. Cell ids are contiguous from 0
-    * ([[driverSeeds]]), so the lookup is a plain element_at into the
-    * dense centroid literal (empty cells hold an all-zero placeholder
-    * no row ever reads — a cell with no members contributes no rows).
-    * Interpreted zip_with is fine HERE: the expression form is the
-    * fixture-sized oracle surface; stress tiers build residuals in the
-    * compiled [[annIvfPqrBuild]] pass, spec-pinned value-identical.
-    */
-  private def residualCol(centsLit: Column): Column =
-    zip_with(col("embedding"),
-      element_at(centsLit, (col("cell") + lit(1)).cast("int")),
-      (x, c) => x.cast("double") - c)
-
-  /** The coarse-cell centroids as a driver map (cell → 64 doubles):
-    * flat-argmax assignment, then [[centroidsOf]]'s fixed-point mean
-    * (per-dim exact micro-unit long sums, one double division) — the
-    * deterministic law the oracle replays with the same
-    * round/sum/divide. A √n-cell centroid table is ~cells × 512 B —
-    * a model artifact, not data ([[driverSeeds]]' class).
-    */
-  private[graft] def pqrCentroids(s: SparkSession, dir: String,
-      cells: Int = pqrCells): Map[Long, Array[Double]] = {
-    val seeds = driverSeeds(s, dir, cells)
-    val assigned = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("cell", cellArgMax(typedlit(seeds)))
-    collectCentroids(centroidsOf(assigned))
-  }
 
   /** Collect a (cell, centroid) frame into the driver map every
     * residual build and query shares.
     */
-  private[graft] def collectCentroids(cents: DataFrame)
-      : Map[Long, Array[Double]] =
-    cents.collect().map { r =>
-      (r.getLong(0),
-        r.getSeq[Double](1).toArray)
-    }.toMap
-
-  /** Dense centroid literal for [[residualCol]]: index = cell id,
-    * empty cells zero-filled (never read — no member rows).
-    */
-  private def centsLiteral(cents: Map[Long, Array[Double]],
-      cells: Int): Seq[Seq[Double]] =
-    (0 until cells).map(c =>
-      cents.get(c.toLong).fold(Seq.fill(pqSubspaces * pqSubDim)(0.0))(
-        _.toSeq))
+  private def collectCentroids(cents: DataFrame): Map[Long, Array[Double]] =
+    cents.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .toMap
 
   /** The query-side flat LUT of [[pqDistMicro]] entries over a PREPARED
     * (already residual-ized where applicable) driver vector — shared by
-    * every driver-built LUT (raw scaled, residual fixture, residual
-    * scaled): lut[(m·K)+k] = round(Σ_i (v[m·D+i] − cb[m][k][i])²·10⁶),
+    * every driver-built LUT (raw and residual):
+    * lut[(m·K)+k] = round(Σ_i (v[m·D+i] − cb[m][k][i])²·10⁶),
     * strict left-to-right, Math.round on the non-negative distance.
     */
   private def lutFlatOf(vd: Array[Double],
@@ -2153,20 +2128,16 @@ object SimOps extends OpModule {
     * [[pq8Codebook]] — init = residuals of the first 256 sample
     * members, [[pq8Iters]] rounds, 256 codes. Deterministic end-to-end,
     * so the `llm_ann_ivfadc` oracle replays the whole pipeline
-    * value-for-value. Callers who
-    * already built the store pass ITS centroids (`centsOverride`) so
-    * book and index quantize against the identical coarse model.
+    * value-for-value. `cents` is the store's own census
+    * ([[scaledCents]]), so book and index quantize against the
+    * identical coarse model.
     */
   private[graft] def pqrCodebook(s: SparkSession, dir: String,
-      cells: Int = pqrCells,
-      strideOverride: Option[Long] = None,
-      centsOverride: Option[Map[Long, Array[Double]]] = None)
-      : Seq[Seq[Seq[Double]]] = {
-    val stride = strideOverride.getOrElse(
-      pqTrainStride(Tables.vectorCount(s, dir)))
+      cents: Map[Long, Array[Double]],
+      cells: Int = pqrCells): Seq[Seq[Seq[Double]]] = {
+    val stride = pqTrainStride(Tables.vectorCount(s, dir))
     val seeds = driverSeeds(s, dir, cells).toArray
     val units = seeds.map(_._2.toArray)
-    val cents = centsOverride.getOrElse(pqrCentroids(s, dir, cells))
     val train = trainSample(s, dir, stride)
     require(train.length >= pq8Codes,
       s"residual codebook needs ≥ $pq8Codes embeddings, " +
@@ -2178,10 +2149,10 @@ object SimOps extends OpModule {
       s"residual init needs the first 256 stride-$stride sample ids")
     val sample = train.map { case (_, v) =>
       val vd = v.map(_.toDouble).toArray
-      // Under a bounded-probe centsOverride a sample's FLAT cell can be
+      // Under a bounded-probe assignment a sample's FLAT cell can be
       // empty in the store's two-level assignment — fall back to the
       // raw vector (zero centroid), a benign training-set perturbation.
-      // Never hit on the oracle path: there cents comes from the same
+      // Never hit on the oracle path: there the exhaustive walk IS the
       // flat argmax that assigned this very sample member.
       val c = cents.getOrElse(seeds(argMaxIndex(vd, units))._1,
         new Array[Double](vd.length))
@@ -2189,42 +2160,6 @@ object SimOps extends OpModule {
     }
     val cb = trainPqBook(sample, pq8Codes, pq8Iters)
     cb.map(_.map(_.toSeq: Seq[Double]).toSeq: Seq[Seq[Double]]).toSeq
-  }
-
-  /** The residual-encoded corpus frame (vec_id, embedding, norm, cell,
-    * codes): flat-argmax cell, residual vs the cell's centroid, codes
-    * via the codegen'd [[graft.functions.PqEncode]] over the residual —
-    * 8 bytes of PQ state + one long cell id per vector, exactly the
-    * IVFADC index layout.
-    */
-  private[graft] def pqrEncoded(s: SparkSession, dir: String,
-      cb: Seq[Seq[Seq[Double]]],
-      cents: Map[Long, Array[Double]],
-      cells: Int = pqrCells): DataFrame = {
-    val seeds = driverSeeds(s, dir, cells)
-    withNorm(Tables.embeddings(s, dir))
-      .select(col("vec_id"), col("embedding"), col("norm"))
-      .withColumn("cell", cellArgMax(typedlit(seeds)))
-      .withColumn("codes", pqEncode(
-        residualCol(typedlit(centsLiteral(cents, cells))), cb))
-      .select(col("vec_id"), col("embedding"), col("norm"),
-        col("cell"), col("codes"))
-  }
-
-  /** Residual-ADC top-5 over a prepared (cell, vec_id, codes) store at
-    * EXHAUSTIVE probes — the oracled surface of the IVFADC family: every
-    * query probes every OCCUPIED cell ([[residualAdcTopK]]; empty cells
-    * have no centroid and no members, so no table).
-    */
-  private[graft] def annPqrOn(s: SparkSession, dir: String,
-      store: DataFrame, cb: Seq[Seq[Seq[Double]]],
-      cents: Map[Long, Array[Double]],
-      cells: Int = pqrCells,
-      queryPred: Column = col("vec_id") < 20,
-      topK: Int = 5): DataFrame = {
-    val occupied = cents.keys.toSeq.sorted
-    residualAdcTopK(s, queryBatch(s, dir, queryPred), _ => occupied,
-      store, cb, cents, topK)
   }
 
   /** The residual-ADC scan every IVFADC search shares. The LUT is PER
@@ -2266,35 +2201,51 @@ object SimOps extends OpModule {
     * book's dynamic range goes to NEIGHBORHOOD structure instead of
     * coarse position (the r17 verdict's top item: raw-encoded trained
     * books INVERTED at 10M, rerank8 0.15 < untrained 0.20).
+    *
+    * The fixture form IS the scaled build ([[pqrModel]]) at
+    * [[pqrCells]] cells with exhaustive coarse probes, queried at
+    * exhaustive probes — every query scans every occupied cell.
     */
   def annPqr(s: SparkSession, dir: String): DataFrame = {
-    val cents = pqrCentroids(s, dir)
-    val cb = pqrCodebook(s, dir, centsOverride = Some(cents))
-    // pinned (pruned to cell + the 8-byte codes) for the [[annPq]]
-    // reason: un-materialized, the residual encode sits on the cell
-    // equi-join's stream side and re-runs once per matched (query,
-    // row) pair in the codegen'd join loop
-    annPqrOn(s, dir, graft.Checkpoints.truncate(
-      pqrEncoded(s, dir, cb, cents)
-        .select(col("cell"), col("vec_id"), col("codes"))), cb, cents)
+    val (store, cents, cb) = pqrModel(s, dir)
+    // pinned for the [[annPq]] reason: un-materialized, the residual
+    // encode sits on the cell equi-join's stream side and re-runs once
+    // per matched (query, row) pair in the codegen'd join loop
+    annIvfPqrScaledQuery(s, dir, graft.Checkpoints.truncate(store), cb,
+      cents, pqrCells, probes = pqrCells, coarseProbes = pqrCells)
+  }
+
+  /** The fixture residual model — (cell, vec_id, codes) store, coarse
+    * centroids, trained codebook: the two-level walk at [[pqrCells]]
+    * cells and exhaustive coarse probes (the flat argmax), its
+    * [[scaledCents]] census, the [[pqrCodebook]] over that census and
+    * the [[annIvfPqrBuild]] encode. The assignment is pinned once
+    * because the census and the encode both read it.
+    */
+  private def pqrModel(s: SparkSession, dir: String)
+      : (DataFrame, Map[Long, Array[Double]], Seq[Seq[Seq[Double]]]) = {
+    val assigned = graft.Checkpoints.truncate(
+      annIvfPqrAssigned(s, dir, pqrCells, coarseProbes = pqrCells))
+    val cents = scaledCents(s, assigned)
+    val cb = pqrCodebook(s, dir, cents)
+    (annIvfPqrBuild(s, assigned, cb, cents), cents, cb)
   }
 
   /** [[annPqr]] serving from the persisted residual-index artifact (the
-    * [[annPq8Served]] shape, widened to the FULL IVFADC model: codes,
-    * the coarse-centroid table, and the trained residual codebook all
-    * land once per fixture fingerprint — a serve run pays only its
-    * per-cell LUT builds + the probed-cell ADC scan, never the corpus
-    * centroid census or the k-means). Doubles round-trip parquet
-    * exactly, so the oracle is unchanged — stored model values are the
-    * build's own IEEE bits and [[annPqrOn]] is the same scan.
+    * [[annPq8Served]] shape, widened to the FULL IVFADC model: the
+    * (cell, vec_id, codes) store, the coarse-centroid table, and the
+    * trained residual codebook all land once per fixture fingerprint —
+    * a serve run pays only its per-cell LUT builds + the probed-cell ADC
+    * scan, never the corpus centroid census or the k-means). Doubles
+    * round-trip parquet exactly, so the oracle is unchanged — stored
+    * model values are the build's own IEEE bits and the query is
+    * [[annPqr]]'s.
     */
   def annPqrServed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val root = ArtifactStore.cached("pqr_codes", dir) { out =>
-      val cents = pqrCentroids(s, dir)
-      val cb = pqrCodebook(s, dir, centsOverride = Some(cents))
-      pqrEncoded(s, dir, cb, cents).write.mode("overwrite")
-        .parquet(s"$out/encoded.parquet")
+      val (store, cents, cb) = pqrModel(s, dir)
+      store.write.mode("overwrite").parquet(s"$out/encoded.parquet")
       cents.toSeq.map { case (c, v) => (c, v.toSeq) }
         .toDF("cell", "centroid").coalesce(1)
         .write.mode("overwrite").parquet(s"$out/cents.parquet")
@@ -2303,38 +2254,14 @@ object SimOps extends OpModule {
         .toDF("m", "k", "c").coalesce(1)
         .write.mode("overwrite").parquet(s"$out/codebook.parquet")
     }
-    val cents = s.read.parquet(s"$root/cents.parquet").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toMap
+    val cents = collectCentroids(s.read.parquet(s"$root/cents.parquet"))
     val cb: Seq[Seq[Seq[Double]]] =
       s.read.parquet(s"$root/codebook.parquet").collect()
         .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2)))
         .sortBy(_._1).groupBy(_._1._1).toSeq.sortBy(_._1)
         .map { case (_, ks) => ks.sortBy(_._1._2).map(_._2).toSeq }
-    annPqrOn(s, dir, s.read.parquet(s"$root/encoded.parquet"), cb, cents)
-  }
-
-  /** The production serving form of [[annPq]]: ADC proposes a SHORTLIST
-    * (top-`shortlist` by the 8-lookup estimator), exact cosine re-ranks
-    * it to top-5 — the standard two-stage PQ search that buys back the
-    * recall the 4-bit quantization costs, at `shortlist` exact
-    * distances per query instead of n. Library knob (spec-pinned recall
-    * ≥ pure ADC's on the shipped fixture); the oracled query surface
-    * stays [[annPq]]'s pure-ADC form.
-    */
-  private[graft] def annPqRerank(s: SparkSession, dir: String,
-      shortlist: Int = 50,
-      queryPred: Column = col("vec_id") < 20,
-      encodedOpt: Option[DataFrame] = None,
-      cbOpt: Option[Seq[Seq[Seq[Double]]]] = None): DataFrame = {
-    // cbOpt must match the codebook that produced encodedOpt's codes —
-    // callers pairing the trained 8-bit book pass both together; the
-    // inline default is PINNED for the [[annPq]] deferral reason
-    val cands = annPqOnCb(s, dir,
-      encodedOpt.getOrElse(graft.Checkpoints.truncate(
-        pqEncoded(s, dir).select(col("vec_id"), col("codes")))),
-      cbOpt.getOrElse(pqCodebook(s, dir)), queryPred, topK = shortlist)
-      .select(col("q_id"), col("neighbor_id").as("vec_id"))
-    exactCosineRerank(s, dir, cands, queryPred)
+    annIvfPqrScaledQuery(s, dir, s.read.parquet(s"$root/encoded.parquet"),
+      cb, cents, pqrCells, probes = pqrCells, coarseProbes = pqrCells)
   }
 
   /** IVF-PQ: the [[annPq]] ADC estimator confined to the query's
@@ -2368,7 +2295,7 @@ object SimOps extends OpModule {
       pqEncoded(s, dir).select(col("vec_id"), col("embedding"),
         col("codes"))))
     annIvfPqScaledQuery(s, dir,
-      annIvfPqScaled(s, dir, encoded, cb, 32, coarseProbes = 32), cb, 32,
+      annIvfPqScaled(s, dir, encoded, 32, coarseProbes = 32), cb, 32,
       probes, coarseProbes = 32, queryPred)
   }
 
@@ -2406,8 +2333,7 @@ object SimOps extends OpModule {
     * recall ≥ 0.98 on this path before recording any number.
     */
   private[graft] def annIvfPqScaled(s: SparkSession, dir: String,
-      encoded: DataFrame, cb: Seq[Seq[Seq[Double]]],
-      cells: Int, coarseProbes: Int = 4): DataFrame =
+      encoded: DataFrame, cells: Int, coarseProbes: Int = 4): DataFrame =
     encoded.select(twoLevelCell(s, dir, cells, coarseProbes).as("cell"),
       col("vec_id"), col("codes"))
 
@@ -2443,28 +2369,6 @@ object SimOps extends OpModule {
     rankTopK(scored, "vec_id", "adc_micro", descending = false, topK)
   }
 
-  /** The COMPOSED two-stage search at scale — Jégou et al.'s standard
-    * serving pipeline assembled from the round's pieces: the √n-cell
-    * IVF-PQ scan ([[annIvfPqScaledQuery]]) proposes a `shortlist`-deep
-    * ADC candidate list from the probed cells only, and one exact-
-    * cosine pass re-ranks it to top-5. The re-rank join touches the
-    * embedding table once, keyed by the (queries × shortlist)-row
-    * candidate frame — broadcast-sized by construction, so the whole
-    * query pipeline stays corpus-scan-free outside the probed cells.
-    * At exhaustive probes the shortlist equals [[annPqRerank]]'s
-    * (spec-pinned — same candidates, same ADC, same tie law), making
-    * the pruned form's contract auditable against the exhaustive one.
-    */
-  private[graft] def annIvfPqScaledRerank(s: SparkSession, dir: String,
-      assigned: DataFrame, cb: Seq[Seq[Seq[Double]]], cells: Int,
-      probes: Int, shortlist: Int = 50, coarseProbes: Int = 4,
-      queryPred: Column = col("vec_id") < 20): DataFrame = {
-    val cands = annIvfPqScaledQuery(s, dir, assigned, cb, cells, probes,
-      coarseProbes, queryPred, topK = shortlist)
-      .select(col("q_id"), col("neighbor_id").as("vec_id"))
-    exactCosineRerank(s, dir, cands, queryPred)
-  }
-
   /** The √n-cell IVF-PQ serving path as a FIRST-CLASS registered query
     * (`llm_ann_ivfpq_served` — the r17 verdict's item 3: the engine's
     * flagship scale path should not live only in a bench harness): the
@@ -2484,7 +2388,7 @@ object SimOps extends OpModule {
     val cb = pq8Codebook(s, dir)
     val cells = scaledCells(Tables.vectorCount(s, dir))
     val root = ArtifactStore.cached("ivfpq_codes", dir) { out =>
-      annIvfPqScaled(s, dir, pq8Encoded(s, dir, cb), cb, cells)
+      annIvfPqScaled(s, dir, pq8Encoded(s, dir, cb), cells)
         .write.mode("overwrite").parquet(s"$out/assigned.parquet")
     }
     annIvfPqScaledQuery(s, dir,
@@ -2500,8 +2404,8 @@ object SimOps extends OpModule {
     * ([[annIvfPqrBuild]]) both read this frame — callers persist it
     * across the two consumers instead of paying the walk twice. At
     * `coarseProbes` ≥ the pivot count the walk visits every seed and
-    * the assignment is EXACTLY [[pqrEncoded]]'s flat argmax — the
-    * identity the fixture pin rides.
+    * the assignment is EXACTLY the flat argmax — the form the oracled
+    * `llm_ann_ivfadc` ([[annPqr]]) builds.
     */
   private[graft] def annIvfPqrAssigned(s: SparkSession, dir: String,
       cells: Int, coarseProbes: Int = 4): DataFrame =
@@ -2509,73 +2413,14 @@ object SimOps extends OpModule {
       .select(twoLevelCell(s, dir, cells, coarseProbes).as("cell"),
         col("vec_id"), col("embedding"))
 
-  /** Cell centroids of a compiled assignment — the scale-tier twin of
-    * [[pqrCentroids]]: the same fixed-point census law, fed by the
-    * two-level walk's cells instead of the flat argmax and computed by
-    * [[centroidsCompiled]] (the expression census explodes n × dim
-    * rows through the aggregate — 640M at 10M, the build's second-
-    * largest stage; the compiled pass accumulates the SAME exact
-    * integer sums per partition first). The collected map is
-    * ~cells × 512 B — a model artifact.
+  /** Cell centroids of a compiled assignment as the driver map every
+    * residual build and query shares: the [[centroidsOf]] census of
+    * the two-level walk's cells. The collected map is ~cells × 512 B —
+    * a model artifact, not data ([[driverSeeds]]' class).
     */
   private[graft] def scaledCents(s: SparkSession, assigned: DataFrame)
       : Map[Long, Array[Double]] =
-    collectCentroids(centroidsCompiled(s, assigned))
-
-  /** Compiled twin of [[centroidsOf]] for the stress tiers: one
-    * mapPartitions pass accumulates per-(cell, dim) micro-unit LONG
-    * sums and member counts into a per-partition table, then the same
-    * finishing aggregate runs over partitions × cells × dim partial
-    * rows instead of n × dim exploded elements. Value-identical by the
-    * integer-sum law (spec-pinned vs [[centroidsOf]]): the per-element
-    * quantum is round-half-away(x::double · 10⁶) as a long — Spark's
-    * `round(x, 0)` ≡ BigDecimal HALF_UP, replicated locally (the
-    * [[roundAway]] semantics; Math.round differs at negative halves) —
-    * and exact long addition is order-independent, so partition
-    * boundaries cannot perturb the census. The division tail is the
-    * IDENTICAL Spark expression.
-    */
-  private[graft] def centroidsCompiled(s: SparkSession,
-      assigned: DataFrame): DataFrame = {
-    import s.implicits._
-    val partials = assigned.select(col("cell"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        // local defs only — capturing object methods drags the module
-        // into the closure
-        def rnd(d: Double): Long =
-          if (d.isNaN) 0L // Spark: round passes NaN through, cast → 0
-          else if (d == Double.PositiveInfinity) Long.MaxValue
-          else if (d == Double.NegativeInfinity) Long.MinValue
-          else BigDecimal(d).setScale(0,
-            scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
-        val sums = scala.collection.mutable.HashMap
-          .empty[Long, Array[Long]]
-        val cnts = scala.collection.mutable.HashMap.empty[Long, Long]
-        it.foreach { case (cell, v) =>
-          val acc = sums.getOrElseUpdate(cell, new Array[Long](v.length))
-          var i = 0
-          while (i < v.length) {
-            acc(i) += rnd(v(i).toDouble * 1000000.0)
-            i += 1
-          }
-          cnts.update(cell, cnts.getOrElse(cell, 0L) + 1L)
-        }
-        sums.iterator.map { case (cell, ms) =>
-          (cell, ms.toSeq, cnts(cell))
-        }
-      }
-      .toDF("cell", "ms", "cnt")
-    partials
-      .select(col("cell"), col("cnt"), posexplode(col("ms")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(sum(col("col")).as("ms"), sum(col("cnt")).as("cnt"))
-      .withColumn("v", col("ms").cast("double") /
-        (lit(1000000.0) * col("cnt").cast("double")))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("v"))))
-        .getField("v").as("centroid"))
-  }
+    collectCentroids(centroidsOf(s, assigned))
 
   /** Pass B — the residual ENCODE over a (cell, vec_id, embedding)
     * assignment: r = x − centroid(cell) in a compiled per-partition
@@ -2583,7 +2428,12 @@ object SimOps extends OpModule {
     * occupied by construction — the row itself is a member — so the
     * lookup is total), then the codegen'd
     * [[graft.functions.PqEncode]] — (cell, vec_id, codes), the IVFADC
-    * index layout at √n cells.
+    * index layout. The subtracted vector is the fixed-point cell MEAN
+    * ([[centroidsOf]]), NOT the unit seed: Jégou §IV-B's residual is
+    * against the coarse centroid, which lives at DATA scale (‖mean‖
+    * grows with the coarse structure) where a unit seed removes at most
+    * a norm-1 component — on clustered corpora the difference is the
+    * whole point of IVFADC.
     */
   private[graft] def annIvfPqrBuild(s: SparkSession, assigned: DataFrame,
       cb: Seq[Seq[Seq[Double]]],
@@ -2615,8 +2465,11 @@ object SimOps extends OpModule {
     * which is exactly why bounded `probes` is the knob that caps the
     * broadcast at queries × probes tables). Probe slots are spent on
     * OCCUPIED cells only (an empty cell has no centroid and no members
-    * — probing it would scan nothing). One cell equi-join, codegen'd
-    * integer ADC, (adc_micro, vec_id) top-k.
+    * — probing it would scan nothing). Exhaustive at both levels
+    * (`probes` ≥ occupied cells, `coarseProbes` ≥ [[pivotCount]]) the
+    * walk would list every occupied cell, so none is run and the
+    * quantizer is never loaded. One cell equi-join, codegen'd integer
+    * ADC, (adc_micro, vec_id) top-k.
     */
   private[graft] def annIvfPqrScaledQuery(s: SparkSession, dir: String,
       assigned: DataFrame, cb: Seq[Seq[Seq[Double]]],
@@ -2624,47 +2477,38 @@ object SimOps extends OpModule {
       probes: Int, coarseProbes: Int = 4,
       queryPred: Column = col("vec_id") < 20,
       topK: Int = 5): DataFrame = {
-    val pg = pivotGroups(s, dir, cells)
-    residualAdcTopK(s, queryBatch(s, dir, queryPred),
-      vd => probeWalk(vd, pg, coarseProbes).iterator
-        .filter(cents.contains).take(probes).toSeq,
-      assigned, cb, cents, topK)
+    val probed: Array[Double] => Seq[Long] =
+      if (probes >= cents.size && coarseProbes >= pivotCount(cells)) {
+        val occupied = cents.keys.toSeq.sorted
+        _ => occupied
+      } else {
+        val pg = pivotGroups(s, dir, cells)
+        vd => probeWalk(vd, pg, coarseProbes).iterator
+          .filter(cents.contains).take(probes).toSeq
+      }
+    residualAdcTopK(s, queryBatch(s, dir, queryPred), probed, assigned, cb,
+      cents, topK)
   }
 
-  /** Two-stage residual serving: [[annIvfPqrScaledQuery]] proposes a
-    * `shortlist`-deep ADC candidate list from the probed cells, one
-    * exact-cosine pass re-ranks to top-5 — [[annIvfPqScaledRerank]]'s
-    * shape over the residual index. `shortlist` is THE recall knob at
-    * depth: the re-rank is exact, so recall@5 = P(true neighbors ∈ ADC
-    * top-`shortlist`), and holding the shortlist QUANTILE (not count)
-    * roughly constant as n grows is what keeps recall flat — at 10M a
-    * 50-deep list is the top 5·10⁻⁶ of the corpus, 10× thinner than the
-    * same list at 1M (PqScaleBench records the ladder).
+  /** The one exact-cosine re-rank — the second stage of the standard
+    * two-stage PQ search: a `shortlist` frame (q_id, neighbor_id — an
+    * ADC query run at topK = shortlist depth) joins the embedding table
+    * for both its candidates and its queries, and the bounded heap keeps
+    * the top-5 on (cosine desc, id asc). The re-rank is exact, so
+    * recall@5 = P(true neighbors ∈ shortlist), at `shortlist` exact
+    * distances per query instead of n; holding the shortlist QUANTILE
+    * (not count) roughly constant as n grows keeps recall flat
+    * (PqScaleBench records the ladder).
     */
-  private[graft] def annIvfPqrScaledRerank(s: SparkSession, dir: String,
-      assigned: DataFrame, cb: Seq[Seq[Seq[Double]]],
-      cents: Map[Long, Array[Double]], cells: Int,
-      probes: Int, shortlist: Int = 50, coarseProbes: Int = 4,
-      queryPred: Column = col("vec_id") < 20): DataFrame = {
-    val cands = annIvfPqrScaledQuery(s, dir, assigned, cb, cents, cells,
-      probes, coarseProbes, queryPred, topK = shortlist)
-      .select(col("q_id"), col("neighbor_id").as("vec_id"))
-    exactCosineRerank(s, dir, cands, queryPred)
-  }
-
-  /** The shared exact-cosine re-rank tail: join the broadcast-sized
-    * (q_id, vec_id) candidate frame against the embedding table once,
-    * bounded-heap top-5 on (cosine desc, id asc).
-    */
-  private def exactCosineRerank(s: SparkSession, dir: String,
-      cands: DataFrame, queryPred: Column): DataFrame = {
-    val qs = withNorm(Tables.embeddings(s, dir).filter(queryPred))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("norm").as("q_norm"))
-    val scored = withNorm(Tables.embeddings(s, dir))
+  private[graft] def exactCosineRerank(s: SparkSession, dir: String,
+      shortlist: DataFrame): DataFrame = {
+    val emb = withNorm(Tables.embeddings(s, dir))
       .select(col("vec_id"), col("embedding"), col("norm"))
-      .join(broadcast(cands.join(broadcast(qs), Seq("q_id"))),
-        Seq("vec_id"))
+    val cands = emb.join(broadcast(shortlist.select(col("q_id"),
+      col("neighbor_id").as("vec_id"))), Seq("vec_id"))
+    val scored = emb.select(col("vec_id").as("q_id"),
+        col("embedding").as("q_emb"), col("norm").as("q_norm"))
+      .join(broadcast(cands), Seq("q_id"))
       .withColumn("cosine",
         dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("norm")))
     rankTopK(scored, "vec_id", "cosine", descending = true, 5)

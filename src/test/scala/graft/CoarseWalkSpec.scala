@@ -21,18 +21,16 @@ class CoarseWalkSpec extends SparkSpec {
   test("two-level build walk: at coarseProbes = 2 the IVF, IVF-PQ and " +
     "residual builds assign every vector to the same cell, and the " +
     "bound moves some vector off its flat-argmax cell") {
-    val cb = SimOps.pqCodebook(spark, sf0001)
     val encoded = SimOps.pqEncoded(spark, sf0001)
     val (_, ivf) = SimOps.annIndexHierarchical(spark, sf0001, 32,
       coarseProbes = 2)
     val hier = cells(ivf)
     assert(hier.keySet === (0L until 500L).toSet)
-    assert(cells(SimOps.annIvfPqScaled(spark, sf0001, encoded, cb, 32,
+    assert(cells(SimOps.annIvfPqScaled(spark, sf0001, encoded, 32,
       coarseProbes = 2)) === hier)
     assert(cells(SimOps.annIvfPqrAssigned(spark, sf0001, 32,
       coarseProbes = 2)) === hier)
-    val (_, flat) = SimOps.annIndexWithImpl(spark, sf0001, 32,
-      broadcastAssign = true)
+    val (_, flat) = SimOps.annIndexWith(spark, sf0001, 32)
     assert(cells(flat) !== hier,
       "coarseProbes = 2 walked every pivot group")
   }
@@ -53,7 +51,7 @@ class CoarseWalkSpec extends SparkSpec {
     }
     val cb = SimOps.pqCodebook(spark, sf0001)
     val raw = SimOps.annIvfPqScaled(spark, sf0001,
-      SimOps.pqEncoded(spark, sf0001), cb, 32, coarseProbes = 2)
+      SimOps.pqEncoded(spark, sf0001), 32, coarseProbes = 2)
       .localCheckpoint(true)
     assertOwnCell(cells(raw), SimOps.annIvfPqScaledQuery(spark, sf0001,
       raw, cb, 32, probes = 1, coarseProbes = 2, queryPred = all,
@@ -61,8 +59,7 @@ class CoarseWalkSpec extends SparkSpec {
     val assigned = SimOps.annIvfPqrAssigned(spark, sf0001, 32,
       coarseProbes = 2).localCheckpoint(true)
     val cents = SimOps.scaledCents(spark, assigned)
-    val cbR = SimOps.pqrCodebook(spark, sf0001,
-      centsOverride = Some(cents))
+    val cbR = SimOps.pqrCodebook(spark, sf0001, cents)
     val store = SimOps.annIvfPqrBuild(spark, assigned, cbR, cents)
     assertOwnCell(cells(assigned), SimOps.annIvfPqrScaledQuery(spark,
       sf0001, store, cbR, cents, 32, probes = 1, coarseProbes = 2,
@@ -74,7 +71,9 @@ class CoarseWalkSpec extends SparkSpec {
     "ranks a NaN score best") {
     import spark.implicits._
     // 4 seeds -> 2 pivots (seeds 0, 1); seed 3 hangs on pivot 0 and
-    // seed 2 on pivot 1, so the walk meets the larger tied sid first
+    // seed 2 on pivot 1, so the walk meets the larger tied sid first.
+    // coarseProbes = 2 already walks both pivot groups here; 4 is the
+    // exhaustive spelling annIndexWith uses above its literal bound
     def vec(xs: Float*): Array[Float] =
       xs.toArray ++ Array.fill(64 - xs.size)(0f)
     val rows = Seq(
@@ -87,11 +86,10 @@ class CoarseWalkSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val expected = Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 2L,
       5L -> 0L)
-    for (bc <- Seq(false, true))
-      assert(cells(SimOps.annIndexWithImpl(spark, dir, 4,
-        broadcastAssign = bc)._2) === expected, s"broadcastAssign=$bc")
-    assert(cells(SimOps.annIndexHierarchical(spark, dir, 4,
-      coarseProbes = 2)._2) === expected)
+    assert(cells(SimOps.annIndexWith(spark, dir, 4)._2) === expected)
+    for (cp <- Seq(4, 2))
+      assert(cells(SimOps.annIndexHierarchical(spark, dir, 4,
+        coarseProbes = cp)._2) === expected, s"coarseProbes=$cp")
     assert(cells(SimOps.annIvfPqrAssigned(spark, dir, 4,
       coarseProbes = 2)) === expected)
   }

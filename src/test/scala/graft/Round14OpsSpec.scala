@@ -88,12 +88,11 @@ class Round14OpsSpec extends SparkSpec {
     "typedlit expression form: same cells, same centroids") {
     import graft.operators.SimOps
     for (nSeeds <- Seq(10, 32)) {
-      val (cLit, aLit) =
-        SimOps.annIndexWithImpl(spark, sf0001, nSeeds,
-          broadcastAssign = false)
-      val (cBc, aBc) =
-        SimOps.annIndexWithImpl(spark, sf0001, nSeeds,
-          broadcastAssign = true)
+      // annIndexWith is the typedlit argmax at these widths; the
+      // broadcast form is the two-level walk at exhaustive coarse probes
+      val (cLit, aLit) = SimOps.annIndexWith(spark, sf0001, nSeeds)
+      val (cBc, aBc) = SimOps.annIndexHierarchical(spark, sf0001, nSeeds,
+        coarseProbes = nSeeds)
       val litCells = aLit.select("vec_id", "cell").collect()
         .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       val bcCells = aBc.select("vec_id", "cell").collect()

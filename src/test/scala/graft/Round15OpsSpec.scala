@@ -157,8 +157,7 @@ class Round15OpsSpec extends SparkSpec {
 
   test("annIndexHierarchical: exhaustive coarse probes reproduce the " +
     "flat argmax assignment bit-for-bit; bounded probes stay valid") {
-    val (cE, aE) = SimOps.annIndexWithImpl(spark, sf0001, 32,
-      broadcastAssign = true)
+    val (cE, aE) = SimOps.annIndexWith(spark, sf0001, 32)
     val exact = aE.collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cell")).toMap
     // probing every pivot group = exhaustive argmax: identical cells

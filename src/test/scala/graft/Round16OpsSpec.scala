@@ -289,7 +289,9 @@ class Round16OpsSpec extends SparkSpec {
     // ADC recall is modest by construction; the exact-cosine re-rank of
     // a 50-deep shortlist must dominate it
     val rAdc = recall(topSets(SimOps.annPq(spark, sf0001)))
-    val rRerank = recall(topSets(SimOps.annPqRerank(spark, sf0001)))
+    val rRerank = recall(topSets(SimOps.exactCosineRerank(spark, sf0001,
+      SimOps.annPqOnCb(spark, sf0001, SimOps.pqEncoded(spark, sf0001),
+        SimOps.pqCodebook(spark, sf0001), topK = 50))))
     assert(rRerank >= rAdc, s"rerank $rRerank < adc $rAdc")
     assert(rRerank >= 0.3, s"rerank recall $rRerank implausibly low")
   }

@@ -118,8 +118,8 @@ class Round17OpsSpec extends SparkSpec {
     val cb8 = SimOps.pq8Codebook(spark, sf0001)
     val encoded = SimOps.pq8Encoded(spark, sf0001, cb8)
     val cells = SimOps.scaledCells(500) // = 32 on the shipped fixture
-    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, cb8,
-      cells, coarseProbes = cells)
+    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, cells,
+      coarseProbes = cells)
     // probes = cells and coarseProbes = nPivots: every cell is probed,
     // every vector sits in exactly one cell -> the scan IS annPq8's
     val got = rows(SimOps.annIvfPqScaledQuery(spark, sf0001, assigned,
@@ -131,7 +131,7 @@ class Round17OpsSpec extends SparkSpec {
     "with candidates confined to probed cells") {
     val cb8 = SimOps.pq8Codebook(spark, sf0001)
     val encoded = SimOps.pq8Encoded(spark, sf0001, cb8)
-    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, cb8, 32)
+    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, 32)
     val bounded = SimOps.annIvfPqScaledQuery(spark, sf0001, assigned,
       cb8, 32, probes = 4).collect()
     // 20 queries, each with up to 5 ranked rows, rnk dense from 1
@@ -150,12 +150,14 @@ class Round17OpsSpec extends SparkSpec {
     "under the trained book (same shortlist, same exact re-rank)") {
     val cb8 = SimOps.pq8Codebook(spark, sf0001)
     val encoded = SimOps.pq8Encoded(spark, sf0001, cb8)
-    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, cb8,
-      32, coarseProbes = 32)
-    val got = rows(SimOps.annIvfPqScaledRerank(spark, sf0001, assigned,
-      cb8, 32, probes = 32, coarseProbes = 32))
-    assert(got === rows(SimOps.annPqRerank(spark, sf0001,
-      encodedOpt = Some(encoded), cbOpt = Some(cb8))))
+    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, 32,
+      coarseProbes = 32)
+    // both shortlists are 50 deep; the re-rank is the one exact tail
+    val got = rows(SimOps.exactCosineRerank(spark, sf0001,
+      SimOps.annIvfPqScaledQuery(spark, sf0001, assigned, cb8, 32,
+        probes = 32, coarseProbes = 32, topK = 50)))
+    assert(got === rows(SimOps.exactCosineRerank(spark, sf0001,
+      SimOps.annPqOnCb(spark, sf0001, encoded, cb8, topK = 50))))
   }
 
   test("annSrpAdaptive skipAhead: every stop still emits its radius's " +

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.pqEncode
 import graft.operators.SimOps
 
 /** Round-18 additions: typed analysis errors on the user-callable PQ
@@ -11,7 +13,7 @@ import graft.operators.SimOps
   */
 class Round18OpsSpec extends SparkSpec {
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
   test("graft_pq_adc: mistyped lut/codes fail ANALYSIS with a typed " +
@@ -93,8 +95,8 @@ class Round18OpsSpec extends SparkSpec {
     val cb8 = SimOps.pq8Codebook(spark, sf0001)
     val encoded = SimOps.pq8Encoded(spark, sf0001, cb8)
     val cells = SimOps.scaledCells(500)
-    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, cb8,
-      cells, coarseProbes = cells)
+    val assigned = SimOps.annIvfPqScaled(spark, sf0001, encoded, cells,
+      coarseProbes = cells)
     val got = rows(SimOps.annIvfPqScaledQuery(spark, sf0001, assigned,
       cb8, cells, probes = cells, coarseProbes = cells))
     assert(got === rows(SimOps.annPq8(spark, sf0001)))
@@ -111,18 +113,82 @@ class Round18OpsSpec extends SparkSpec {
       SimOps.pq8Codebook(spark, sf0001))
   }
 
+  // Test-local references for the residual IVFADC build: the
+  // interpreted expression census and zip_with residual, the analyzable
+  // definitions the DuckDB oracle mirrors. The compiled build is pinned
+  // against them, so the "compiled ≡ expression" tests below compare two
+  // independent computations.
+
+  /** The expression census: one posexplode row per (vector, dim), micro-
+    * unit `round` (HALF_UP) sums per (cell, dim), one division. */
+  private def centroidsOfExpr(assigned: DataFrame): DataFrame =
+    assigned
+      .select(col("cell"), posexplode(col("embedding")))
+      .groupBy(col("cell"), col("pos"))
+      .agg(sum(round(col("col").cast("double") * lit(1000000.0), 0)
+          .cast("long")).as("ms"),
+        count(lit(1)).as("cnt"))
+      .withColumn("v", col("ms").cast("double") /
+        (lit(1000000.0) * col("cnt").cast("double")))
+      .groupBy(col("cell"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("v"))))
+        .getField("v").as("centroid"))
+
+  /** r = embedding::double − centroid(cell), element-wise in zip_with. */
+  private def residualCol(centsLit: Column): Column =
+    zip_with(col("embedding"),
+      element_at(centsLit, (col("cell") + lit(1)).cast("int")),
+      (x, c) => x.cast("double") - c)
+
+  /** Dense centroid literal for [[residualCol]]: index = cell id. */
+  private def centsLiteral(cents: Map[Long, Array[Double]],
+      cells: Int): Seq[Seq[Double]] =
+    (0 until cells).map(c =>
+      cents.get(c.toLong).fold(Seq.fill(64)(0.0))(_.toSeq))
+
+  private def centsMap(df: DataFrame): Map[Long, Array[Double]] =
+    df.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toMap
+
+  /** The expression-form residual store over the literal flat argmax
+    * (annIndexWith at 32 ≤ ivfLiteralCellBound cells): (cell, vec_id,
+    * codes), its centroids and the codebook trained against them. */
+  private def expressionStore()
+      : (DataFrame, Map[Long, Array[Double]], Seq[Seq[Seq[Double]]]) = {
+    val (_, flat) = SimOps.annIndexWith(spark, sf0001, SimOps.pqrCells)
+    val cents = centsMap(centroidsOfExpr(flat))
+    val cb = SimOps.pqrCodebook(spark, sf0001, cents)
+    val store = flat
+      .withColumn("codes", pqEncode(
+        residualCol(typedlit(centsLiteral(cents, SimOps.pqrCells))), cb))
+      .select(col("cell"), col("vec_id"), col("codes"))
+    (store, cents, cb)
+  }
+
+  private def exhaustiveWalk(): DataFrame =
+    SimOps.annIvfPqrAssigned(spark, sf0001, SimOps.pqrCells,
+      coarseProbes = SimOps.pqrCells)
+
   test("compiled centroid census: per-partition long micro-sums + the " +
     "tiny finishing aggregate reproduce the expression census " +
     "BIT-EXACTLY (same HALF_UP quantum, same integer sums, same " +
     "division) over the flat-argmax assignment") {
-    val assigned = SimOps.annIvfPqrAssigned(spark, sf0001,
-      SimOps.pqrCells, coarseProbes = SimOps.pqrCells)
-    val compiled = SimOps.scaledCents(spark, assigned)
-    val expr = SimOps.pqrCentroids(spark, sf0001)
+    val compiled = SimOps.scaledCents(spark, exhaustiveWalk())
+    val (_, flat) = SimOps.annIndexWith(spark, sf0001, SimOps.pqrCells)
+    val expr = centsMap(centroidsOfExpr(flat))
     assert(compiled.keySet === expr.keySet)
     compiled.foreach { case (c, v) =>
       assert(v.toSeq === expr(c).toSeq, s"cell $c centroid diverged")
     }
+    // exact micro-unit halves (±1/128 · 10⁶ = ±7812.5) round away from
+    // zero in both censuses — a half-to-even quantum would not
+    import spark.implicits._
+    val halves = Seq((0L, Array.fill(64)(1f / 128)),
+      (0L, Array.fill(64)(3f / 128)), (1L, Array.fill(64)(-1f / 128)))
+      .toDF("cell", "embedding")
+    def seqs(m: Map[Long, Array[Double]]) = m.view.mapValues(_.toSeq).toMap
+    assert(seqs(centsMap(SimOps.centroidsOf(spark, halves))) ===
+      seqs(centsMap(centroidsOfExpr(halves))))
+    assert(centsMap(centroidsOfExpr(halves))(1L).head === -0.007813)
   }
 
   test("residual IVFADC: the compiled scaled build (two-level walk at " +
@@ -130,28 +196,19 @@ class Round18OpsSpec extends SparkSpec {
     "compiled centroid subtraction + codegen'd encode) emits EXACTLY " +
     "the expression form's (cell, vec_id, codes) — flat argmax, " +
     "zip_with centroid residual, PqEncode") {
-    val centsFlat = SimOps.pqrCentroids(spark, sf0001)
-    val cb = SimOps.pqrCodebook(spark, sf0001,
-      centsOverride = Some(centsFlat))
-    val expr = SimOps.pqrEncoded(spark, sf0001, cb, centsFlat)
-      .select(col("cell"), col("vec_id"), col("codes"))
-      .orderBy(col("vec_id"))
-    val assigned = SimOps.annIvfPqrAssigned(spark, sf0001,
-      SimOps.pqrCells, coarseProbes = SimOps.pqrCells)
+    val (exprStore, _, cb) = expressionStore()
+    val assigned = exhaustiveWalk()
     val compiled = SimOps.annIvfPqrBuild(spark, assigned, cb,
       SimOps.scaledCents(spark, assigned))
-      .orderBy(col("vec_id"))
-    assert(rows(compiled) === rows(expr))
+    assert(rows(compiled.orderBy(col("vec_id"))) ===
+      rows(exprStore.orderBy(col("vec_id"))))
   }
 
   test("residual IVFADC: the scaled store queried at exhaustive probes " +
     "reproduces the registered llm_ann_ivfadc query exactly") {
-    val assigned = SimOps.annIvfPqrAssigned(spark, sf0001,
-      SimOps.pqrCells, coarseProbes = SimOps.pqrCells)
-    val cents = SimOps.scaledCents(spark, assigned)
-    val cb = SimOps.pqrCodebook(spark, sf0001,
-      centsOverride = Some(cents))
-    val store = SimOps.annIvfPqrBuild(spark, assigned, cb, cents)
+    // the store is the expression form's, so the registered query's
+    // compiled build is checked end to end, not against itself
+    val (store, cents, cb) = expressionStore()
     val got = rows(SimOps.annIvfPqrScaledQuery(spark, sf0001, store,
       cb, cents, SimOps.pqrCells, probes = SimOps.pqrCells,
       coarseProbes = SimOps.pqrCells))
@@ -161,13 +218,11 @@ class Round18OpsSpec extends SparkSpec {
   test("residual IVFADC rerank: exact-cosine re-rank of the exhaustive " +
     "residual-ADC shortlist — dense ranks, recall@5 vs brute at least " +
     "the pure residual-ADC scan's") {
-    val assignedRaw = SimOps.annIvfPqrAssigned(spark, sf0001,
-      SimOps.pqrCells, coarseProbes = SimOps.pqrCells)
+    val assignedRaw = exhaustiveWalk()
     val cents = SimOps.scaledCents(spark, assignedRaw)
-    val cb = SimOps.pqrCodebook(spark, sf0001,
-      centsOverride = Some(cents))
+    val cb = SimOps.pqrCodebook(spark, sf0001, cents)
     val assigned = SimOps.annIvfPqrBuild(spark, assignedRaw, cb, cents)
-    def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+    def sets(df: DataFrame): Map[Long, Set[Long]] =
       df.collect().map(r => (r.getLong(0), r.getLong(2)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val brute = sets(SimOps.simTopk(spark, sf0001))
@@ -175,9 +230,10 @@ class Round18OpsSpec extends SparkSpec {
       q => (brute(q) & m.getOrElse(q, Set.empty)).size.toDouble /
         brute(q).size
     }.sum / brute.size
-    val reranked = SimOps.annIvfPqrScaledRerank(spark, sf0001, assigned,
-      cb, cents, SimOps.pqrCells, probes = SimOps.pqrCells,
-      shortlist = 50, coarseProbes = SimOps.pqrCells)
+    val reranked = SimOps.exactCosineRerank(spark, sf0001,
+      SimOps.annIvfPqrScaledQuery(spark, sf0001, assigned, cb, cents,
+        SimOps.pqrCells, probes = SimOps.pqrCells,
+        coarseProbes = SimOps.pqrCells, topK = 50))
     val rr = reranked.collect()
     val byQ = rr.groupBy(_.getLong(0))
     assert(byQ.keySet === (0L until 20L).toSet)
