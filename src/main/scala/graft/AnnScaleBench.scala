@@ -7,15 +7,17 @@ import graft.functions.GraftFunctions.dotProduct
 import graft.operators.SimOps
 
 /** ANN scaling probe at 5× the standard stress tier (default fixture:
-  * 100k vectors) — the datapoint between the 20k StressProbe tier and
-  * a production corpus. Measures, against the exact brute-force
-  * baseline on a 20-query sample: IVF index build + persist time,
-  * partition-pruned serve time and recall@5, SRP-LSH (corpus-adaptive
-  * bits) search time and recall@5 — and, on the ~n/400 PLANTED
-  * near-dup pairs (cos ≈ 0.999, the dedup workload), partner-in-top-5
-  * recall for BOTH index families. One JSON line; planted recalls are
-  * REQUIRED ≥ 0.98 before printing (near-dups are the contract; iid
-  * recall is the documented knob trade).
+  * 100k vectors) — the datapoint between the 20k stress tier
+  * (STRESSPROBE_r11) and a production corpus. Measures, against the
+  * exact brute-force baseline on a 20-query sample: IVF index build +
+  * persist time, partition-pruned serve time and recall@5, SRP-LSH
+  * (corpus-adaptive bits) search time and recall@5 — and, on the ~n/400
+  * PLANTED near-dup pairs (cos ≈ 0.999, the dedup workload),
+  * partner-in-top-5 recall for BOTH index families. One JSON line;
+  * planted recalls are REQUIRED ≥ 0.98 before printing (near-dups are
+  * the contract; iid recall is the documented knob trade). The fixture
+  * is read-only: the index and the SRP table go under a fresh temporary
+  * directory that the main deletes on exit.
   */
 object AnnScaleBench {
   def main(args: Array[String]): Unit = {
@@ -27,6 +29,9 @@ object AnnScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val out = java.nio.file.Files.createTempDirectory("graft_annscale")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils
+      .deleteQuietly(out.toFile))
     val n = Tables.vectorCount(spark, dir)
 
     def topSets(df: org.apache.spark.sql.DataFrame)
@@ -55,13 +60,13 @@ object AnnScaleBench {
     val tb0 = System.nanoTime()
     val (cDf, aDf) =
       SimOps.annIndexHierarchical(spark, dir, nCells, coarseProbes)
-    cDf.write.mode("overwrite").parquet(s"$dir/ann_index/centroids")
+    cDf.write.mode("overwrite").parquet(s"$out/ann_index/centroids")
     // one task per cell -> one file per partition dir, not tasks×cells
     aDf.repartition(col("cell")).write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$dir/ann_index/assigned_bycell")
+      .partitionBy("cell").parquet(s"$out/ann_index/assigned_bycell")
     val tBuild = (System.nanoTime() - tb0) / 1e9
-    val cents = spark.read.parquet(s"$dir/ann_index/centroids")
-    val store = spark.read.parquet(s"$dir/ann_index/assigned_bycell")
+    val cents = spark.read.parquet(s"$out/ann_index/centroids")
+    val store = spark.read.parquet(s"$out/ann_index/assigned_bycell")
 
     def qFrame(filter: org.apache.spark.sql.Column) =
       Tables.embeddings(spark, dir).filter(filter)
@@ -112,9 +117,9 @@ object AnnScaleBench {
     val tsb0 = System.nanoTime()
     SimOps.srpTableArtifact(spark, dir)
       .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$dir/srp_table")
+      .parquet(s"$out/srp_table")
     val tSrpBuild = (System.nanoTime() - tsb0) / 1e9
-    val srpStore = spark.read.parquet(s"$dir/srp_table")
+    val srpStore = spark.read.parquet(s"$out/srp_table")
     val (tSrpServed, srpServed) = topSets(
       SimOps.annSrpFromStore(spark, dir, srpStore))
 

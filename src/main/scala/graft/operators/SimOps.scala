@@ -186,9 +186,9 @@ object SimOps extends OpModule {
     * constants are the fixture-calibrated ORACLE configuration, and
     * [[scaledCells]] keeps them bit-frozen on every shipped fixture while
     * sizing bigger corpora to √n automatically — the 10× stress tier gets
-    * 128 cells (graft.StressProbe measures the quadratic-vs-√n difference
-    * empirically and requires 100% true-dup recall at both sizes; PERF.md
-    * records it).
+    * 128 cells (STRESSPROBE_r11 measured the quadratic-vs-√n difference
+    * at 20k vectors, 15.3 s at 32 cells against 6.3 s at 128, with 100%
+    * true-dup recall at both sizes; PERF.md records it).
     */
   val dedupCells = 32
   val dedupProbes = 7
@@ -223,7 +223,8 @@ object SimOps extends OpModule {
     * instead of degrading toward all-pairs on weakly-clustered
     * embeddings: at 20k iid vectors, frozen 4-bit bands co-bucket ~¼ of
     * all pairs while 8-bit bands hold the per-band bucket near the 128
-    * target (graft.StressProbe measures both).
+    * target (STRESSPROBE_r11: 118,200 candidates at 4 bits against
+    * 10,236 at 8).
     *
     * Band-count default, justified by the measured recall curve
     * (STRESSPROBE_r10 `bands_curve`, 20k-vector tier, adaptive 8-bit
@@ -262,13 +263,12 @@ object SimOps extends OpModule {
 
   /** Multi-probe quantizer assignment, shared by every bucketed embedding
     * op (and stateless, so it runs unchanged on a stream): each vector
-    * explodes into its `probes` nearest cells of the broadcast quantizer,
-    * as (cell, vec_id, embedding, norm).
+    * explodes into its [[dedupProbes]] nearest cells of the broadcast
+    * quantizer, as (cell, vec_id, embedding, norm).
     */
-  private def probeAssigned(df: DataFrame, seedsCol: Column,
-      probes: Int = dedupProbes): DataFrame =
+  private def probeAssigned(df: DataFrame, seedsCol: Column): DataFrame =
     withNorm(df)
-      .withColumn("probes", probeCells(seedsCol, probes))
+      .withColumn("probes", probeCells(seedsCol))
       .select(explode(col("probes")).as("cell"), col("vec_id"),
         col("embedding"), col("norm"))
 
@@ -340,17 +340,15 @@ object SimOps extends OpModule {
     * collapse with one distinct over the (tiny) post-threshold result.
     * Asserted cartesian/BNLJ-free in PlanAuditSpec.
     */
-  def dedupEmbed(s: SparkSession, dir: String,
-      cells: Int = 0, probes: Int = dedupProbes): DataFrame = {
-    // cells = 0 → corpus-sized (the fixture constant or one metadata
-    // count): identical to dedupCells on every shipped oracle fixture,
-    // √n on bigger corpora — see scaledCells
-    val c = if (cells > 0) cells
-            else scaledCells(Tables.vectorCount(s, dir))
+  def dedupEmbed(s: SparkSession, dir: String): DataFrame = {
+    // corpus-sized cells (the fixture constant or one metadata count):
+    // identical to dedupCells on every shipped oracle fixture, √n on
+    // bigger corpora — see scaledCells
+    val c = scaledCells(Tables.vectorCount(s, dir))
     // pinned: both sides of the cell self-join read the assignment —
     // unpinned, each re-ran the quantizer ranking + probe explode
     val assigned = probeAssigned(Tables.embeddings(s, dir),
-      typedlit(driverSeeds(s, dir, c)), probes)
+      typedlit(driverSeeds(s, dir, c)))
       .transform(graft.Checkpoints.truncate)
     val a = assigned.select(col("cell"), col("vec_id").as("va"),
       col("embedding").as("emb_a"), col("norm").as("norm_a"))
@@ -793,6 +791,24 @@ object SimOps extends OpModule {
       .flatMap(p => pg._2(p).map { case (sid, u) => (negScore(vd, u), sid) })
       .sortBy(identity).map(_._2)
 
+  /** Each query's probe list over a scaled store: the first `probes` of
+    * the `listed` cells in [[probeWalk]] order. Exhaustive at both
+    * levels (`probes` ≥ listed cells, `coarseProbes` ≥ [[pivotCount]])
+    * the walk would list every cell, so none is run and the quantizer
+    * is never loaded — the list is `listed` itself.
+    */
+  private def probedCells(s: SparkSession, dir: String, cells: Int,
+      listed: Seq[Long], probes: Int,
+      coarseProbes: Int): Array[Double] => Seq[Long] =
+    if (probes >= listed.size && coarseProbes >= pivotCount(cells))
+      _ => listed
+    else {
+      val pg = pivotGroups(s, dir, cells)
+      val keep = listed.toSet
+      vd => probeWalk(vd, pg, coarseProbes).iterator
+        .filter(keep).take(probes).toSeq
+    }
+
   /** The row's [[walkCell]] as a column over `embedding`: compiled, with
     * the grouped quantizer as a broadcast variable (√n cells is far past
     * [[ivfLiteralCellBound]]).
@@ -1091,8 +1107,9 @@ object SimOps extends OpModule {
     * away, exactly the buckets the flips reach. Results can only
     * improve: the radius-r candidate set is a superset of radius-(r−1),
     * and the exact-cosine verify disposes — Round14OpsSpec pins the
-    * superset property and the candidate cap; SrpProbeBench records the
-    * measured recall-vs-candidates curve. The `llm_ann_srp` oracle
+    * superset property and the candidate cap; SRPPROBE_r18 records the
+    * measured recall-vs-candidates curve (1M vectors: iid recall@5
+    * 0.03 / 0.16 / 0.55 at radius 0 / 1 / 2). The `llm_ann_srp` oracle
     * query keeps radius 0 (its replayed configuration).
     */
   private[graft] def annSrpMultiProbe(s: SparkSession, dir: String,
@@ -1122,215 +1139,6 @@ object SimOps extends OpModule {
       .select(col("band"), col("bucket"), col("vec_id").as("q_id"),
         col("embedding").as("q_emb"), col("norm").as("q_norm"))
 
-  /** Default per-neighbor collision-probability floor for
-    * [[annSrpAdaptive]]'s quality bar — see [[srpQualityBar]]. 0.25 is
-    * calibrated so the two regimes separate where recall actually
-    * separates (ANNSCALE_r13's measured curve): at the bits = 4 floor
-    * (n ≤ 2048, bucket population ≫ k) τ₀ ≈ 0.042, below iid noise
-    * top-5 levels (~0.3 at 64 dims), so dense-bucket corpora stop at
-    * radius 0 exactly as before; from bits ≈ 6 (n ≳ 5k — where
-    * single-bucket iid recall measurably decays: 0.55 → 0.10 → 0.03 at
-    * 10k → 100k → 1M) τ₀ crosses above the noise line (0.43 at bits 6,
-    * 0.84 at bits 13) and starved queries escalate.
-    */
-  val srpDefaultRecallFloor = 0.25
-
-  /** The quality bar behind [[annSrpAdaptive]]'s recall-aware stopping
-    * rule: the COSINE at which the radius-`radius` flip-bit probe's
-    * per-neighbor collision probability (over `bands` bands of `bits`
-    * signed-random-projection planes) equals `floor`. SRP geometry
-    * (Charikar 2002): one plane separates vectors at angle θ with
-    * probability θ/π, so a band of `bits` planes lands a neighbor
-    * within Hamming distance r of the query's bucket with probability
-    * q_r(θ) = Σ_{i≤r} C(bits,i)(θ/π)^i(1−θ/π)^(bits−i), and the probe
-    * finds it in ≥1 of `bands` bands with P_r = 1−(1−q_r)^bands. P_r is
-    * monotone decreasing in θ, so the bar is the unique θ* with
-    * P_r(θ*) = floor, returned as cos θ*: a top-k whose kth member sits
-    * ABOVE the bar certifies that anything closer than the kth would
-    * have collided with probability ≥ floor — the list is trustworthy
-    * and probing stops; a kth below the bar means the probed
-    * neighborhood likely MISSED neighbors between the kth and the bar,
-    * so the radius escalates. `floor ≤ 0` disables the bar (returns
-    * −∞ — the legacy count-only law).
-    */
-  private[graft] def srpQualityBar(bits: Int, bands: Int, radius: Int,
-      floor: Double = srpDefaultRecallFloor): Double = {
-    require(floor < 1.0, s"recall floor $floor must be < 1")
-    if (floor <= 0.0) return Double.NegativeInfinity
-    def choose(n: Int, r: Int): Double =
-      (0 until r).map(i => (n - i).toDouble / (i + 1)).product
-    def pCollide(x: Double): Double = {
-      val q = (0 to radius).map(i =>
-        choose(bits, i) * math.pow(x, i) *
-          math.pow(1.0 - x, bits - i)).sum
-      1.0 - math.pow(1.0 - q, bands)
-    }
-    // P_r(x) falls monotonically from 1 (x = 0) toward 0 (x = 1, since
-    // radius < bits always — probeMasks caps radius at 2, bits ≥ 4);
-    // bisect for P_r(x*) = floor
-    var lo = 0.0; var hi = 1.0
-    (1 to 60).foreach { _ =>
-      val mid = (lo + hi) / 2
-      if (pCollide(mid) > floor) lo = mid else hi = mid
-    }
-    math.cos(math.Pi * (lo + hi) / 2)
-  }
-
-  /** ADAPTIVE multi-probe — the production serving policy on top of
-    * [[annSrpMultiProbe]]'s fixed-radius knob: each query escalates its
-    * probe radius 0 → 1 → 2 until its exact-verified top-k is
-    * TRUSTWORTHY, then stops. Satisfied at radius r ⇔ the query holds
-    * ≥ k exact-verified members AND its kth-best cosine clears
-    * [[srpQualityBar]](bits, bands, r, recallFloor) — the similarity
-    * down to which the radius-r probe guarantees per-neighbor collision
-    * probability ≥ recallFloor. Dense regions (kth already above the
-    * bar — near-dup-saturated top-k, or bits at the floor where buckets
-    * dwarf k) pay the cheap single-bucket probe; starved queries
-    * escalate even when k candidates exist, because k RANDOM bucket-
-    * mates are not k neighbors.
-    *
-    * Why not count-based (the r15 law)? On a dense corpus nearly every
-    * query finds ≥ k candidates at radius 0, so a count trigger never
-    * fires exactly where recall is starved — SRPPROBE_r15 measured
-    * adaptive iid recall@5 = 0.03 ≡ radius 0 while fixed radius 2
-    * reaches 0.55. The quality bar escalates on result VALUE: at 1M
-    * vectors (bits = 13) an iid query's kth cosine (~0.4) sits far
-    * below τ₀ ≈ 0.84, so it buys the radius the fixed knob proved it
-    * needs; a planted near-dup (cosine ≈ 0.9997) still stops at
-    * radius 0. `recallFloor ≤ 0` restores the count-only law (the
-    * minimal-count-radius spec pins that mechanism separately).
-    *
-    * Output adds a `probe_radius` column (the radius each query was
-    * satisfied at — the knob's observability); rows for a query are
-    * EXACTLY [[annSrpMultiProbe]]'s at that radius (spec-pinned). A
-    * query that fails the bar even at the cap emits what it has — the
-    * cap terminates, never drops. The per-radius result frames are
-    * persisted but bounded (≤ k rows per pending query — a
-    * query-batch-proportional footprint, never corpus-proportional).
-    * Library knob, not an oracled query: `llm_ann_srp` /
-    * `_multiprobe` keep their frozen radius-0/1 oracle configurations.
-    *
-    * `skipAhead` (r16 verdict item 6 — the measured alternative to the
-    * "quality costs one extra probe pass" note): the ladder re-probes
-    * radii cumulatively, so a starved batch that climbs 0 → 1 → 2 pays
-    * ~2× the fixed-cap cost (SRPPROBE_r16: 20.0 s vs 10.6 s when all
-    * 20 iid queries escalate). The bars are closed-form, so the skip is
-    * computable per query after the radius-0 pass: a query whose kth
-    * cosine sits below even the CAP's bar τ_cap (the loosest — bars
-    * relax with radius) is in a starved region where the intermediate
-    * radius almost surely cannot satisfy it; it PARKS and re-probes
-    * once at the cap, skipping the middle pass. Queries at or above
-    * τ_cap stay on the ladder (they are within striking distance of an
-    * intermediate stop). Cost knob, not a correctness knob: a parked
-    * query emits the fixed-cap result VERBATIM (spec-pinned) — the
-    * trade is that a parked query that WOULD have satisfied at an
-    * intermediate radius now pays (and benefits from) the cap probe.
-    */
-  private[graft] def annSrpAdaptive(s: SparkSession, dir: String,
-      bits: Int, bands: Int, k: Int, queryPred: Column,
-      corpus: Option[DataFrame] = None, maxRadius: Int = 2,
-      recallFloor: Double = srpDefaultRecallFloor,
-      skipAhead: Boolean = false): DataFrame = {
-    require(k >= 1 && k <= 5,
-      s"k=$k outside the top-5 heap's bound ([[srpTopK]] verifies 5)")
-    require(maxRadius >= 0 && maxRadius <= 2,
-      s"maxRadius $maxRadius unsupported (0-2)")
-    val planes = driverSeeds(s, dir, bands * bits)
-    val table = corpus.getOrElse(
-      srpAssigned(s, planes, bits, withNorm(Tables.embeddings(s, dir)),
-        bands))
-    val qAssigned = srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir).filter(queryPred)), bands)
-    var result: Option[DataFrame] = None
-    var pending: Option[DataFrame] = None // None = every query
-    var parked: Option[DataFrame] = None // skipAhead: waiting for cap
-    var radius = 0
-    var exhausted = false
-    while (!exhausted && radius <= maxRadius) {
-      val isCap = radius == maxRadius
-      val probedAll = srpProbeFrame(qAssigned, bits, radius)
-      // the cap pass also serves every parked query (their probe set is
-      // cumulative in radius, so one cap probe covers all skipped radii)
-      val probeSet: Option[DataFrame] =
-        if (isCap) (pending, parked) match {
-          case (Some(p), Some(pk)) => Some(p.unionByName(pk))
-          case (a, b) => a.orElse(b)
-        } else pending
-      val probed = probeSet.fold(probedAll)(p =>
-        probedAll.join(broadcast(p), Seq("q_id"), "left_semi"))
-      // ≤ 5 rows per pending query — tiny; localCheckpoint (NOT persist:
-      // a persisted frame pins cache-manager blocks for the session —
-      // the r17 ADVICE leak — while checkpoint blocks are context-
-      // cleaned once unreachable) so the satisfied split + escalation
-      // decisions + final union never re-run the band join
-      val res = srpTopK(probed, table)
-        .withColumn("probe_radius", lit(radius)).localCheckpoint(true)
-      if (isCap) {
-        result = Some(result.fold(res: DataFrame)(_.unionByName(res)))
-        exhausted = true
-      } else {
-        // ONE (q_id, nres, kth) evidence frame feeds BOTH the satisfied
-        // split and the skip-ahead ladder decision below (was a second
-        // aggregation over res per rung — the r17 ADVICE duplication)
-        val evid = res.groupBy(col("q_id"))
-          .agg(count(lit(1)).as("nres"),
-            max(when(col("rnk") === k, col("cosine"))).as("kth"))
-          .localCheckpoint(true)
-        // satisfied ⇔ k verified members AND the kth clears the radius's
-        // quality bar (max-of-when: the rnk=k row's cosine; absent when
-        // nres < k, and a null kth never passes the ≥ filter)
-        val bar = srpQualityBar(bits, bands, radius, recallFloor)
-        val sat = evid
-          .filter(col("nres") >= k &&
-            col("kth") >= (if (bar.isNegInfinity) lit(-2.0) else lit(bar)))
-          .select(col("q_id"))
-        val done = res.join(broadcast(sat), Seq("q_id"), "left_semi")
-        result = Some(result.fold(done)(_.unionByName(done)))
-        var rem = pending
-          .getOrElse(qAssigned.select(col("vec_id").as("q_id")).distinct())
-          .join(sat, Seq("q_id"), "left_anti")
-          .localCheckpoint(true)
-        var remEmpty = rem.isEmpty
-        if (skipAhead && !remEmpty) {
-          // ladder only the GUARANTEED stops: kth and nres are
-          // monotone in radius (probe sets are cumulative), so a query
-          // whose current kth already clears the NEXT rung's bar
-          // τ_{r+1} will satisfy there with certainty — everything
-          // else parks straight to the cap, because its next probe
-          // would have to LIFT kth across a bar the current evidence
-          // sits under (a starved region says it won't). Parking on
-          // the cap's looser bar instead was measured useless: at 1M /
-          // 13 bits an iid kth ≈ 0.40 sits ABOVE τ₂ ≈ 0.347, so
-          // nothing parked and the decision jobs were pure overhead.
-          val tauNext =
-            srpQualityBar(bits, bands, radius + 1, recallFloor)
-          val onLadder = evid
-            .filter(col("nres") >= k && col("kth") >=
-              (if (tauNext.isNegInfinity) lit(-2.0) else lit(tauNext)))
-            .select(col("q_id"))
-            .localCheckpoint(true)
-          val park = rem.join(onLadder, Seq("q_id"), "left_anti")
-            .localCheckpoint(true)
-          if (!park.isEmpty) {
-            parked = Some(parked.fold(park)(_.unionByName(park)
-              .localCheckpoint(true)))
-            rem = rem.join(onLadder, Seq("q_id"), "left_semi")
-              .localCheckpoint(true)
-            remEmpty = rem.isEmpty
-          }
-        }
-        if (remEmpty && parked.isEmpty) exhausted = true
-        else {
-          pending = Some(rem)
-          // nothing left on the ladder: jump straight to the cap pass
-          if (remEmpty) radius = maxRadius - 1
-        }
-      }
-      radius += 1
-    }
-    result.get.orderBy(col("q_id"), col("rnk"))
-  }
-
   /** [[annSrpMultiProbe]] at radius 1 over the oracle-frozen 20-query
     * batch — the QUERY-surface form of the multi-probe knob, fully
     * value-oracled: the DuckDB twin replays the same 4-bit bands as
@@ -1351,30 +1159,6 @@ object SimOps extends OpModule {
     annSrpMultiProbe(s, dir,
       srpBitsPerBand(Tables.vectorCount(s, dir)), srpBands, 1,
       col("vec_id") < 20)
-
-  /** Stress instrumentation ([[graft.StressProbe]], SrpProbeBench):
-    * DISTINCT (q_id, vec_id) candidate pairs the band join proposes at a
-    * given bits-per-band and probe radius — the volume
-    * [[srpBitsPerBand]] and the candidate cap bound (Round14OpsSpec
-    * asserts the cap). Not a query; a measurement of the index's
-    * proposal work before the exact-cosine verify.
-    */
-  private[graft] def srpCandidateCountMulti(s: SparkSession, dir: String,
-      bits: Int, bands: Int, radius: Int,
-      queryPred: Column = col("vec_id") < 20): Long = {
-    val planes = driverSeeds(s, dir, bands * bits)
-    val corpus = srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir)), bands)
-    val qs = srpProbeFrame(srpAssigned(s, planes, bits,
-      withNorm(Tables.embeddings(s, dir).filter(queryPred)), bands),
-      bits, radius)
-      .select(col("band"), col("bucket"), col("q_id"))
-    broadcast(qs)
-      .join(corpus.select(col("band"), col("bucket"), col("vec_id")),
-        Seq("band", "bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id")).distinct().count()
-  }
 
   /** The SRP signature pass: 16 sign bits against the frozen plane
     * literal, packed into 4 (band, bucket) keys and exploded — the LSH
@@ -2340,7 +2124,9 @@ object SimOps extends OpModule {
   /** Query a cell-assigned PQ-code store ([[annIvfPqScaled]]'s output,
     * checkpointed/persisted as the index artifact): driver-side probe
     * ranking + LUT build for the request-sized query batch, then one
-    * equi join on `cell` and the codegen'd integer ADC top-5.
+    * equi join on `cell` and the codegen'd integer ADC top-5. At
+    * exhaustive probes every cell is listed without a walk
+    * ([[probedCells]]).
     */
   private[graft] def annIvfPqScaledQuery(s: SparkSession, dir: String,
       assigned: DataFrame, cb: Seq[Seq[Seq[Double]]], cells: Int,
@@ -2351,7 +2137,8 @@ object SimOps extends OpModule {
     // the probe ranking is the build's own two-level walk
     // ([[probeWalk]]), so a probed cell list always covers where the
     // query's neighbors were actually assigned
-    val pg = pivotGroups(s, dir, cells)
+    val probed = probedCells(s, dir, cells, 0L until cells, probes,
+      coarseProbes)
     val batch = queryBatch(s, dir, queryPred)
     // the LUT travels in its OWN one-row-per-query frame, joined on
     // q_id AFTER the cell equi-join — flattening it into the probe rows
@@ -2360,7 +2147,7 @@ object SimOps extends OpModule {
     // 2500-query planted batch); this way each LUT crosses the wire once
     // in the broadcast and probe rows stay two longs each
     val qProbe = batch.flatMap { case (q, vd) =>
-      probeWalk(vd, pg, coarseProbes).take(probes).map(c => (q, c))
+      probed(vd).map(c => (q, c))
     }.toDF("q_id", "cell")
     val scored = broadcast(qProbe).join(assigned, Seq("cell"))
       .filter(col("q_id") =!= col("vec_id"))
@@ -2467,9 +2254,9 @@ object SimOps extends OpModule {
     * OCCUPIED cells only (an empty cell has no centroid and no members
     * — probing it would scan nothing). Exhaustive at both levels
     * (`probes` ≥ occupied cells, `coarseProbes` ≥ [[pivotCount]]) the
-    * walk would list every occupied cell, so none is run and the
-    * quantizer is never loaded. One cell equi-join, codegen'd integer
-    * ADC, (adc_micro, vec_id) top-k.
+    * walk would list every occupied cell, so none is run
+    * ([[probedCells]]). One cell equi-join, codegen'd integer ADC,
+    * (adc_micro, vec_id) top-k.
     */
   private[graft] def annIvfPqrScaledQuery(s: SparkSession, dir: String,
       assigned: DataFrame, cb: Seq[Seq[Seq[Double]]],
@@ -2477,15 +2264,8 @@ object SimOps extends OpModule {
       probes: Int, coarseProbes: Int = 4,
       queryPred: Column = col("vec_id") < 20,
       topK: Int = 5): DataFrame = {
-    val probed: Array[Double] => Seq[Long] =
-      if (probes >= cents.size && coarseProbes >= pivotCount(cells)) {
-        val occupied = cents.keys.toSeq.sorted
-        _ => occupied
-      } else {
-        val pg = pivotGroups(s, dir, cells)
-        vd => probeWalk(vd, pg, coarseProbes).iterator
-          .filter(cents.contains).take(probes).toSeq
-      }
+    val probed = probedCells(s, dir, cells, cents.keys.toSeq.sorted,
+      probes, coarseProbes)
     residualAdcTopK(s, queryBatch(s, dir, queryPred), probed, assigned, cb,
       cents, topK)
   }

@@ -140,8 +140,20 @@ class Round14OpsSpec extends SparkSpec {
       assert(t1(q) >= c0 - 1e-12,
         s"radius 1 worsened query $q: ${t1(q)} < $c0")
     }
-    val cands = SimOps.srpCandidateCountMulti(spark, sf0001, bits,
-      SimOps.srpBands, 1, pred)
+    // DISTINCT (q_id, vec_id) pairs the radius-1 band join proposes
+    // before the exact-cosine verify. The query side is the corpus table
+    // filtered to the batch (both sides hash through the same planes),
+    // each bucket XOR-probed by the radius-1 masks.
+    val table = SimOps.srpTableArtifact(spark, sf0001)
+    val qs = table.filter(pred)
+      .select(col("band"), col("vec_id").as("q_id"),
+        explode(transform(typedlit(SimOps.probeMasks(bits, 1)),
+          m => col("bucket").bitwiseXOR(m))).as("bucket"))
+    val cands = broadcast(qs)
+      .join(table.select(col("band"), col("bucket"), col("vec_id")),
+        Seq("band", "bucket"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id")).distinct().count()
     val probeRows = SimOps.probeMasks(bits, 1).size.toLong *
       SimOps.srpBands
     val cap = math.min(20L * n, 20L * probeRows * ((n >> bits) + 1L) * 4L)

@@ -7,8 +7,8 @@ import graft.operators.{DedupOps, SimOps}
 /** Round-15 additions: the large-star/small-star connected-components
   * implementation (agreement-spec'd against the shipped min-label +
   * pointer-jump loop and a driver-side union-find), round-count
-  * instrumentation for both CC loops, and the adaptive multi-probe SRP
-  * serving policy.
+  * instrumentation for both CC loops, and the two-level coarse IVF
+  * assignment.
   */
 class Round15OpsSpec extends SparkSpec {
 
@@ -86,73 +86,6 @@ class Round15OpsSpec extends SparkSpec {
       s"got $plainRounds")
     assert(jumpRounds <= 8, s"jump form should pay O(log d), " +
       s"got $jumpRounds")
-  }
-
-  test("annSrpAdaptive: radius-0-satisfied queries return exactly the " +
-    "single-probe rows, stamped radius 0") {
-    // sf0.001 is dense per bucket (500 vectors / 16 buckets per band),
-    // so every query fills its top-5 at radius 0, AND at the bits = 4
-    // floor the r16 quality bar sits below iid noise (τ₀ ≈ 0.042 vs
-    // kth ~0.3) — the adaptive form under the DEFAULT recall floor
-    // must degenerate to the single-probe answer EXACTLY.
-    val bits = SimOps.srpBitsPerBand(Tables.vectorCount(spark, sf0001))
-    val single = SimOps.annSrpMultiProbe(spark, sf0001, bits,
-      SimOps.srpBands, 0, col("vec_id") < 20).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val adaptive = SimOps.annSrpAdaptive(spark, sf0001, bits,
-      SimOps.srpBands, 5, col("vec_id") < 20).collect()
-    assert(adaptive.map(r =>
-      (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq === single.toSeq)
-    assert(adaptive.forall(_.getAs[Int]("probe_radius") == 0))
-  }
-
-  test("annSrpAdaptive (count-only law, recallFloor = 0): sparse " +
-    "queries escalate to the minimal radius with >= k results (or the " +
-    "cap), matching that radius's multi-probe") {
-    import spark.implicits._
-    // 16 iid 64-dim vectors at 4-bit bands: ~1 vector per bucket, so
-    // most queries cannot fill top-5 at radius 0 and MUST escalate. Two
-    // band configs on the same pinned fixture jointly exercise all
-    // three behaviors (tuned once, deterministic thereafter): bands=1
-    // yields radius-1 and radius-2 queries, bands=2 yields radius-0 and
-    // radius-1 queries.
-    val dir = java.nio.file.Files.createTempDirectory("graft_adapt").toString
-    val rnd = new scala.util.Random(7)
-    // label is not RNG-drawn: the gaussian stream must match the tuning
-    // run that picked this (seed, n, bands) configuration exactly
-    (0L until 16L).map(i => (i, Array.fill(64)(rnd.nextGaussian().toFloat),
-      (i % 10).toInt))
-      .toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val k = 5
-    val qp = col("vec_id") < 8
-    val seenRadii = Seq(1, 2).flatMap { bands =>
-      val byRadius = (0 to 2).map { r =>
-        r -> SimOps.annSrpMultiProbe(spark, dir, 4, bands, r, qp)
-          .collect()
-          .map(row => (row.getLong(0), row.getInt(1), row.getLong(2)))
-          .groupBy(_._1)
-      }.toMap
-      val expected = (0L until 8L).flatMap { q =>
-        val r = (0 to 2).find(r =>
-          byRadius(r).getOrElse(q, Array.empty).length >= k).getOrElse(2)
-        byRadius(r).getOrElse(q, Array.empty[(Long, Int, Long)])
-          .map { case (qq, rnk, nb) => (qq, rnk, nb, r) }
-      }.sortBy(t => (t._1, t._2))
-      // recallFloor = 0 pins the COUNT mechanism in isolation (the
-      // minimal-count-radius law); the quality bar's law has its own
-      // Round16OpsSpec pinning
-      val got = SimOps.annSrpAdaptive(spark, dir, 4, bands, k, qp,
-          recallFloor = 0.0)
-        .collect()
-        .map(row => (row.getLong(0), row.getInt(1), row.getLong(2),
-          row.getAs[Int]("probe_radius")))
-      assert(got.toSeq === expected, s"bands=$bands")
-      got.map(_._4).toSet
-    }.toSet
-    // across the two configs the fixture exercised every behavior:
-    // satisfied-at-0, escalated-to-1, and reached-the-cap
-    assert(seenRadii === Set(0, 1, 2))
   }
 
   test("annIndexHierarchical: exhaustive coarse probes reproduce the " +

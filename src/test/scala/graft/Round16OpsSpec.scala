@@ -4,117 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{SimOps, TextOps}
 
-/** Round-16 additions: the recall-aware quality bar behind
-  * [[SimOps.annSrpAdaptive]] — the r15 count-only trigger never fired on
-  * dense corpora exactly where recall was starved (SRPPROBE_r15:
-  * adaptive iid recall@5 = 0.03 ≡ radius 0 while fixed radius 2 reached
-  * 0.55), so the stopping rule now also requires the kth-best cosine to
-  * clear the per-radius SRP collision-probability bar.
+/** Round-16 additions: the LPA broadcast and shuffle dispatch forms,
+  * the served Kneser-Ney perplexity twin, and the PQ/IVF-PQ ADC family.
   */
 class Round16OpsSpec extends SparkSpec {
-
-  test("srpQualityBar: closed-form anchor, solver roundtrip, and " +
-    "monotone relaxation across radii / tightening across bits") {
-    // closed-form anchor: one band of two planes at radius 0 collides
-    // with probability (1−x)², so floor 0.25 ⇒ x = 1/2 ⇒ τ = cos(π/2)=0
-    assert(math.abs(SimOps.srpQualityBar(2, 1, 0, 0.25)) < 1e-12)
-    // roundtrip: the solver's θ* must reproduce the floor it solved for
-    for (bits <- Seq(4, 8, 13); bands <- Seq(1, 4); r <- 0 to 2;
-        floor <- Seq(0.25, 0.5, 0.9)) {
-      val tau = SimOps.srpQualityBar(bits, bands, r, floor)
-      val x = math.acos(tau) / math.Pi
-      def choose(n: Int, i: Int): Double =
-        (0 until i).map(j => (n - j).toDouble / (j + 1)).product
-      val q = (0 to r).map(i => choose(bits, i) * math.pow(x, i) *
-        math.pow(1 - x, bits - i)).sum
-      val p = 1 - math.pow(1 - q, bands)
-      assert(math.abs(p - floor) < 1e-9,
-        s"bits=$bits bands=$bands r=$r floor=$floor: P(τ)=$p")
-    }
-    // a wider probe certifies the same floor at a LOWER similarity;
-    // more planes per band tighten the bar (fewer accidental collisions)
-    val t = (0 to 2).map(SimOps.srpQualityBar(13, 4, _))
-    assert(t(0) > t(1) && t(1) > t(2), s"radii bars not decreasing: $t")
-    assert(SimOps.srpQualityBar(13, 4, 0) > SimOps.srpQualityBar(6, 4, 0)
-      && SimOps.srpQualityBar(6, 4, 0) > SimOps.srpQualityBar(4, 4, 0))
-    // the default floor separates the measured regimes: bits-4-floor
-    // buckets stop on iid noise (~0.3 kth), bits-13 (1M vectors) demand
-    // near-dup-level evidence
-    assert(SimOps.srpQualityBar(4, 4, 0) < 0.1)
-    assert(SimOps.srpQualityBar(13, 4, 0) > 0.8)
-    // floor ≤ 0 disables the bar — the legacy count-only law
-    assert(SimOps.srpQualityBar(13, 4, 0, 0.0).isNegInfinity)
-  }
-
-  test("annSrpAdaptive quality law: near-dup-saturated queries stop at " +
-    "radius 0, count-satisfied-but-starved iid queries escalate to the " +
-    "cap, every query matching its stopping radius's multi-probe rows") {
-    import spark.implicits._
-    // 32 iid 64-dim vectors (the starved population) + a 6-member
-    // near-dup cluster (pairwise cosine ≈ 0.9999 ≫ τ₀ = 0.878 at
-    // bits = 4 / bands = 1). Deterministic by seed: the gaussian stream
-    // below must match the tuning run that picked this configuration.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_adapt_q").toString
-    val rnd = new scala.util.Random(16)
-    val iid = (0L until 32L).map(i =>
-      (i, Array.fill(64)(rnd.nextGaussian().toFloat), (i % 10).toInt))
-    val center = Array.fill(64)(rnd.nextGaussian().toFloat)
-    val cluster = (100L until 106L).map(i =>
-      (i, center.map(x => x + (rnd.nextGaussian() * 0.01).toFloat), 0))
-    (iid ++ cluster).toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val (bits, bands, k) = (4, 1, 5)
-    val qp = col("vec_id") < 8 || col("vec_id") >= 100L
-    // recompute the law from the fixed-radius results: stop at the first
-    // radius whose top-k holds ≥ k rows AND whose kth cosine clears that
-    // radius's bar; the cap emits regardless
-    val byRadius = (0 to 2).map { r =>
-      r -> SimOps.annSrpMultiProbe(spark, dir, bits, bands, r, qp)
-        .collect()
-        .map(row => (row.getLong(0), row.getInt(1), row.getLong(2),
-          row.getDouble(3)))
-        .groupBy(_._1)
-    }.toMap
-    val qs = (0L until 8L) ++ (100L until 106L)
-    def lawRadii(floor: Double): Map[Long, Int] = {
-      val got = SimOps.annSrpAdaptive(spark, dir, bits, bands, k, qp,
-          recallFloor = floor).collect()
-        .map(row => (row.getLong(0), row.getInt(1), row.getLong(2),
-          row.getAs[Int]("probe_radius")))
-      val expected = qs.flatMap { q =>
-        val r = (0 to 2).find { r =>
-          val rows = byRadius(r).getOrElse(q, Array.empty)
-          rows.length >= k && rows.find(_._2 == k).exists(
-            _._4 >= SimOps.srpQualityBar(bits, bands, r, floor))
-        }.getOrElse(2)
-        byRadius(r).getOrElse(q, Array.empty[(Long, Int, Long, Double)])
-          .map { case (qq, rnk, nb, _) => (qq, rnk, nb, r) }
-      }.sortBy(t => (t._1, t._2))
-      assert(got.toSeq === expected, s"floor=$floor")
-      got.map(t => (t._1, t._4)).toMap
-    }
-    // DEFAULT floor (the production policy): every cluster member's
-    // top-5 is its 5 cluster-mates at ≈ 0.9999 ≫ τ₀ = 0.605 — satisfied
-    // at radius 0 (the dense regime still pays one bucket); the starved
-    // iid population escalates PAST radius 0 even where count-satisfied
-    // (no iid kth clears τ₀) — precisely the row the r15 count trigger
-    // got wrong. At bands = 1 the default τ₁ is −0.14, so count-filled
-    // radius-1 lists legitimately stop there.
-    val defRadii = lawRadii(SimOps.srpDefaultRecallFloor)
-    (100L until 106L).foreach(q => assert(defRadii(q) === 0, s"q=$q"))
-    (0L until 8L).foreach(q => assert(defRadii(q) >= 1, s"q=$q"))
-    // and at a strict floor (0.6 ⇒ τ₀ = 0.93, τ₁ = 0.51) iid noise can
-    // clear no bar: every iid query rides to the cap and emits what it
-    // has, while the cluster still stops at radius 0
-    val strict = lawRadii(0.6)
-    (100L until 106L).foreach(q => assert(strict(q) === 0, s"q=$q"))
-    (0L until 8L).foreach(q => assert(strict(q) === 2, s"q=$q"))
-    // and at least one capped query was COUNT-satisfied at radius 0 —
-    // the exact configuration where count-only law wrongly stopped
-    assert((0L until 8L).exists(q =>
-      byRadius(0).getOrElse(q, Array.empty).length >= k))
-  }
 
   test("lpaRounds: broadcast and shuffle dispatch forms emit identical " +
     "labels on random graphs (the dispatch may only change the plan)") {
@@ -136,6 +29,41 @@ class Round16OpsSpec extends SparkSpec {
       assert(labels(bcast = true) === labels(bcast = false),
         s"trial $trial")
     }
+    // planted cliques (LPASCALE_r16's contract at 4,000 nodes): 200
+    // cliques of 20 nodes, one bridge edge between neighbouring cliques.
+    // From round 2 on, 18-19 intra votes beat ≤ 2 bridge votes, so both
+    // forms must emit the min label of every clique, and modularity
+    // must score that partition the same through broadcast and shuffled
+    // label joins
+    val (nCliques, size) = (200L, 20L)
+    val intra = for {
+      c <- 0L until nCliques; i <- 0L until size; j <- (i + 1) until size
+    } yield (c * size + i, c * size + j)
+    val bridges = (0L until nCliques - 1).map(c => (c * size, (c + 1) * size))
+    val strong = (intra ++ bridges).toDF("a", "b")
+    val sym = strong.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(strong.select(col("b").as("u"), col("a").as("v")))
+    val nodes = (0L until nCliques * size).toDF("node")
+    val planted = (0L until nCliques * size).map(v => v -> v / size * size)
+      .toMap
+    val byForm = Seq(true, false).map { bcast =>
+      val lbl = GraphOps.lpaRounds(nodes, sym, rounds = 3,
+        broadcastLabels = bcast)
+      assert(lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        === planted, s"broadcastLabels=$bcast")
+      GraphOps.modularityOf(lbl, strong, broadcastLabels = bcast)
+    }
+    // Q from the exact per-community terms Σe_c/m − Σd_c²/(2m)²
+    val m = (intra.size + bridges.size).toDouble
+    def q(df: org.apache.spark.sql.DataFrame): Double = {
+      val r = df.agg(count(lit(1)), sum(col("e_c")),
+        sum(col("d_c") * col("d_c"))).collect()(0)
+      assert(r.getLong(0) === nCliques)
+      r.getLong(1) / m - r.getLong(2) / (4.0 * m * m)
+    }
+    val Seq(qBcast, qShuffle) = byForm.map(q)
+    assert(qBcast === qShuffle)
+    assert(qBcast > 0.9, s"planted-clique modularity $qBcast")
   }
 
   test("perplexityKnServed: byte-identical to the inline KN twin " +

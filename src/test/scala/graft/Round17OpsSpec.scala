@@ -160,43 +160,6 @@ class Round17OpsSpec extends SparkSpec {
       SimOps.annPqOnCb(spark, sf0001, encoded, cb8, topK = 50))))
   }
 
-  test("annSrpAdaptive skipAhead: every stop still emits its radius's " +
-    "multiprobe rows verbatim, and parking only removes mid-ladder " +
-    "stops") {
-    val bits = SimOps.srpBitsPerBand(500)
-    val pred = col("vec_id") < 20
-    def byQuery(rows: Array[org.apache.spark.sql.Row])
-        : Map[Long, (Int, Seq[(Int, Long, Double)])] =
-      rows.groupBy(_.getLong(0)).map { case (q, rs) =>
-        val radii = rs.map(_.getInt(4)).distinct
-        assert(radii.length === 1, s"query $q stopped at radii $radii")
-        q -> (radii.head,
-          rs.map(r => (r.getInt(1), r.getLong(2), r.getDouble(3)))
-            .sortBy(_._1).toSeq)
-      }
-    val base = byQuery(SimOps.annSrpAdaptive(spark, sf0001, bits,
-      SimOps.srpBands, 5, pred).collect())
-    val skip = byQuery(SimOps.annSrpAdaptive(spark, sf0001, bits,
-      SimOps.srpBands, 5, pred, skipAhead = true).collect())
-    assert(base.keySet === skip.keySet)
-    // every stop (both runs) reproduces the fixed multiprobe at its
-    // reported radius, query for query
-    val fixedAt = (0 to 2).map { r =>
-      r -> SimOps.annSrpMultiProbe(spark, sf0001, bits, SimOps.srpBands,
-        r, pred).collect()
-        .groupBy(_.getLong(0)).view.mapValues(
-          _.map(x => (x.getInt(1), x.getLong(2), x.getDouble(3)))
-            .sortBy(_._1).toSeq).toMap
-    }.toMap
-    for (run <- Seq(base, skip); (q, (r, rows)) <- run)
-      assert(rows === fixedAt(r)(q), s"query $q at radius $r")
-    // parking can only REMOVE mid-ladder stops (0 < r < cap): a query
-    // that parks re-emerges at the cap; ladder stops are a subset
-    def mids(run: Map[Long, (Int, Seq[(Int, Long, Double)])]) =
-      run.collect { case (q, (r, _)) if r > 0 && r < 2 => q }.toSet
-    assert(mids(skip).subsetOf(mids(base)))
-  }
-
   test("lpa dispatch bar: the broadcast payload of a bar-sized label " +
     "frame is measured, giving the 1M constant a stated basis") {
     // Build the EXACT frame shape lpaRounds broadcasts per round — a
