@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Lineage truncation for ITERATIVE operators (connected components, BPE
   * training, pagerank, staged pipelines): each round must cut the
@@ -21,10 +22,16 @@ import org.apache.spark.sql.DataFrame
   */
 object Checkpoints {
   /** One task's worth of input: the ~8 MB per task that [[sizeTuned]]
-    * coalesces pins to, and the size below which
-    * `DeliverySemantics.upsert` merges in a single partition.
+    * coalesces pins to, and the [[fitsOneTask]] bar below which
+    * `DeliverySemantics.upsert` merges and `graft.plans.OneTaskSort`
+    * sorts in a single partition.
     */
   val BytesPerTask: Long = 8L << 20
+
+  /** Whether `plan`'s size estimate (plan statistics, no job) is within
+    * one task's worth. */
+  def fitsOneTask(plan: LogicalPlan): Boolean =
+    plan.stats.sizeInBytes <= BytesPerTask
 
   /** Plan-evidence hook for [[graft.PlanDump]] (r18 verdict item:
     * checkpointed plans print only the post-materialization scan, so

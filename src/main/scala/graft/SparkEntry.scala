@@ -16,9 +16,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     IngestOps.exactlyOnceUpsert(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each builder
+    * first installs [[graft.plans.OneTaskSort]] on its session, so every
+    * caller (Verify, Bench, perfbench, the tests) runs the same plans.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.queries).toMap
+    modules.flatMap(_.queries).toMap.map { case (name, build) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        graft.plans.OneTaskSort.install(spark)
+        build(spark, dir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

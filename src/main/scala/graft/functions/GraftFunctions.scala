@@ -14,8 +14,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - as SQL names, for callers who write SQL or `call_function`. One
   *    list of (name, expression class, builder) feeds two binders
   *    that install the same set — the functions, the [[RewriteDotProduct]]
-  *    optimizer rule and the [[graft.plans.TopKPerGroupStrategy]] planner
-  *    strategy: [[GraftFunctions.register]] on an already-built session
+  *    and [[graft.plans.OneTaskSort]] optimizer rules and the
+  *    [[graft.plans.TopKPerGroupStrategy]] planner strategy:
+  *    [[GraftFunctions.register]] on an already-built session
   *    (idempotent), and [[GraftExtensions]] at session build via
   *    `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
@@ -110,8 +111,9 @@ object GraftFunctions {
         builder)
     }
 
-  /** Binds the SQL names, [[RewriteDotProduct]] and the top-k strategy on
-    * an already-built session. Idempotent (overwrites any prior binding).
+  /** Binds the SQL names, [[RewriteDotProduct]], the one-task sort and
+    * the top-k strategy on an already-built session. Idempotent
+    * (overwrites any prior binding).
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -122,6 +124,7 @@ object GraftFunctions {
     if (!spark.experimental.extraOptimizations.contains(RewriteDotProduct))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ RewriteDotProduct
+    graft.plans.OneTaskSort.install(spark)
     graft.plans.TopKPerGroup.install(spark)
   }
 }
@@ -132,6 +135,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.sqlFunctions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RewriteDotProduct)
+    ext.injectOptimizerRule(_ => graft.plans.OneTaskSort)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
   }
 }

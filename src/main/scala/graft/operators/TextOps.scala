@@ -1089,19 +1089,6 @@ object TextOps extends OpModule {
     (merges.result(), state)
   }
 
-  /** The doc-array state as the positional (doc_id, pos, tok) stream —
-    * the representation-equivalence bridge Round12OpsSpec compares
-    * against [[bpeLoopPlain]]'s output.
-    */
-  private[graft] def bpeArrayStream(
-      state: org.apache.spark.sql.Dataset[(Long, Array[String])])
-      : DataFrame =
-    state.toDF("doc_id", "toks")
-      .select(col("doc_id"),
-        posexplode(col("toks")).as(Seq("pos0", "tok")))
-      .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
-        col("tok"))
-
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     // dispatch directly (not through bpeLoop): training consumes only
     // the merge table, so the per-doc count pass the apply path cuts

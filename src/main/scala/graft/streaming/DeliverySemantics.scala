@@ -30,7 +30,7 @@ object DeliverySemantics {
     * Applying the same batch twice ≡ once, by construction.
     *
     * An input whose size estimate (plan statistics, no job) is within
-    * one task's worth ([[graft.Checkpoints.BytesPerTask]]) merges in a
+    * one task's worth ([[graft.Checkpoints.fitsOneTask]]) merges in a
     * single partition: that already satisfies the window's clustering,
     * so the plan has no Exchange. Below that size AQE would coalesce
     * the shuffle to one reducer anyway. Larger inputs shuffle by key.
@@ -52,8 +52,8 @@ object DeliverySemantics {
     val w = Window.partitionBy(col(key))
       .orderBy((col(ord).desc +: tiebreaks.toSeq): _*)
     val both = target.unionByName(batch)
-    val small = both.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      graft.Checkpoints.BytesPerTask
+    val small =
+      graft.Checkpoints.fitsOneTask(both.queryExecution.optimizedPlan)
     (if (small) both.coalesce(1) else both)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)

@@ -16,13 +16,24 @@ class Round12OpsSpec extends SparkSpec {
       .orderBy(col("doc_id"), col("pos"))
       .collect().map(_.toSeq.mkString("|")).toSeq
 
+  /** The doc-array state as the positional (doc_id, pos, tok) stream of
+    * [[TextOps.bpeLoopPlain]]'s output. */
+  private def bpeArrayStream(
+      state: org.apache.spark.sql.Dataset[(Long, Array[String])])
+      : org.apache.spark.sql.DataFrame =
+    state.toDF("doc_id", "toks")
+      .select(col("doc_id"),
+        posexplode(col("toks")).as(Seq("pos0", "tok")))
+      .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
+        col("tok"))
+
   test("doc-array BPE loop is bit-identical to the plain loop: " +
     "same merges (pair, order, count-at-selection), same final stream") {
     for (dir <- Seq(sf0001, sf001)) {
       val (mPlain, sPlain) = TextOps.bpeLoopPlain(spark, dir)
       val (mArr, stArr) = TextOps.bpeLoopArrays(spark, dir)
       assert(mArr === mPlain, s"merge table diverged at $dir")
-      assert(streamRows(TextOps.bpeArrayStream(stArr)) ===
+      assert(streamRows(bpeArrayStream(stArr)) ===
         streamRows(sPlain), s"final token stream diverged at $dir")
       stArr.unpersist()
     }

@@ -13,7 +13,7 @@ trait SparkSpec extends AnyFunSuite {
   def sf0001 = "/root/testdata/sf0.001"
 
   /** A child of the shared session with `GraftFunctions.register` applied
-    * (SQL names, dot-product rewrite, top-k strategy). */
+    * (SQL names, dot-product rewrite, one-task sort, top-k strategy). */
   def registeredSpark: SparkSession = SparkSpec.registered
 
   /** Execute and return the AQE FINAL plan string — collect() finalizes
@@ -23,6 +23,26 @@ trait SparkSpec extends AnyFunSuite {
   def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+  }
+
+  /** The Spark jobs `body` starts, counted by a listener on its job group. */
+  def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    n.get
   }
 }
 

@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.expressions.Window
@@ -90,25 +87,6 @@ class StreamingRestartSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.setLocalProperty(StreamExecution.QUERY_ID_KEY, id)
     try body finally sc.setLocalProperty(StreamExecution.QUERY_ID_KEY, null)
-  }
-
-  /** The Spark jobs `body` starts, counted by a listener. */
-  private def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    n.get
   }
 
   private val QueryId = "kill-point-query"
